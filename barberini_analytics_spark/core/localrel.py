@@ -26,6 +26,8 @@ to the frames these tables replace (the oracle hash covers schema).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -37,6 +39,9 @@ def _lit(v) -> str:
     if isinstance(v, int):
         return str(v)
     if isinstance(v, float):
+        if not math.isfinite(v):
+            # repr would render 'infD'/'nanD', which does not parse
+            raise ValueError(f"non-finite float literal {v!r}")
         # repr round-trips IEEE doubles; the D suffix forces DoubleType
         # (a bare decimal literal would parse as DECIMAL)
         return repr(v) + "D"
@@ -55,6 +60,11 @@ def values_df(spark: SparkSession, rows, schema_ddl: str) -> DataFrame:
     independent of literal inference rules.  ``rows`` is a sequence of
     tuples (or scalars for one-column tables) of
     str/int/float/bool/None/list values.
+
+    Raises ``ValueError`` for an empty ``rows`` (``VALUES`` needs at
+    least one row) and for non-finite floats (no literal form).  String
+    escaping assumes the default
+    ``spark.sql.parser.escapedStringLiterals=false``.
     """
     cols = [c.strip() for c in _split_top(schema_ddl)]
     parts = [c.split(None, 1) for c in cols]
@@ -66,6 +76,8 @@ def values_df(spark: SparkSession, rows, schema_ddl: str) -> DataFrame:
         if not isinstance(r, (list, tuple)):
             r = (r,)
         rendered.append("(" + ", ".join(_lit(v) for v in r) + ")")
+    if not rendered:
+        raise ValueError("values_df needs at least one row")
     return spark.sql(f"SELECT {sel} FROM VALUES {', '.join(rendered)}")
 
 

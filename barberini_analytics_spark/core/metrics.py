@@ -66,3 +66,32 @@ def cumulative_stage_metrics(spark: SparkSession) -> dict:
         out["executor_run_ms"] += s.executorRunTime()
         out["jvm_gc_ms"] += s.jvmGcTime()
     return out
+
+
+def compile_metrics(spark: SparkSession) -> dict:
+    """Cumulative compile work in the engine JVM since it started.
+
+    - ``jit_s``: HotSpot JIT compilation time, summed over the compiler
+      threads (``CompilationMXBean.getTotalCompilationTime``).  At
+      ``local[N]`` the driver JVM is the whole engine, so this is every
+      C1/C2 compile of generated and Spark code alike.
+    - ``janino_compiles``: generated classes Spark compiled with Janino
+      (the count of ``CodegenMetrics.METRIC_COMPILATION_TIME``; cache
+      hits are not compiles and do not count).
+    - ``janino_s``: their total compile time, from the
+      ``CodeGenerator.compileTime`` accumulator that the same compiles
+      feed — exact, where the histogram only keeps a decaying sample.
+
+    Take deltas around a window; the JIT share of the window's CPU is
+    ``jit_s`` over the process-tree CPU delta.  Three py4j calls — cheap,
+    but still read it outside timed windows.
+    """
+    jvm = spark.sparkContext._jvm
+    jit_ms = (jvm.java.lang.management.ManagementFactory
+              .getCompilationMXBean().getTotalCompilationTime())
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    return {"jit_s": jit_ms / 1e3,
+            "janino_compiles": int(hist.getCount()),
+            "janino_s": codegen.CodeGenerator.compileTime() / 1e9}

@@ -48,27 +48,34 @@ def append(df: DataFrame, path: str) -> None:
     df.write.mode("append").parquet(path)
 
 
-def _refresh_stats(spark: SparkSession, path: str) -> None:
+def _refresh_stats(spark: SparkSession, path: str) -> int:
     """Post-write statistics maintenance: warm the stats catalog's
     full-table summary for the path's new file set (parquet-footer
     read — zero scan).  The reference gets the equivalent from
     Postgres autovacuum/ANALYZE keeping ``pg_statistic`` fresh after
     writes; here the write is the one moment the new snapshot's
-    footers are guaranteed hot.  Never raises — statistics upkeep must
-    not fail a write."""
+    footers are guaranteed hot.
+
+    Returns the new snapshot's exact row count, taken from that
+    summary, so callers need no re-read.  Statistics upkeep must not
+    fail a write: if the refresh fails, the count falls back to a
+    ``count()`` of the table."""
     try:
         from .catalog import StatsCatalog
 
-        StatsCatalog.default().refresh_table(spark, path)
+        summary = StatsCatalog.default().refresh_table(spark, path)
+        if summary is not None:
+            return int(summary["rows"])
     except Exception:
         pass
+    return spark.read.parquet(path).count()
 
 
 def overwrite(df: DataFrame, path: str,
-              partition_cols: Sequence[str] | None = None,
-              refresh_stats: bool = True) -> None:
+              partition_cols: Sequence[str] | None = None) -> int:
     """K2 snapshot overwrite via staging swap (safe even if ``df`` reads
-    from ``path``: the plan is fully materialized into staging first)."""
+    from ``path``: the plan is fully materialized into staging first).
+    Returns the rows written."""
     staging = tempfile.mkdtemp(prefix="__staging_", dir=os.path.dirname(path) or ".")
     try:
         writer = df.write.mode("overwrite")
@@ -84,8 +91,7 @@ def overwrite(df: DataFrame, path: str,
     finally:
         if _exists(staging):
             shutil.rmtree(staging, ignore_errors=True)
-    if refresh_stats:
-        _refresh_stats(df.sparkSession, path)
+    return _refresh_stats(df.sparkSession, path)
 
 
 def _stored_pruned(spark: SparkSession, path: str, batch: DataFrame,
@@ -116,8 +122,9 @@ def _stored_pruned(spark: SparkSession, path: str, batch: DataFrame,
 
 def upsert_by_pk(spark: SparkSession, batch: DataFrame, path: str,
                  pk: Sequence[str],
-                 partition_cols: Sequence[str] | None = None) -> None:
-    """K1: insert-or-update-all-columns by primary key.
+                 partition_cols: Sequence[str] | None = None) -> int:
+    """K1: insert-or-update-all-columns by primary key.  Returns the
+    table's row count after the write.
 
     Batch rows win over stored rows on PK collision (``DO UPDATE SET`` all
     columns, database.py:150-157).  Within a batch, duplicates on the PK are
@@ -147,8 +154,7 @@ def upsert_by_pk(spark: SparkSession, batch: DataFrame, path: str,
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         writer.parquet(path)
-        _refresh_stats(spark, path)
-        return
+        return _refresh_stats(spark, path)
     if partition_cols:
         stored = _stored_pruned(spark, path, batch, partition_cols)
     else:
@@ -169,9 +175,8 @@ def upsert_by_pk(spark: SparkSession, batch: DataFrame, path: str,
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         (winners.write.mode("overwrite").partitionBy(*partition_cols)
          .parquet(path))
-        _refresh_stats(spark, path)
-    else:
-        overwrite(winners, path)
+        return _refresh_stats(spark, path)
+    return overwrite(winners, path)
 
 
 def materialize(df: DataFrame, path: str,

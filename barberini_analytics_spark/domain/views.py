@@ -461,8 +461,14 @@ def _mode_from_counts(counted: DataFrame, value_col: str,
     struct minimum IS that ordering's first row), as one
     partial-aggregatable hash aggregate instead of a shuffle-sort
     window (r14, guide §2.4 — same rewrite ``mode_per_group`` already
-    carries)."""
-    return counted.groupBy("customer_id").agg(
+    carries).
+
+    Groups whose ``__cnt`` is NULL (every summed quantity NULL) are
+    dropped first, as ``mode_per_group`` drops NULL values: a struct
+    minimum sorts a NULL field FIRST, so such a group would otherwise
+    win the mode over every counted one."""
+    return counted.filter(F.col("__cnt").isNotNull()).groupBy(
+        "customer_id").agg(
         F.min_by(
             F.col(value_col),
             F.struct((-F.col("__cnt")).alias("nc"),

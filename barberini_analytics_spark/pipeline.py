@@ -12,7 +12,7 @@ out per platform.  Luigi gives the reference its DAG and idempotence
 * every ingest lands via ``upsert_by_pk`` — re-running a day merges the
   same rows onto the same keys and the table is byte-identical;
 * every derived table (views, ABSA, topics, predictions) lands via
-  ``materialize`` (snapshot overwrite of a deterministic plan);
+  ``overwrite`` (snapshot of a deterministic plan);
 * nothing appends, so there is no run counter to dedupe.
 
 Stage order is the reference's dependency order: base tables first, the
@@ -31,7 +31,8 @@ production those builders are replaced by the real source parsers in
 ``ingest_queries`` registry entries); everything downstream is the real
 pipeline.
 
-Returned manifest: ``{table_name: rows_written}`` per run — the
+Returned manifest: ``{table_name: rows_written}`` per run, as the sinks
+count it after each write — the
 diagnostics summary (reference ``Diagnostics``) is itself written as a
 warehouse table keyed by (cadence, table), so it is upserted, not
 appended, and stays idempotent.
@@ -44,6 +45,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .core import sinks
+from .core.localrel import values_df
 from .domain import views as V
 from .operators.fuzzy import match_occurrences
 from .operators.text import tokenize
@@ -83,8 +85,7 @@ def _upsert_tables(spark: SparkSession, warehouse: str,
     written = {}
     for name, pk in pks.items():
         path = _table_path(warehouse, name)
-        sinks.upsert_by_pk(spark, tables[name], path, pk)
-        written[name] = spark.read.parquet(path).count()
+        written[name] = sinks.upsert_by_pk(spark, tables[name], path, pk)
     return written
 
 
@@ -123,8 +124,8 @@ def post_view_to_db(spark: SparkSession, warehouse: str) -> dict[str, int]:
     caches)."""
     t = _read_tables(spark, warehouse,
                      list(_SOCIAL_PKS) + list(_PERFORMANCE_PKS))
-    post = sinks.materialize(V.post(t), _table_path(warehouse, "post"))
-    return {"post": post.count()}
+    return {"post": sinks.overwrite(V.post(t),
+                                    _table_path(warehouse, "post"))}
 
 
 def absa_to_db(spark: SparkSession, warehouse: str) -> dict[str, int]:
@@ -136,13 +137,11 @@ def absa_to_db(spark: SparkSession, warehouse: str) -> dict[str, int]:
 
     post = spark.read.parquet(_table_path(warehouse, "post"))
     tokens = tokenize(post, ["source", "post_id"])
-    from .core.localrel import values_df
-
     aspects = values_df(spark, [(w,) for w in ASPECT_WORDS],
                         "matched string")
     matched = match_occurrences(tokens, aspects, "equality",
                                 id_cols=("source", "post_id"))
-    sinks.materialize(
+    n_aspect = sinks.overwrite(
         matched.select("source", "post_id", "word_index", "word",
                        "matched"),
         _table_path(warehouse, "post_aspect"))
@@ -156,14 +155,10 @@ def absa_to_db(spark: SparkSession, warehouse: str) -> dict[str, int]:
              .alias("sentiment"),
              F.count(F.lit(1)).alias("n_polarity_words"))
     )
-    sinks.materialize(sentiment, _table_path(warehouse, "post_sentiment"))
     return {
-        "post_aspect":
-            spark.read.parquet(_table_path(warehouse, "post_aspect"))
-            .count(),
-        "post_sentiment":
-            spark.read.parquet(_table_path(warehouse, "post_sentiment"))
-            .count(),
+        "post_aspect": n_aspect,
+        "post_sentiment": sinks.overwrite(
+            sentiment, _table_path(warehouse, "post_sentiment")),
     }
 
 
@@ -186,10 +181,8 @@ def topics_to_db(spark: SparkSession, warehouse: str) -> dict[str, int]:
                      F.col("__doc_id").alias("doc_id"))
         .join(fit, "doc_id")
         .select("source", "post_id", "topic"))
-    sinks.materialize(assignment, _table_path(warehouse, "post_topic"))
-    return {"post_topic":
-            spark.read.parquet(_table_path(warehouse, "post_topic"))
-            .count()}
+    return {"post_topic": sinks.overwrite(
+        assignment, _table_path(warehouse, "post_topic"))}
 
 
 def predictions_to_db(spark: SparkSession, sf_dir: str,
@@ -199,18 +192,18 @@ def predictions_to_db(spark: SparkSession, sf_dir: str,
     from .plans.ml_queries import visitor_prediction_forecast
 
     forecast = visitor_prediction_forecast(spark, sf_dir)
-    sinks.materialize(forecast, _table_path(warehouse, "visitor_prediction"))
-    return {"visitor_prediction":
-            spark.read.parquet(_table_path(warehouse, "visitor_prediction"))
-            .count()}
+    return {"visitor_prediction": sinks.overwrite(
+        forecast, _table_path(warehouse, "visitor_prediction"))}
 
 
 def diagnostics_to_db(spark: SparkSession, warehouse: str, cadence: str,
                       written: dict[str, int]) -> None:
     """``Diagnostics``: the run summary as an upserted warehouse table
     (keyed by cadence+table — re-runs update in place, never append)."""
-    rows = [(cadence, name, int(n)) for name, n in sorted(written.items())]
-    summary = spark.createDataFrame(rows, ["cadence", "table_name", "rows"])
+    # a VALUES LocalRelation: no python-runner job, content-stable plan
+    summary = values_df(
+        spark, [(cadence, name, int(n)) for name, n in sorted(written.items())],
+        "cadence string, table_name string, rows bigint")
     sinks.upsert_by_pk(spark, summary,
                        _table_path(warehouse, "pipeline_diagnostics"),
                        ["cadence", "table_name"])

@@ -18,6 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from barberini_analytics_spark.core.metrics import compile_metrics  # noqa: E402
 from barberini_analytics_spark.core.session import get_spark  # noqa: E402
 from barberini_analytics_spark.plans import QUERIES  # noqa: E402
 
@@ -188,6 +189,10 @@ def main() -> None:
         })
         return wall
 
+    # compile work around the whole sweep (base + repeats + regression
+    # reruns): the JIT share of the sweep's CPU is read from the artifact
+    compile_0 = compile_metrics(spark)
+    sweep_cpu_0 = proc_tree_cpu_seconds()
     timings: dict[str, float] = {}
     for name in sorted(QUERIES):
         timings[name] = run_once(name)
@@ -245,6 +250,16 @@ def main() -> None:
         while (len(measurements[name]) < 3
                and elapsed() < regress_deadline):
             timings[name] = min(timings[name], run_once(name))
+    compile_1 = compile_metrics(spark)
+    sweep_cpu = proc_tree_cpu_seconds() - sweep_cpu_0
+    sweep_compile = {k: round(compile_1[k] - compile_0[k], 3)
+                     for k in compile_0}
+    compile_record = {
+        "sweep": sweep_compile,
+        "sweep_cpu_sec": round(sweep_cpu, 2),
+        "jit_share": round(sweep_compile["jit_s"] / max(sweep_cpu, 1e-9),
+                           3),
+    }
     regressions = []
     for name in flagged:
         if timings[name] <= 1.5 * prior[name]:
@@ -334,6 +349,8 @@ def main() -> None:
         "ambient_load_start": round(ambient_start, 2),
         "ambient_wait_sec": round(ambient_wait, 1),
         "cold_start": cold_start,
+        # JIT (HotSpot) and Janino (generated classes) compile seconds
+        "compile": compile_record,
         "loadavg": load_samples,
         # every individual run: wall, process-tree CPU delta, 1-min load
         "measurements": measurements,

@@ -9,8 +9,8 @@ curve's convention) and keep text/payloads identical — which deliberately
 DENSIFIES the duplicate structure: at 10 copies every document content has
 10 exact near-duplicates, so the verified-pair graph crosses the 200k-pair
 small-graph gate and the distributed closure path must run (the flip this
-sweep exists to confirm).  Dimension tables (nation/region/part/supplier)
-are copied once.
+sweep exists to confirm).  Every other table in the source directory
+(the dimension tables: nation/region/part/supplier) is copied once.
 
 Usage:
   python scripts/scale_sweep.py build <copies> <outdir>
@@ -41,7 +41,6 @@ SHIFTED: dict[str, list[str]] = {
     "lineitem": ["l_orderkey"],
     "customer": ["c_custkey"],
 }
-ONCE = ["nation", "region", "part", "supplier"]
 
 
 def build(copies: int, outdir: str) -> None:
@@ -49,7 +48,9 @@ def build(copies: int, outdir: str) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     src = "/root/testdata/sf0.1"
     os.makedirs(outdir, exist_ok=True)
-    for t in ONCE:
+    tables = sorted(n[:-len(".parquet")] for n in os.listdir(src)
+                    if n.endswith(".parquet"))
+    for t in (t for t in tables if t not in SHIFTED):
         spark.read.parquet(f"{src}/{t}.parquet").coalesce(1) \
             .write.mode("overwrite").parquet(f"{outdir}/{t}.parquet")
         print(f"{t}: copied once")
@@ -100,7 +101,10 @@ def run(sf_dir: str, names: list[str]) -> None:
 
 
 if __name__ == "__main__":
-    if sys.argv[1] == "build":
-        build(int(sys.argv[2]), sys.argv[3])
+    argv = sys.argv[1:]
+    if len(argv) == 3 and argv[0] == "build" and argv[1].isdigit():
+        build(int(argv[1]), argv[2])
+    elif len(argv) >= 2 and argv[0] == "run":
+        run(argv[1], argv[2:])
     else:
-        run(sys.argv[2], sys.argv[3:])
+        sys.exit(__doc__[__doc__.index("Usage:"):])

@@ -470,3 +470,20 @@ def test_check_constraints_capacity(spark):
         "gomus_capacity")
     bad = SC.check_constraints(df, "gomus_capacity").collect()
     assert [r.quota_id for r in bad] == [2]
+
+
+def test_mode_from_counts_ignores_all_null_quantity_groups(spark):
+    """A (customer, ticket) group whose quantities are all NULL sums to a
+    NULL ``__cnt``; it must neither win the mode over a counted ticket
+    (a struct minimum sorts NULL first) nor stand in as one."""
+    from pyspark.sql import functions as F
+
+    items = spark.createDataFrame(
+        [(1, "A", None), (1, "A", None), (1, "B", 1),   # NULL group loses
+         (2, "C", None),                                  # no counted ticket
+         (3, "E", 2), (3, "D", 2)],                       # tie → smallest
+        "customer_id long, ticket string, quantity long")
+    counted = items.groupBy("customer_id", "ticket").agg(
+        F.sum("quantity").alias("__cnt"))
+    got = V._mode_from_counts(counted, "ticket", "most_common_ticket")
+    assert sorted(map(tuple, got.collect())) == [(1, "B"), (3, "D")]

@@ -39,6 +39,9 @@ def test_fill_db_both_cadences_twice_is_idempotent(spark, tmp_path):
     first = fill_db(spark, SF_DIR, wh)
     assert first and all(n > 0 for n in first.values()), first
     state_1 = _table_state(spark, wh)
+    # the manifest's counts come from the sinks' post-write footer reads;
+    # they must be the tables' real row counts
+    assert first == {n: state_1[n][0] for n in first}
 
     # second full run: hourly + daily again, same inputs
     second = fill_db(spark, SF_DIR, wh)

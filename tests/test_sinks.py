@@ -21,9 +21,9 @@ def _rows(spark, path):
 
 def test_upsert_creates_then_updates(spark, tbl):
     base = spark.createDataFrame([(1, "a", 10), (2, "b", 20)], ["id", "name", "v"])
-    K.upsert_by_pk(spark, base, tbl, ["id"])
+    assert K.upsert_by_pk(spark, base, tbl, ["id"]) == 2
     batch = spark.createDataFrame([(2, "B", 99), (3, "c", 30)], ["id", "name", "v"])
-    K.upsert_by_pk(spark, batch, tbl, ["id"])
+    assert K.upsert_by_pk(spark, batch, tbl, ["id"]) == 3
     assert _rows(spark, tbl) == {(1, "a", 10), (2, "B", 99), (3, "c", 30)}
 
 
@@ -46,13 +46,28 @@ def test_overwrite_reading_from_target(spark, tbl):
     assert _rows(spark, tbl) == {(1, 2), (2, 4)}
 
 
+def test_overwrite_counts_rows_without_stats_refresh(spark, tbl,
+                                                     monkeypatch):
+    """The row count comes from the stats refresh's footer read; when the
+    refresh yields nothing, the sink counts the written table instead."""
+    from barberini_analytics_spark.core.catalog import StatsCatalog
+
+    df = spark.range(7).withColumnRenamed("id", "v")
+    assert K.overwrite(df, tbl) == 7
+    monkeypatch.setattr(StatsCatalog, "refresh_table",
+                        lambda self, spark, path: None)
+    assert K.overwrite(df.filter("v < 5"), tbl) == 5
+
+
 def test_partitioned_upsert_leaves_other_partitions(spark, tbl):
     base = spark.createDataFrame(
         [("2024-01-01", 1, 10), ("2024-01-02", 2, 20)], ["day", "id", "v"]
     )
     K.upsert_by_pk(spark, base, tbl, ["id"], partition_cols=["day"])
     batch = spark.createDataFrame([("2024-01-02", 2, 99)], ["day", "id", "v"])
-    K.upsert_by_pk(spark, batch, tbl, ["id"], partition_cols=["day"])
+    # the count covers the untouched partition too
+    assert K.upsert_by_pk(spark, batch, tbl, ["id"],
+                          partition_cols=["day"]) == 2
     # partition-column type inference reads `day` back as DateType
     got = {(str(r.day), r.id, r.v) for r in spark.read.parquet(tbl).collect()}
     assert got == {("2024-01-01", 1, 10), ("2024-01-02", 2, 99)}
