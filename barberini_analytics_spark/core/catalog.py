@@ -47,6 +47,7 @@ import json
 import math
 import os
 import tempfile
+import threading
 
 from pyspark.sql import DataFrame
 
@@ -271,6 +272,9 @@ def footer_stats(files: list[str],
 # ---------------------------------------------------------------------------
 
 _DEFAULT: "StatsCatalog | None" = None
+#: guards the lazy init of ``_DEFAULT``: concurrent sink threads reach
+#: ``default()`` together on a process's first write
+_DEFAULT_LOCK = threading.Lock()
 
 
 def _default_root() -> str:
@@ -312,14 +316,18 @@ class StatsCatalog:
     def default(cls) -> "StatsCatalog":
         global _DEFAULT
         if _DEFAULT is None:
-            _DEFAULT = cls()
-            try:
-                # once per process: drop entries whose tables were
-                # deleted, re-enforce the LRU cap (≤ max_entries JSON
-                # reads — bounded, and off the per-query path)
-                _DEFAULT.sweep()
-            except Exception:
-                pass
+            with _DEFAULT_LOCK:
+                if _DEFAULT is None:
+                    cat = cls()
+                    try:
+                        # once per process: drop entries whose tables
+                        # were deleted, re-enforce the LRU cap
+                        # (≤ max_entries JSON reads — bounded, and off
+                        # the per-query path)
+                        cat.sweep()
+                    except Exception:
+                        pass
+                    _DEFAULT = cat
         return _DEFAULT
 
     # -- store plumbing ----------------------------------------------------

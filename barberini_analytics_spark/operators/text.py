@@ -195,6 +195,14 @@ def language_id(df: DataFrame, text_col: str = "text",
     return df.withColumn(out_col, best["lang"]).drop("__tokens")
 
 
+#: version of :func:`ngram_lm_score`'s driver-folded model (the trigram
+#: coding, smoothing and fold).  The model is an RDD-backed leaf whose
+#: plan string does not show its content, so callers that size it from
+#: the stats catalog salt the key with this; bump it on any change to
+#: how the model is derived.
+NGRAM_LM_VERSION = "ngram-lm-1"
+
+
 def ngram_lm_score(df: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text", add_k: float = 1.0,
                    out_col: str = "lm_score") -> DataFrame:

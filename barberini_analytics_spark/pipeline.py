@@ -23,9 +23,25 @@ composition stays a restartable DAG rather than one giant plan — at
 100 TB that is also what bounds lineage and lets the scheduler place
 each stage independently.
 
+Concurrency: the reference runs its DAG on three Luigi worker processes
+(``make luigi`` → ``--workers 3``), so independent tasks overlap.  Here
+the independent units are the table writes inside one ingest stage
+(:func:`_upsert_tables`): one thread per table — 3 in the hourly
+cadence, 8 in :func:`posts_to_db`, 5 in :func:`gomus_to_db` — each its
+own upsert onto its own path, sharing no input or output.  Their jobs
+are mostly driver-side planning and job latency on a few hundred rows,
+so they overlap on otherwise idle cores.  The STAGES stay sequential:
+the view stack and the analysis tables read what earlier stages wrote,
+and the stages that could overlap (posts ‖ gomus ‖ predictions,
+ABSA ‖ topics) share process-global state — ``core.cache`` scoped
+persists are released by mark for the whole process, and the topic
+model's driver-side GSDMM fit holds the GIL.  Stage-level concurrency
+is the follow-up and needs per-thread cache scopes first.
+
 The ingest layer maps the synthetic corpus onto the reference's base
 tables with the same deterministic fixture the oracle-checked
-``domain_queries`` use (``_social_tables`` / ``_gomus_tables``) — in
+``domain_queries`` use (``_social_tables`` / ``_gomus_tables``; the
+hourly cadence builds only ``_performance_tables``) — in
 production those builders are replaced by the real source parsers in
 ``sources/`` (the parsing itself is oracle-checked via the
 ``ingest_queries`` registry entries); everything downstream is the real
@@ -41,8 +57,10 @@ appended, and stays idempotent.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from .core import sinks
 from .core.localrel import values_df
@@ -82,11 +100,29 @@ def _table_path(warehouse: str, name: str) -> str:
 def _upsert_tables(spark: SparkSession, warehouse: str,
                    tables: dict[str, DataFrame],
                    pks: dict[str, list[str]]) -> dict[str, int]:
-    written = {}
-    for name, pk in pks.items():
-        path = _table_path(warehouse, name)
-        written[name] = sinks.upsert_by_pk(spark, tables[name], path, pk)
-    return written
+    """Upsert every table of ``pks`` concurrently, one thread per table,
+    and return ``{table: rows}`` in ``pks`` order.
+
+    Each worker is wrapped by ``inheritable_thread_target(spark)`` so
+    the caller's job group, local properties and session tags reach
+    its jobs (a plain thread starts with none of them).  The wrap is
+    per table because it snapshots the properties into one object that
+    the thread then mutates (the SQL execution id), so sharing one
+    snapshot across threads would mix their executions.
+
+    Failure: every table runs to completion or failure, then the first
+    failure in ``pks`` order is raised.  Each upsert is an atomic
+    staging swap, so a failed table keeps its previous snapshot, the
+    caller writes no diagnostics row, and a re-run is idempotent."""
+    def upsert(name: str) -> int:
+        return sinks.upsert_by_pk(spark, tables[name],
+                                  _table_path(warehouse, name), pks[name])
+
+    with ThreadPoolExecutor(len(pks)) as pool:
+        futures = {name: pool.submit(inheritable_thread_target(spark)(upsert),
+                                     name)
+                   for name in pks}
+    return {name: f.result() for name, f in futures.items()}
 
 
 def _read_tables(spark: SparkSession, warehouse: str,
@@ -232,9 +268,9 @@ def fill_db_hourly(spark: SparkSession, sf_dir: str,
                    warehouse: str) -> dict[str, int]:
     """``FillDbHourly``: post-performance snapshots only
     (``PostPerformanceToDb``, src/_posts.py:39-47)."""
-    from .plans.domain_queries import _social_tables
+    from .plans.domain_queries import _performance_tables
 
-    tables = _social_tables(spark, sf_dir)
+    tables = _performance_tables(spark, sf_dir)
     written = _upsert_tables(spark, warehouse, tables, _PERFORMANCE_PKS)
     diagnostics_to_db(spark, warehouse, "hourly", written)
     return written

@@ -26,10 +26,40 @@ from .registry import query
 _T0 = 1_704_067_200
 
 
-def _social_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Deterministic base-table fixture derived from documents + events."""
-    docs = load_table(spark, sf_dir, "documents")
+def _performance_tables(spark: SparkSession,
+                       sf_dir: str) -> dict[str, DataFrame]:
+    """The three ``*_performance`` snapshot tables, derived from
+    ``events`` only — all that the hourly cadence writes."""
     events = load_table(spark, sf_dir, "events")
+    return {
+        "fb_post_performance": events.filter("event_type = 'view'")
+        .selectExpr(
+            "'pg' AS page_id",
+            "CAST((event_id % 100) * 5 AS STRING) AS post_id",
+            "ts AS timestamp", "CAST(floor(value) AS INT) AS likes",
+            "CAST(event_id % 5 AS INT) AS shares",
+            "CAST(event_id % 7 AS INT) AS comments"),
+        "ig_post_performance": events.filter("event_type = 'signup'")
+        .selectExpr(
+            "CAST((event_id % 100) * 5 + 3 AS STRING) AS ig_post_id",
+            "ts AS timestamp", "CAST(floor(value) AS INT) AS impressions",
+            "CAST(event_id % 100 AS INT) AS reach",
+            "CAST(event_id % 10 AS INT) AS engagement",
+            "CAST(event_id % 3 AS INT) AS saved",
+            "CAST(event_id % 9 AS INT) AS video_views"),
+        "tweet_performance": events.filter("event_type = 'click'")
+        .selectExpr(
+            "CAST((event_id % 100) * 5 + 2 AS STRING) AS tweet_id",
+            "ts AS timestamp", "CAST(floor(value) AS INT) AS likes",
+            "CAST(event_id % 4 AS INT) AS retweets",
+            "CAST(event_id % 6 AS INT) AS replies"),
+    }
+
+
+def _social_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Deterministic base-table fixture derived from documents + events:
+    the post and review tables plus :func:`_performance_tables`."""
+    docs = load_table(spark, sf_dir, "documents")
     pd = f"timestamp_micros(({_T0} + doc_id * 3600) * 1000000)"
     return {
         "fb_post": docs.filter("doc_id % 5 = 0").selectExpr(
@@ -42,13 +72,6 @@ def _social_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             "doc_id % 2 = 0 AS is_from_museum",
             "CASE WHEN doc_id % 3 = 0 THEN CAST(doc_id - 5 AS STRING) END"
             " AS response_to"),
-        "fb_post_performance": events.filter("event_type = 'view'")
-        .selectExpr(
-            "'pg' AS page_id",
-            "CAST((event_id % 100) * 5 AS STRING) AS post_id",
-            "ts AS timestamp", "CAST(floor(value) AS INT) AS likes",
-            "CAST(event_id % 5 AS INT) AS shares",
-            "CAST(event_id % 7 AS INT) AS comments"),
         "ig_post": docs.filter("doc_id % 5 = 3").selectExpr(
             "CAST(doc_id AS STRING) AS ig_post_id", "text",
             f"{pd} AS post_date",
@@ -59,26 +82,12 @@ def _social_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             "'https://www.instagram.com/p/' || CAST(doc_id AS STRING)"
             " || '/' AS permalink",
             "CAST(NULL AS STRING) AS thumbnail_uri"),
-        "ig_post_performance": events.filter("event_type = 'signup'")
-        .selectExpr(
-            "CAST((event_id % 100) * 5 + 3 AS STRING) AS ig_post_id",
-            "ts AS timestamp", "CAST(floor(value) AS INT) AS impressions",
-            "CAST(event_id % 100 AS INT) AS reach",
-            "CAST(event_id % 10 AS INT) AS engagement",
-            "CAST(event_id % 3 AS INT) AS saved",
-            "CAST(event_id % 9 AS INT) AS video_views"),
         "tweet": docs.filter("doc_id % 5 = 2").selectExpr(
             "CAST(doc_id % 30 AS STRING) AS user_id",
             "CAST(doc_id AS STRING) AS tweet_id", "text",
             "CASE WHEN doc_id % 10 = 7 THEN CAST(doc_id - 5 AS STRING) END"
             " AS response_to",
             f"{pd} AS post_date"),
-        "tweet_performance": events.filter("event_type = 'click'")
-        .selectExpr(
-            "CAST((event_id % 100) * 5 + 2 AS STRING) AS tweet_id",
-            "ts AS timestamp", "CAST(floor(value) AS INT) AS likes",
-            "CAST(event_id % 4 AS INT) AS retweets",
-            "CAST(event_id % 6 AS INT) AS replies"),
         "tweet_author": spark.range(0, 20).selectExpr(
             "CAST(id AS STRING) AS user_id",
             "'u' || CAST(id AS STRING) AS user_name",
@@ -110,6 +119,7 @@ def _social_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             "ELSE 'other' END AS place_id",
             "'https://maps.google.com/maps?cid=' || CAST(doc_id AS STRING)"
             " AS permalink"),
+        **_performance_tables(spark, sf_dir),
     }
 
 

@@ -391,6 +391,74 @@ def test_catalog_put_merges_with_concurrent_writer(spark, catalog):
     assert entry2["hll"]["y"] == {"0": 2}
 
 
+def test_default_catalog_is_built_and_swept_once_under_threads(
+        tmp_path, monkeypatch):
+    """Concurrent sink threads can reach ``StatsCatalog.default()``
+    together on a process's first write: they must share ONE instance
+    and sweep the store once."""
+    import threading
+    import time
+
+    import barberini_analytics_spark.core.catalog as C
+
+    monkeypatch.setenv("BA_STATS_CATALOG", str(tmp_path / "cat"))
+    monkeypatch.setattr(C, "_DEFAULT", None)
+    sweeps = []
+    real_init = C.StatsCatalog.__init__
+
+    def slow_init(self, *args, **kwargs):
+        real_init(self, *args, **kwargs)
+        time.sleep(0.05)  # widen the check-then-set window
+
+    monkeypatch.setattr(C.StatsCatalog, "__init__", slow_init)
+    monkeypatch.setattr(C.StatsCatalog, "sweep",
+                        lambda self: sweeps.append(self))
+    start = threading.Barrier(8, timeout=30)
+    got = []
+
+    def call():
+        start.wait()
+        got.append(C.StatsCatalog.default())
+
+    threads = [threading.Thread(target=call) for _ in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=30)
+        assert not t.is_alive()
+    assert len(got) == 8
+    assert len({id(c) for c in got}) == 1
+    assert len(sweeps) == 1 and sweeps[0] is got[0]
+
+
+def test_measured_hint_content_stable_assertion_is_versioned(spark,
+                                                             catalog):
+    """``assume_content_stable`` names the version of the code behind an
+    RDD-backed leaf: the same version hits the catalog, a bumped version
+    misses and re-measures, and a bare ``True`` is rejected."""
+    from barberini_analytics_spark.core.cache import release_scoped
+    from barberini_analytics_spark.core.stats import measured_hint
+
+    small = spark.range(100).selectExpr("id % 5 AS g") \
+        .localCheckpoint(eager=True)
+
+    def side():
+        return small.groupBy("g").count()
+
+    _, ev1 = measured_hint(side(), catalog=catalog,
+                           assume_content_stable="model-1")
+    _, ev2 = measured_hint(side(), catalog=catalog,
+                           assume_content_stable="model-1")
+    _, ev3 = measured_hint(side(), catalog=catalog,
+                           assume_content_stable="model-2")
+    assert ev1["source"] == "measured"
+    assert ev2["source"] == "catalog"
+    assert ev3["source"] == "measured"
+    with pytest.raises(TypeError, match="version string"):
+        measured_hint(side(), catalog=catalog, assume_content_stable=True)
+    release_scoped()
+
+
 def test_catalog_sweep_drops_deleted_tables_and_respects_cap(spark,
                                                              tmp_path):
     """Judge r12 item 7: entries whose input files vanished are garbage

@@ -10,11 +10,13 @@ leaves every warehouse table value-identical).
 from __future__ import annotations
 
 import os
+import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from barberini_analytics_spark.pipeline import (
-    fill_db, fill_db_daily, fill_db_hourly)
+    _PERFORMANCE_PKS, fill_db, fill_db_daily, fill_db_hourly)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -87,6 +89,59 @@ def test_fill_db_both_cadences_twice_is_idempotent(spark, tmp_path):
             .filter("count <> 1").count()) == 0
     assert {r.cadence for r in diag.select("cadence").distinct().collect()} \
         == {"daily", "hourly"}
+
+
+def _last_job_id(sc, group: str) -> int:
+    """Run a one-task marker job in ``group`` and return its job id."""
+    sc.setJobGroup(group, "job-id marker")
+    sc.parallelize([0], 1).count()
+    # job starts reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fill_db_hourly_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """The concurrent table writers run on their own threads; every job
+    they start must still carry the caller's job group (a plain thread
+    starts with no local properties, so its jobs would be ungrouped)."""
+    sc = spark.sparkContext
+    tag = f"fill-db-test-{uuid.uuid4().hex[:8]}"
+    try:
+        first = _last_job_id(sc, f"{tag}-before")
+        sc.setJobGroup(tag, "fill_db_hourly under a job group")
+        written = fill_db_hourly(spark, SF_DIR, str(tmp_path / "wh"))
+        last = _last_job_id(sc, f"{tag}-after")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(written) == list(_PERFORMANCE_PKS)
+    started = set(range(first + 1, last))
+    grouped = set(sc.statusTracker().getJobIdsForGroup(tag))
+    assert started, "fill_db_hourly started no job"
+    assert started == grouped, sorted(started - grouped)
+
+
+def test_fill_db_hourly_table_failure_propagates(spark, tmp_path,
+                                                 monkeypatch):
+    """One failing table write fails the cadence after the others
+    finish, and no diagnostics row claims the run succeeded."""
+    from barberini_analytics_spark.core import sinks
+
+    real = sinks.upsert_by_pk
+    wh = str(tmp_path / "wh")
+
+    def flaky(spark, batch, path, pk, *args, **kwargs):
+        if os.path.basename(path) == "ig_post_performance":
+            raise RuntimeError("injected write failure")
+        return real(spark, batch, path, pk, *args, **kwargs)
+
+    monkeypatch.setattr(sinks, "upsert_by_pk", flaky)
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        fill_db_hourly(spark, SF_DIR, wh)
+    assert not os.path.exists(os.path.join(wh, "pipeline_diagnostics"))
+    # the sibling tables ran to completion
+    assert os.path.exists(os.path.join(wh, "fb_post_performance"))
+    assert os.path.exists(os.path.join(wh, "tweet_performance"))
+    assert not os.path.exists(os.path.join(wh, "ig_post_performance"))
 
 
 def test_curate_to_shards_end_to_end(spark, sf_dir, tmp_path):
