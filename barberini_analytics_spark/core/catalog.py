@@ -291,6 +291,16 @@ def _default_root() -> str:
     return os.path.join(tempfile.gettempdir(), f"ba_stats_catalog_u{user}")
 
 
+def default_entry_count() -> int:
+    """Entries in the default store right now: its on-disk warmth, which
+    changes what a run measures (hint probes skipped, plans served)."""
+    root = os.environ.get("BA_STATS_CATALOG") or _default_root()
+    try:
+        return sum(1 for n in os.listdir(root) if n.endswith(".json"))
+    except OSError:
+        return 0
+
+
 class StatsCatalog:
     """Tiny JSON-file statistics store keyed by content fingerprint.
 

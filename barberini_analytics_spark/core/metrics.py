@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from barberini_analytics_spark.core import cds
+
 
 def cumulative_shuffle_bytes(spark: SparkSession) -> int:
     """Total shuffle-WRITE bytes across every stage the application has
@@ -95,3 +97,30 @@ def compile_metrics(spark: SparkSession) -> dict:
     return {"jit_s": jit_ms / 1e3,
             "janino_compiles": int(hist.getCount()),
             "janino_s": codegen.CodeGenerator.compileTime() / 1e9}
+
+
+def class_sharing(spark: SparkSession) -> dict:
+    """The engine JVM's class-data-sharing state (``core/cds``).
+
+    - ``state``: what ``get_spark`` decided when it launched this JVM
+      (``mapped`` / ``recording`` / ``building`` / ``off:<reason>``), or
+      ``off:not-launched-here`` when another caller started it.
+    - ``mapped``: whether the JVM actually runs from the archive — it
+      drops a truncated or mismatched one silently, so ``mapped`` state
+      with ``mapped: false`` means the archive was refused.
+    - ``classes_loaded``: classes the JVM has loaded since it started
+      (``ClassLoadingMXBean``); mapped classes count as loaded.
+
+    A run's JVM warmth changes its start-up time the way catalog warmth
+    changes its plans: stamp both next to each other.
+    """
+    jvm = spark.sparkContext._jvm
+    mf = jvm.java.lang.management.ManagementFactory
+    diag = mf.getPlatformMXBean(jvm.java.lang.Class.forName(
+        "com.sun.management.HotSpotDiagnosticMXBean"))
+    mapped = (diag.getVMOption("UseSharedSpaces").getValue() == "true"
+              and diag.getVMOption("SharedArchiveFile").getValue() != "")
+    return {"state": cds.LAST.state if cds.LAST else "off:not-launched-here",
+            "mapped": mapped,
+            "classes_loaded": int(mf.getClassLoadingMXBean()
+                                  .getTotalLoadedClassCount())}

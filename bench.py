@@ -18,7 +18,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from barberini_analytics_spark.core.metrics import compile_metrics  # noqa: E402
+from barberini_analytics_spark.core.catalog import (  # noqa: E402
+    default_entry_count)
+from barberini_analytics_spark.core.metrics import (  # noqa: E402
+    class_sharing, compile_metrics)
 from barberini_analytics_spark.core.session import get_spark  # noqa: E402
 from barberini_analytics_spark.plans import QUERIES  # noqa: E402
 
@@ -126,6 +129,10 @@ def main() -> None:
     spark = get_spark("barberini-bench")
     spark.sparkContext.setLogLevel("ERROR")
     session_sec = time.perf_counter() - t_setup
+    # state that changes what this run measures: stats-catalog entries on
+    # disk, and whether the engine JVM started from a class-data archive
+    warmth = {"catalog_entries": default_entry_count(),
+              "jvm": class_sharing(spark)}
 
     # wall-clock envelope: host-interference bursts can double every
     # measurement, and an external harness may kill a long-running bench.
@@ -349,6 +356,7 @@ def main() -> None:
         "ambient_load_start": round(ambient_start, 2),
         "ambient_wait_sec": round(ambient_wait, 1),
         "cold_start": cold_start,
+        "warmth": warmth,
         # JIT (HotSpot) and Janino (generated classes) compile seconds
         "compile": compile_record,
         "loadavg": load_samples,

@@ -6,8 +6,9 @@ In one fresh Spark session, runs ``pipeline.fill_db_hourly`` then
 catalog (``BA_STATS_CATALOG``): once cold (empty warehouse, empty
 catalog), then once warm (the same inputs again, so every write is an
 idempotent re-run over existing tables).  Prints one JSON line with each
-cadence's wall seconds per pass and each pass's manifest row total; the
-two row totals must match.  The warehouse and catalog are temporary
+cadence's wall seconds per pass and each pass's manifest row total (the
+two row totals must match), plus the engine JVM's class-data-sharing
+state (``core/metrics.class_sharing``).  The warehouse and catalog are temporary
 directories removed on exit.
 
 Usage:
@@ -35,6 +36,7 @@ def main(sf_dir: str) -> None:
     try:
         from barberini_analytics_spark import pipeline
         from barberini_analytics_spark.core.cache import release_scoped
+        from barberini_analytics_spark.core.metrics import class_sharing
         from barberini_analytics_spark.core.session import get_spark
 
         t0 = time.perf_counter()
@@ -42,6 +44,8 @@ def main(sf_dir: str) -> None:
         spark.sparkContext.setLogLevel("ERROR")
         out = {"sf_dir": sf_dir,
                "session_s": round(time.perf_counter() - t0, 2),
+               # the catalog starts empty; the JVM may not
+               "jvm": class_sharing(spark),
                "loadavg_start": os.getloadavg()[0]}
         for run in ("cold", "warm"):
             rows = 0
