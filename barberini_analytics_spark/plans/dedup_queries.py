@@ -18,6 +18,11 @@ _NUM_PERM = 8
 _SHINGLE_K = 3
 _JACCARD_THRESHOLD = 0.5
 
+#: small-graph gate of ``minhash_near_duplicates``: at or below this many
+#: verified pairs the closure and rank run driver-side; above it, the
+#: distributed label propagation and power iteration run instead
+_SMALL_GRAPH_MAX_PAIRS = 200_000
+
 
 def _hash56_sql(expr: str) -> str:
     return f"CAST(('0x' || substring(md5({expr}), 1, 14)) AS BIGINT)"
@@ -433,8 +438,6 @@ def minhash_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     count bounds bench latency (each lazy round is two tiny shuffle
     stages), not fidelity — the per-round arithmetic is what's checked.
     """
-    import os
-
     from ..operators.graph import (connected_components,
                                    connected_components_local, pagerank,
                                    pagerank_local)
@@ -460,9 +463,7 @@ def minhash_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DuckDB oracle's own reordering already is).  Above the bound —
     # a corpus whose near-dup graph is genuinely large — the
     # distributed path runs unchanged.
-    n_pairs = pairs.count()
-    small_max = int(os.environ.get("BARBERINI_SMALL_GRAPH_PAIRS", "200000"))
-    if n_pairs <= small_max:
+    if pairs.count() <= _SMALL_GRAPH_MAX_PAIRS:
         edge_rows = [(r["id_a"], r["id_b"])
                      for r in pairs.select("id_a", "id_b").collect()]
         sym = edge_rows + [(b, a) for a, b in edge_rows]

@@ -132,16 +132,8 @@ def main() -> None:
     run("mix_sources", X.mix_sources(
         mix_docs, "source", {f"s{i}": 1 / 6 for i in range(6)}), n_docs)
 
-    # round-7 additions — all map-only or single-aggregate shapes, so
-    # the figures pin "scan-speed" claims with measurements
-    from barberini_analytics_spark.operators import curation as CU
-
+    # map-only Gopher rule gate: pins the "scan-speed" claim
     run("gopher_filter", X.gopher_quality_filter(docs), n_docs)
-    run("scrub_text", X.scrub_text(docs), n_docs)
-    run("stratified_threshold", CU.stratified_sample_threshold(
-        events, ["event_type"], 0.1, "event_id"), n_events)
-    run("epoch_shards", CU.epoch_shards(
-        events, "event_id", epoch=1, n_shards=256), n_events)
 
     # PageRank: 4 out-edges/node power-iteration, 5 rounds
     from barberini_analytics_spark.operators.graph import pagerank
@@ -155,20 +147,6 @@ def main() -> None:
         .alias("id2"))
     run("pagerank_5it", lambda: pagerank(pr_nodes, pr_edges, n_iter=5),
         n_docs * 4)
-    release_scoped()
-
-    # BPE merge discovery: cost is vocabulary-bounded (64-word synthetic
-    # vocab here), NOT corpus-bounded — the whole point of training on
-    # the word-frequency table; timed over 5 rounds incl. the corpus
-    # word-count aggregate
-    from barberini_analytics_spark.operators.bpe import train_bpe_merges
-
-    t_bpe = time.perf_counter()
-    n_merges = len(train_bpe_merges(docs, 5))
-    dt_bpe = time.perf_counter() - t_bpe
-    results["bpe_train_5"] = {"sec": round(dt_bpe, 2), "rows_in": n_docs,
-                              "rows_per_sec": int(n_docs / dt_bpe),
-                              "merges": n_merges}
     release_scoped()
 
     # SCD2 intervals over the event stream (two windows, one shuffle)

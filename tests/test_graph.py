@@ -141,3 +141,30 @@ def test_local_pagerank_matches_distributed(spark):
     for node in dist:
         # summation order differs by design; round-6 hashing absorbs it
         assert abs(local[node] - dist[node]) < 1e-12
+
+
+def test_minhash_near_duplicates_distributed_branch_matches_driver(
+        spark, monkeypatch):
+    """The registered minhash_near_duplicates query gates its closure +
+    rank on the verified-pair count: driver-side at or below
+    ``_SMALL_GRAPH_MAX_PAIRS``, distributed above it.  Forced onto the
+    distributed branch, the sf0.01 output must equal the default
+    driver-side branch row for row."""
+    from barberini_analytics_spark.operators import graph
+    from barberini_analytics_spark.plans import dedup_queries
+    from barberini_analytics_spark.plans.registry import QUERIES
+    from tests.conftest import SF_ORACLE
+    from tests.oracle_utils import compare_frames
+
+    run = QUERIES["minhash_near_duplicates"]
+    driver = run(spark, SF_ORACLE).toPandas()
+    assert len(driver) > 0  # parity over an empty graph shows nothing
+
+    def no_local(*_a, **_k):
+        raise AssertionError("driver-side branch ran")
+
+    monkeypatch.setattr(dedup_queries, "_SMALL_GRAPH_MAX_PAIRS", -1)
+    monkeypatch.setattr(graph, "connected_components_local", no_local)
+    monkeypatch.setattr(graph, "pagerank_local", no_local)
+    distributed = run(spark, SF_ORACLE).toPandas()
+    compare_frames(distributed, driver, "minhash_near_duplicates")

@@ -193,39 +193,6 @@ def test_upsert_pruning_multi_column_and_null_partition(spark, tmp_path):
     assert empty.count() == 0
 
 
-def test_bucketed_join_is_exchange_free(spark, tmp_path):
-    """The 100 TB co-location lever: equi-joining two tables bucketed on
-    the join key must plan ZERO Exchange operators — the write-time
-    shuffle is reused by every downstream join/agg on that key."""
-    from pyspark.sql import functions as F
-
-    from barberini_analytics_spark.core.bucketing import (read_table,
-                                                          write_bucketed)
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        a = spark.range(1000).select(
-            F.col("id").alias("k"), (F.col("id") * 2).alias("va"))
-        b = spark.range(1000).select(
-            F.col("id").alias("k"), (F.col("id") * 3).alias("vb"))
-        write_bucketed(a, "bkt_a", ["k"], n_buckets=8)
-        write_bucketed(b, "bkt_b", ["k"], n_buckets=8)
-        joined = read_table(spark, "bkt_a").join(
-            read_table(spark, "bkt_b"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:2000]
-        assert "SortMergeJoin" in plan, plan[:2000]
-        assert joined.count() == 1000
-        # and a groupBy on the bucket key is exchange-free too
-        agg = read_table(spark, "bkt_a").groupBy("k").agg(F.sum("va"))
-        agg_plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in agg_plan, agg_plan[:2000]
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
-
-
 # queries that execute eagerly on construction (fits, streams, sinks,
 # closure loops) — their plan properties are pinned by dedicated tests
 _EAGER = {
@@ -259,31 +226,6 @@ def test_every_lazy_query_plan_is_clean(spark):
         if n_arrow > _ARROW_ALLOWED.get(name, 0):
             bad.append(f"{name}: {n_arrow} Arrow stages")
     assert not bad, bad
-
-
-def test_window_over_bucketed_table_skips_exchange(spark):
-    """A window partitioned on the bucket key reuses the write-time
-    hash distribution: zero Exchange operators (the per-bucket Sort
-    remains — Spark does not trust bucket sort order for windows)."""
-    from pyspark.sql import Window as W, functions as F
-
-    from barberini_analytics_spark.core.bucketing import (read_table,
-                                                          write_bucketed)
-
-    try:
-        df = spark.range(10_000).select(
-            (F.col("id") % 100).alias("k"), F.col("id").alias("ts"),
-            (F.col("id") * 2).alias("v"))
-        write_bucketed(df, "bkt_win", ["k"], n_buckets=8,
-                       sort_cols=["k", "ts"])
-        w = W.partitionBy("k").orderBy("ts")
-        out = read_table(spark, "bkt_win").withColumn(
-            "lagv", F.lag("v").over(w))
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:2000]
-        assert "Window" in plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_win")
 
 
 def test_ivf_assign_is_aggregate_not_window(spark):
@@ -416,38 +358,6 @@ def test_customer_view_advised_join_flips_plan(spark):
         f"plain={plain.count('BroadcastHashJoin')} " \
         f"advised={advised.count('BroadcastHashJoin')}"
     assert "SortMergeJoin [order_id" in plain, plain[:3000]
-
-
-def test_gates_stage_plan_chars_bounded(spark):
-    """r11 verdict ask 5: the full-recipe gate stack (scrub + Gopher +
-    trained classifier + features + LM score + LM quantile) reached
-    1.4M plan chars, unbounded by any pin — the quantile crossJoin
-    printed the LM scorer's join subtree twice.  The gates stage now
-    checkpoints the LM-scored frame before the quantile, so the final
-    gates plan is a filter over a leaf; pinned well under the ~500k
-    the verdict asked for."""
-    from barberini_analytics_spark.core.cache import release_scoped
-    from barberini_analytics_spark.operators.curation import \
-        _curation_stages
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    model = {"weights": [0.01] * 1024, "bias": 0.0, "dim": 1024}
-    # gopher=False: the published word-count floor drops ALL smoke-scale
-    # docs (too short), which would make the row-survival check vacuous;
-    # the plan-fattening parts are the classifier fold + LM join +
-    # quantile crossJoin, all present here
-    stages = dict(_curation_stages(
-        "doc_id", "text", "source", 5, 0.0, 0.95, 10, 0.5,
-        None, (0.9, 0.05, 0.05), 50_000, 42, True, False,
-        near_dup_max_bucket=1000, span_k=25, quality_model=model))
-    gated = stages["gates"](stages["scrub"](
-        docs.select("doc_id", "text", "source")))
-    chars = len(gated._jdf.queryExecution().toString())
-    assert chars < 200_000, f"gates plan grew to {chars} chars"
-    # the gate still gates: LM quantile keeps <= ~95% of scoreable docs
-    n_in, n_out = docs.count(), gated.count()
-    assert 0 < n_out <= n_in
-    release_scoped()
 
 
 def test_advised_registry_queries_warm_call_zero_jobs(spark):

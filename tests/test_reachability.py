@@ -1,0 +1,85 @@
+"""Module reachability guard: every module of the package is imported by
+code that ships — the package itself, ``__spark_entry__.py``,
+``bench.py``, ``scripts/*.py`` or non-test ``perfbench/*.py``.  A module
+that only tests import is dead weight the registry, FillDb and the
+streaming entry never reach.
+
+Static (AST only, no Spark): relative and absolute ``import`` /
+``from … import`` statements are resolved to dotted module names.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PACKAGE = "barberini_analytics_spark"
+
+#: unwired modules kept on purpose, each with the reference file it
+#: reproduces
+EXEMPT = {
+    "sources.gomus_capacities":
+        "reference src/gomus/capacities.py: the capacities-page popover "
+        "parse, kept as paper-faithful library code",
+    "ml.word2vec_io":
+        "reference src/absa/post_opinion_patterns.py: the word2vec "
+        "text-format loader for the pretrained German vectors",
+}
+
+
+def _module_name(path: Path) -> str:
+    parts = list(path.relative_to(ROOT).with_suffix("").parts)
+    if parts[-1] == "__init__":
+        parts.pop()
+    return ".".join(parts)
+
+
+def _imported(path: Path) -> set[str]:
+    """Dotted names ``path`` imports: each module, each ``from`` base,
+    and each ``from``-imported name taken as a possible submodule."""
+    name = _module_name(path)
+    package = name if path.name == "__init__.py" else name.rpartition(".")[0]
+    out: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                base = package.split(".")[:len(package.split("."))
+                                        - (node.level - 1)]
+                base = ".".join(base + ([node.module] if node.module
+                                        else []))
+            else:
+                base = node.module
+            out.add(base)
+            out.update(f"{base}.{a.name}" for a in node.names)
+    return out
+
+
+def _shipping_files() -> list[Path]:
+    files = sorted((ROOT / PACKAGE).rglob("*.py"))
+    files += [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
+    files += sorted((ROOT / "scripts").glob("*.py"))
+    files += [p for p in sorted((ROOT / "perfbench").glob("*.py"))
+              if not p.name.startswith("test_")]
+    return files
+
+
+def test_every_package_module_is_imported_by_shipping_code():
+    modules = {_module_name(p) for p in (ROOT / PACKAGE).rglob("*.py")
+               if p.name != "__init__.py"}
+    reached: set[str] = set()
+    for path in _shipping_files():
+        own = _module_name(path)
+        reached |= _imported(path) - {own}
+    short = {m: m.removeprefix(PACKAGE + ".") for m in modules}
+    unreached = sorted(s for m, s in short.items()
+                       if m not in reached and s not in EXEMPT)
+    assert not unreached, (
+        f"modules no shipping code imports: {unreached} — delete them, "
+        f"or add an EXEMPT entry naming the reference file they reproduce")
+    stale = sorted(s for s in EXEMPT
+                   if s not in short.values()
+                   or f"{PACKAGE}.{s}" in reached)
+    assert not stale, f"EXEMPT entries missing or now imported: {stale}"
