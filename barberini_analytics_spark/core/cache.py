@@ -73,8 +73,9 @@ def scoped_checkpoint(df: DataFrame) -> DataFrame:
 def scope_mark() -> tuple[int, int]:
     """Snapshot of the scoped tier for NESTED scopes.
 
-    An operator that runs inside a caller's query scope must not free
-    the caller's scoped persists/checkpoints — for checkpoints that would
+    An operator that runs inside a caller's query scope (e.g.
+    ``pipeline.curate_to_shards`` invoked mid-query) must not free the
+    caller's scoped persists/checkpoints — for checkpoints that would
     make later reuse *raise* rather than recompute.  Take a mark on
     entry and pass it to ``release_scoped(since=mark)`` to free only
     frames registered after the mark.

@@ -1,6 +1,31 @@
-"""Deterministic stratified sampling with exact per-stratum quotas — the
-sampling step of the per-document governance record
-(``plans/curation_queries.corpus_quality_governance``).
+"""End-to-end training-corpus curation: the composition a 100 TB data
+pipeline actually runs, wired from the individually oracle-checked
+operators in this package.
+
+Stage order follows the standard web-corpus recipe (C4 → CCNet →
+RefinedWeb lineage): cheap per-document gates first (each stage only
+pays for the previous stage's survivors), then corpus-level dedup from
+cheapest to most expensive, then mixture/split/packing:
+
+1. quality gates  — token count, alphabetic ratio, char-trigram LM
+   cross-entropy under a corpus quantile (all map-side; the LM model and
+   the quantile are 1-row/alphabet-bounded broadcast aggregates);
+2. exact dedup    — content-fingerprint groups, smallest id survives;
+3. segment dedup  — CCNet/C4 boilerplate removal, documents reassembled
+   from their globally-first segments (empty survivors dropped);
+4. near-dup dedup — MinHash-LSH groups, LONGEST member survives
+   (keep-best, not keep-any);
+5. mixing         — optional source reweighting to target shares with
+   deterministic integer replication;
+6. split + shards — leak-free hash split and token-budgeted shard
+   packing over a unique (id, copy) order.
+
+Every stage is a DataFrame→DataFrame transform: no collects, no UDFs.
+Multiply-consumed stage boundaries are materialized query-scoped (the
+gates output persisted, the segment/span outputs checkpointed — see
+``_curation_stages``), so the dedup stages plan against leaves instead
+of re-deriving and re-optimizing the whole upstream recipe per
+consumer.
 """
 
 from __future__ import annotations
@@ -9,6 +34,379 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from .dedup import dedup_keep_best, dedup_segments
+from .text import (assign_token_shards, fingerprint, hash_split, mix_sources,
+                   ngram_lm_score, quality_features)
+
+
+def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
+                  text_col: str = "text", source_col: str | None = None,
+                  min_tokens: int = 5, min_alpha_ratio: float = 0.0,
+                  lm_quantile: float | None = 0.95,
+                  seg_tokens: int = 10,
+                  span_k: int | None = None,
+                  near_dup_threshold: float = 0.5,
+                  near_dup_max_bucket: int | None = None,
+                  targets: dict[str, float] | None = None,
+                  split_weights: Sequence[float] = (0.9, 0.05, 0.05),
+                  shard_tokens: int | None = None,
+                  seed: int = 42,
+                  scrub: bool = False,
+                  gopher: bool = False,
+                  quality_model: dict | None = None,
+                  quality_threshold: float = 0.5) -> DataFrame:
+    """Run the full curation recipe; returns one row per surviving
+    document COPY with ``n_tokens``, ``lm_score``, ``split``,
+    ``copy_id`` and (when ``shard_tokens`` is set) ``shard`` attached.
+
+    ``lm_quantile=None`` skips the LM gate, ``targets=None`` skips
+    mixing (every survivor keeps one copy), ``shard_tokens=None`` skips
+    packing.  Determinism: every stochastic-looking step (split, mix
+    remainder) is a pure function of ``(seed, id)``.
+
+    ``scrub=True`` prepends stage 0: unicode normalization
+    (:func:`..text.scrub_text`) with mojibake QUARANTINE — documents
+    carrying UTF-8-as-Latin-1 damage markers are dropped here rather
+    than flowing damaged text into dedup fingerprints (a re-decode
+    pass, not this pipeline, is what can actually repair them).
+    ``gopher=True`` adds the published Gopher rule gate
+    (:func:`..text.gopher_quality_filter` ``keep``) alongside stage
+    1's cheap gates — both still map-only, so the stage stays one scan.
+    ``span_k`` (e.g. 50, the Lee et al. 2021 default) inserts exact
+    substring-span dedup between segment and near-dup dedup: maximal
+    duplicated ≥``span_k``-token spans are cut at their exact extent
+    (keep-first), catching cross-boundary copies the block-grain stage
+    cannot see; fully-covered documents drop out here instead of
+    reaching the LSH stage as trivial near-dups.
+    ``quality_model`` (a :func:`..ml.logreg.train_quality_classifier`
+    model dict) adds the trained webtext-filter gate alongside stage
+    1's heuristics: documents scoring under ``quality_threshold`` are
+    dropped.  Map-only against the broadcast weights (plan literal for
+    small models, one-row broadcast table above ``WEIGHT_LITERAL_MAX``),
+    so the stage stays one scan.
+    """
+    if targets is not None and source_col is None:
+        raise ValueError("targets given but source_col is None")
+    base_cols = [id_col, text_col] + ([source_col] if source_col else [])
+    out = docs.select(*base_cols)
+    for _name, fn in _curation_stages(
+            id_col, text_col, source_col, min_tokens, min_alpha_ratio,
+            lm_quantile, seg_tokens, near_dup_threshold, targets,
+            split_weights, shard_tokens, seed, scrub, gopher,
+            near_dup_max_bucket, span_k, quality_model,
+            quality_threshold):
+        out = fn(out)
+    return out
+
+
+def _curation_stages(id_col, text_col, source_col, min_tokens,
+                     min_alpha_ratio, lm_quantile, seg_tokens,
+                     near_dup_threshold, targets, split_weights,
+                     shard_tokens, seed, scrub, gopher,
+                     near_dup_max_bucket=None, span_k=None,
+                     quality_model=None, quality_threshold=0.5):
+    """The curation recipe as named ``(stage, DataFrame→DataFrame)``
+    steps — one definition serves both the fused lazy composition
+    (:func:`curate_corpus`) and the per-stage profiler
+    (:func:`curate_stage_profile`), so the profile can never drift from
+    the shipped pipeline.
+
+    Multiply-consumed stage boundaries are materialized: the dedup
+    stages each consume their input 2-3× (fingerprint aggregate +
+    join-back; occurrence stream + reassembly join; shingle build +
+    keep-best join), so WITHOUT a boundary each downstream consumer
+    re-executes the whole upstream subtree, and the LOGICAL plan of the
+    later stages compounds multiplicatively — the fused span recipe
+    spent 5 minutes of driver time in Catalyst over a plan whose
+    expression trees repeat the full upstream per shingle permutation
+    (and a plain ``persist`` made it worse, not better: every cache
+    LOOKUP canonicalizes those exponential trees; persist does not
+    truncate lineage — the same lesson ``curate_stage_profile``'s
+    docstring records).  So the gates LM-scored frame and the
+    segment-dedup and span-dedup outputs are scoped-CHECKPOINTED
+    (eager ``localCheckpoint`` — truncates lineage, so each downstream
+    stage plans against a leaf instead of the whole recipe; for gates
+    this also stops the quantile crossJoin from printing the LM join
+    subtree twice).  All are query-scoped: released on the next
+    registry entry / ``release_scoped``.  Cache-vs-recompute at
+    100 TB: the truncated boundaries contain shuffles, re-deriving
+    them 3× per downstream consumer costs more than storing them once
+    (MEMORY_AND_DISK spill)."""
+    from ..core.cache import scoped_checkpoint
+    from .text import gopher_quality_filter, scrub_text
+
+    base_cols = [id_col, text_col] + ([source_col] if source_col else [])
+
+    # -- 0. optional unicode scrub + mojibake quarantine -------------------
+    def stage_scrub(docs):
+        return (scrub_text(docs, text_col)
+                .filter(F.col("mojibake_hits") == 0)
+                .drop("mojibake_hits"))
+
+    # -- 1. quality gates -------------------------------------------------
+    def stage_gates(docs):
+        if gopher:
+            docs = (gopher_quality_filter(docs, text_col)
+                    .filter(F.col("keep"))
+                    .select(*base_cols))
+        if quality_model is not None:
+            from ..ml.logreg import quality_classifier_score
+
+            docs = (quality_classifier_score(docs, quality_model,
+                                             text_col)
+                    .filter(F.col("quality_prob") >= quality_threshold)
+                    .select(*base_cols))
+        prof = quality_features(docs.select(*base_cols), text_col)
+        gated = prof.filter(
+            (F.col("n_tokens") >= min_tokens)
+            & (F.col("alpha_ratio") >= min_alpha_ratio))
+        gated = ngram_lm_score(gated, id_col, text_col)
+        # checkpoint BEFORE the quantile gate: the LM scorer's join
+        # subtree is the gate stack's largest expression tree, and the
+        # quantile's crossJoin would print it TWICE (once under the
+        # aggregate branch, once under the filter branch) — measured
+        # 1.4M plan chars at sf0.01-full, unbounded in corpus config
+        # (r11 verdict ask 5).  The eager checkpoint truncates both
+        # branches to a leaf (pinned < 200k in test_plan_shapes) and
+        # doubles as the stage's materialization: exact dedup consumes
+        # the gates output twice (fingerprint aggregate + semi join),
+        # and the gate expressions (trained-score fold, LM join) are
+        # the pipeline's most expensive per-row work — the checkpoint
+        # caps them at one evaluation, same as the scoped_persist it
+        # replaces, while also bounding the plan.
+        gated = scoped_checkpoint(
+            gated.select(*base_cols, "n_tokens", "lm_score"))
+        if lm_quantile is not None:
+            q = gated.agg(
+                F.percentile_approx("lm_score", lm_quantile).alias("__q"))
+            # NULL lm_score means "too short to score" (under 3 chars,
+            # only reachable with a lowered min_tokens) — the LM gate
+            # filters scoreable docs only, so NULLs pass through rather
+            # than being dropped by NULL <= q three-valued logic
+            gated = (gated.crossJoin(F.broadcast(q))
+                     .filter(F.col("lm_score").isNull()
+                             | (F.col("lm_score") <= F.col("__q")))
+                     .drop("__q"))
+        return gated
+
+    # -- 2. exact dedup (smallest id per content survives) ----------------
+    def stage_exact(gated):
+        fp = fingerprint(gated, text_col)
+        reps = (fp.groupBy("fingerprint")
+                .agg(F.min(id_col).alias(id_col)))
+        return fp.join(reps, ["fingerprint", id_col], "left_semi") \
+            .drop("fingerprint")
+
+    # -- 3. segment-level boilerplate removal ------------------------------
+    def stage_segment(exact):
+        segd = dedup_segments(exact, id_col, text_col,
+                              tokens_per_segment=seg_tokens)
+        return scoped_checkpoint(
+            exact.drop(text_col)
+            .join(segd.filter(F.col("text_kept_first") != "")
+                  .select(id_col,
+                          F.col("text_kept_first").alias(text_col)),
+                  id_col)
+            # token count changed with the removed segments
+            .withColumn("n_tokens",
+                        F.size(F.split(F.trim(F.col(text_col)), r"\s+")))
+        )
+
+    # -- 3.5 optional exact substring-span dedup ----------------------------
+    def stage_span_dedup(seg_kept):
+        from .dedup import dedup_spans
+
+        spand = dedup_spans(seg_kept, id_col, text_col, k=span_k)
+        return scoped_checkpoint(
+            seg_kept.drop(text_col, "n_tokens")
+            .join(spand.filter(F.col("text_span_deduped") != "")
+                  .select(id_col,
+                          F.col("text_span_deduped").alias(text_col),
+                          (F.col("n_tokens")
+                           - F.col("n_dup_span_tokens")).alias("n_tokens")),
+                  id_col)
+        )
+
+    # -- 4. near-dup dedup, longest member survives ------------------------
+    def stage_near_dup(seg_kept):
+        # near_dup_max_bucket: the hot-bucket guard of
+        # lsh_candidate_pairs — exact/segment dedup upstream removed the
+        # identical-text mass, so any bucket still above the cap is a
+        # degenerate boilerplate band, not a recoverable duplicate set
+        return dedup_keep_best(seg_kept, id_col, "n_tokens", text_col,
+                               threshold=near_dup_threshold,
+                               max_bucket=near_dup_max_bucket)
+
+    # -- 5. source mixing (or the trivial one-copy attach) ------------------
+    def stage_mix(deduped):
+        if targets is not None:
+            mixed = mix_sources(deduped, source_col, targets,
+                                key_col=id_col, seed=seed)
+            return (mixed.filter(F.col("n_copies") > 0)
+                    .withColumn("copy_id",
+                                F.explode(F.sequence(F.lit(1),
+                                                     F.col("n_copies"))))
+                    .drop("n_copies"))
+        return deduped.withColumn("copy_id", F.lit(1))
+
+    # -- 6. leak-free split --------------------------------------------------
+    def stage_split(out):
+        return hash_split(out, list(split_weights), id_col, seed=seed)
+
+    # -- 7. token-budgeted shard packing --------------------------------------
+    def stage_pack(out):
+        out = out.withColumn(
+            "__ord", F.concat_ws("#", F.col(id_col).cast("string"),
+                                 F.col("copy_id").cast("string")))
+        return assign_token_shards(out, "n_tokens", "__ord",
+                                   shard_tokens).drop("__ord")
+
+    stages = []
+    if scrub:
+        stages.append(("scrub", stage_scrub))
+    stages.append(("gates", stage_gates))
+    stages.append(("exact_dedup", stage_exact))
+    stages.append(("segment_dedup", stage_segment))
+    if span_k is not None:
+        stages.append(("span_dedup", stage_span_dedup))
+    stages.append(("near_dup", stage_near_dup))
+    stages.append(("mix", stage_mix))
+    stages.append(("split", stage_split))
+    if shard_tokens is not None:
+        stages.append(("pack", stage_pack))
+    return stages
+
+
+def curate_stage_profile(docs: DataFrame, id_col: str = "doc_id",
+                         text_col: str = "text",
+                         source_col: str | None = None,
+                         min_tokens: int = 5, min_alpha_ratio: float = 0.0,
+                         lm_quantile: float | None = 0.95,
+                         seg_tokens: int = 10,
+                         span_k: int | None = None,
+                         near_dup_threshold: float = 0.5,
+                         near_dup_max_bucket: int | None = None,
+                         targets: dict[str, float] | None = None,
+                         split_weights: Sequence[float] = (0.9, 0.05, 0.05),
+                         shard_tokens: int | None = None,
+                         seed: int = 42, scrub: bool = False,
+                         gopher: bool = False,
+                         quality_model: dict | None = None,
+                         quality_threshold: float = 0.5) -> list[dict]:
+    """Instrumented :func:`curate_corpus`: materialize each stage
+    boundary and report wall time, rows in/out, and the stage's own plan
+    size — the table that identifies the dominant stage at a given SF.
+
+    Boundaries are ``localCheckpoint(eager=True)``, NOT bare persists:
+    a persist does not truncate the logical plan, and the self-join-heavy
+    stages (LSH verify, connected-components label propagation, the LM
+    score's model-join-back) each duplicate the whole upstream subtree —
+    at any SF the compounded plan string exceeds the JVM's 1 GiB string
+    limit the first time anything renders it.  Checkpointing bounds every
+    stage's plan tree to exactly one stage (``plan_chars`` in the output
+    proves it).  Checkpoint blocks for a boundary are released as soon as
+    the next boundary has materialized, so peak footprint is two adjacent
+    boundaries; stage-INTERNAL scoped checkpoints (dedup_keep_best's
+    per-round label-propagation checkpoints) are released via a scope
+    mark on exit, so a standalone profiler call pins nothing for the
+    session.  NOTE this deliberately breaks the fused single-plan
+    execution the production path uses (stage attribution requires a
+    barrier per stage), so the per-stage sum runs slightly slower than
+    :func:`curate_corpus` end-to-end — compare shapes, not totals.
+    """
+    import os
+    import time
+
+    from ..core.cache import release_scoped, scope_mark
+
+    if targets is not None and source_col is None:
+        raise ValueError("targets given but source_col is None")
+    base_cols = [id_col, text_col] + ([source_col] if source_col else [])
+
+    sc = docs.sparkSession.sparkContext
+
+    def _persistent_ids() -> set[int]:
+        jmap = sc._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    def checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
+        # eager localCheckpoint truncates lineage; record the rdd-id
+        # delta so the boundary's blocks can be freed deterministically
+        # once the NEXT boundary exists (DataFrame.unpersist does not
+        # release checkpoint blocks — they sit outside the SQL cache
+        # manager).
+        before = _persistent_ids()
+        out = df.localCheckpoint(eager=True)
+        return out, _persistent_ids() - before
+
+    def free(rdd_ids: set[int]) -> None:
+        jmap = sc._jsc.getPersistentRDDs()
+        for k in jmap.keySet().toArray():
+            if int(k) in rdd_ids:
+                jmap.get(k).unpersist()
+
+    def condition(df: DataFrame, n: int) -> DataFrame:
+        # a checkpointed boundary freezes the upstream partition layout;
+        # at small row counts that means dozens of near-empty partitions,
+        # and the iterative stages (near-dup label propagation) then pay
+        # partitions × jobs task launches that the FUSED plan never pays
+        # (AQE coalesces its exchanges to match the data).  Mirror AQE:
+        # collapse tiny boundaries — a narrow coalesce over in-memory
+        # checkpoint blocks, no persist needed.
+        if n < 10_000 and df.rdd.getNumPartitions() > 4:
+            return df.coalesce(1)
+        return df
+
+    mark = scope_mark()
+    profile: list[dict] = []
+    live: list[set[int]] = []   # boundary handles not yet freed
+    try:
+        cur, handle = checkpoint(docs.select(*base_cols))
+        live.append(handle)
+        rows = cur.count()
+        prev = condition(cur, rows)
+        for name, fn in _curation_stages(
+                id_col, text_col, source_col, min_tokens, min_alpha_ratio,
+                lm_quantile, seg_tokens, near_dup_threshold, targets,
+                split_weights, shard_tokens, seed, scrub, gopher,
+                near_dup_max_bucket, span_k, quality_model,
+                quality_threshold):
+            t0 = time.perf_counter()
+            raw = fn(prev)
+            nxt, nxt_handle = checkpoint(raw)
+            live.append(nxt_handle)
+            n = nxt.count()
+            sec = time.perf_counter() - t0
+            profile.append({
+                "stage": name,
+                "sec": round(sec, 3),
+                "rows_in": rows,
+                "rows_out": n,
+                # size of THIS stage's plan text — bounded because the
+                # input boundary is a checkpoint (LogicalRDD leaf); the
+                # number that exploded past 1 GiB before the fix
+                "plan_chars": len(raw._jdf.queryExecution().toString()),
+                "loadavg1m": round(os.getloadavg()[0], 2),
+            })
+            free(handle)
+            live.remove(handle)
+            prev, handle, rows = condition(nxt, n), nxt_handle, n
+    finally:
+        # free any boundary still checkpointed (the normal exit leaves
+        # exactly one; a mid-stage exception leaves up to two), then the
+        # stage-INTERNAL scoped checkpoints (per-round label propagation)
+        for h in live:
+            try:
+                free(h)
+            except Exception:
+                pass
+        release_scoped(since=mark)
+    return profile
+
+
+# ---------------------------------------------------------------------------
+# stratified sampling (exact per-stratum quotas, deterministic)
+# ---------------------------------------------------------------------------
 
 def stratified_sample(df: DataFrame, strata_cols: Sequence[str],
                       fraction: float, key_col: str,
@@ -27,8 +425,13 @@ def stratified_sample(df: DataFrame, strata_cols: Sequence[str],
     Mechanics: rows are ranked inside each stratum by
     ``(hash56(key), key)`` — a uniform 56-bit md5-derived order — and a
     count window supplies ``n_s``; rank ≤ quota survives.  One shuffle on
-    the strata columns.  Skew note: a single giant stratum serializes
-    into one task under the window.
+    the strata columns.  Skew note for 100 TB: a single giant stratum
+    serializes into one task under a plain window; this implementation
+    pre-shuffles on (strata, key-hash) only via the window's own
+    exchange, so for web-scale single-stratum corpora prefer
+    :func:`stratified_sample_threshold`, which is map-only after a
+    per-stratum count aggregate and trades exact quotas for
+    ±O(sqrt(n)) binomial jitter.
 
     ``flag_only=True`` keeps every row and emits the membership verdict
     as an ``in_sample`` boolean (plus ``stratum_quota``) instead of
@@ -66,3 +469,223 @@ def stratified_sample(df: DataFrame, strata_cols: Sequence[str],
         ).drop("__rnk", "__n")
     return (out.filter(F.col("__rnk") <= F.col("stratum_quota"))
             .drop("__rnk", "__n"))
+
+
+def stratified_sample_threshold(df: DataFrame, strata_cols: Sequence[str],
+                                fraction: float, key_col: str) -> DataFrame:
+    """Scale-path stratified sample: keep rows whose uniform 56-bit key
+    hash falls under ``fraction`` of the hash space — map-only (no
+    window, no per-stratum serialization), so a single web-scale stratum
+    stays fully parallel.  Quotas are binomial-approximate
+    (±O(sqrt(n_s)) rows), which is what every production corpus sampler
+    accepts in exchange for removing the only skew-prone shuffle.
+
+    Strata columns only scope the attached ``stratum_n`` audit count
+    (one broadcast-back aggregate); the keep decision itself is per-row.
+    """
+    from .text import hash56
+
+    counts = df.groupBy(*strata_cols).agg(
+        F.count(F.lit(1)).alias("stratum_n"))
+    cut = int(float(fraction) * (1 << 56))
+    return (
+        df.join(F.broadcast(counts), list(strata_cols))
+        .filter(hash56(F.col(key_col).cast("string")) < F.lit(cut))
+    )
+
+
+# ---------------------------------------------------------------------------
+# deterministic epoch ordering (training-run shuffle without rand())
+# ---------------------------------------------------------------------------
+
+def epoch_order(df: DataFrame, key_col: str, epoch: int,
+                out_col: str = "epoch_rank") -> DataFrame:
+    """Deterministic per-epoch training order: rank every row by
+    ``hash56(epoch || key)`` — a full reshuffle between epochs (the
+    permutations of different epochs are as independent as the hash),
+    yet exactly reproducible for a given (corpus, epoch) pair, with no
+    ``rand()``/seed plumbing and no driver state.
+
+    The global rank is computed in the classic two-phase distributed
+    form — a partition-less ``row_number()`` window would funnel the
+    whole corpus through ONE task:
+
+    1. range-repartition on the salted hash (Spark samples boundaries,
+       so partitions are balanced) and pin the partition id as a column;
+    2. count rows per range partition (a #partitions-row aggregate,
+       collected and turned into broadcast-side cumulative offsets);
+    3. ``row_number()`` *within* each range partition + the partition's
+       offset = the exact global rank, with every stage fully parallel.
+
+    The staging frame is MATERIALIZED (query-scoped localCheckpoint,
+    same as ``assign_token_shards``) so the partition ids the counts
+    were taken from are exactly the ones the window reads: range
+    boundaries come from sampling and AQE may coalesce the exchange
+    differently per job — a persist can be evicted and recomputed with
+    renumbered pids, which would silently corrupt the offsets.
+
+    LIFETIME: because of that checkpoint this is NOT a pure lazy plan.
+    The call runs two jobs eagerly (checkpoint + per-partition counts),
+    and the returned frame is only executable within the current query
+    scope — the next ``core.cache.release_scoped()`` (the registry
+    fires one on entry to every top-level query) frees the checkpoint
+    blocks, after which re-executing the frame RAISES rather than
+    recomputing (the checkpoint truncated its lineage).  Consume the
+    result — write it, collect it, or persist a derived frame — before
+    the scope ends.  Callers that need an unbounded-lifetime plan
+    should use :func:`epoch_shards` (pure lazy, no checkpoint).
+    """
+    from ..core.cache import scoped_checkpoint
+    from .text import hash56
+
+    h = hash56(F.concat_ws("|", F.lit(str(epoch)),
+                           F.col(key_col).cast("string")))
+    staged = scoped_checkpoint(
+        df.withColumn("__h", h)
+        .repartitionByRange("__h", key_col)
+        .withColumn("__pid", F.spark_partition_id())
+    )
+    counts = sorted(
+        (r["__pid"], r["n"])
+        for r in staged.groupBy("__pid").agg(
+            F.count(F.lit(1)).alias("n")).collect()
+    )
+    offsets, acc = {0: 0}, 0  # seed so the map is never empty
+    for pid, n in counts:
+        offsets[pid] = acc
+        acc += n
+    off = F.element_at(
+        F.create_map(*[F.lit(x) for pid_off in offsets.items()
+                       for x in pid_off]),
+        F.col("__pid"))
+    w = W.partitionBy("__pid").orderBy("__h", F.col(key_col))
+    return (
+        staged.withColumn(out_col,
+                          (F.row_number().over(w) + off).cast("int"))
+        .drop("__h", "__pid")
+    )
+
+
+def epoch_shards(df: DataFrame, key_col: str, epoch: int, n_shards: int,
+                 shard_col: str = "shard",
+                 pos_col: str = "shard_pos") -> DataFrame:
+    """Scale path of :func:`epoch_order`: assign each row to one of
+    ``n_shards`` buckets by the epoch-salted hash and rank *within* the
+    shard — one hash shuffle + per-shard sort, no global total order.
+    Readers consume shards round-robin; because the hash is uniform, the
+    concatenated stream is statistically indistinguishable from the
+    global permutation while every stage stays fully parallel.
+    """
+    from .text import hash56
+
+    h = hash56(F.concat_ws("|", F.lit(str(epoch)),
+                           F.col(key_col).cast("string")))
+    out = df.withColumn(shard_col,
+                        F.pmod(h, F.lit(n_shards)).cast("int"))
+    w = W.partitionBy(shard_col).orderBy(h, F.col(key_col))
+    return out.withColumn(pos_col, F.row_number().over(w))
+
+
+# ---------------------------------------------------------------------------
+# CCNet perplexity bucketing (head / middle / tail per language)
+# ---------------------------------------------------------------------------
+
+def ccnet_buckets(df: DataFrame, lang_col: str = "lang",
+                  id_col: str = "doc_id", text_col: str = "text",
+                  cuts: tuple[float, float] = (1 / 3, 2 / 3),
+                  out_col: str = "ccnet_bucket") -> DataFrame:
+    """CCNet's head/middle/tail split (Wenzek et al. 2020): score every
+    document with the char-trigram LM cross-entropy
+    (:func:`..text.ngram_lm_score` — the model-free KenLM stand-in) and
+    bucket each document by its score's position within its OWN
+    language's distribution — head = most fluent third, tail = least.
+    Downstream recipes train on head(+middle) or reweight by bucket.
+
+    Per-language terciles come from the mergeable histogram quantile
+    (:func:`..sketch.histogram_quantile`): two fixed-width aggregate
+    passes, thresholds broadcast back — no per-language sort, no window
+    over the corpus, so a dominant language cannot serialize the job.
+    Unscoreable documents (< 3 chars → NULL score) land in the tail
+    bucket (the conservative CCNet choice for unknown quality).
+    """
+    from .sketch import histogram_quantile
+    from .text import ngram_lm_score
+
+    scored = ngram_lm_score(df, id_col, text_col)
+    qs = histogram_quantile(scored.filter(F.col("lm_score").isNotNull()),
+                            [lang_col], "lm_score", list(cuts))
+    # histogram_quantile names its outputs q_<digits>; address by position
+    thresholds = qs.select(
+        lang_col,
+        F.col(qs.columns[1]).alias("__q_lo"),
+        F.col(qs.columns[2]).alias("__q_hi"))
+    return (
+        scored.join(F.broadcast(thresholds), lang_col, "left")
+        .withColumn(
+            out_col,
+            F.when(F.col("lm_score").isNull(), "tail")
+            .when(F.col("lm_score") <= F.col("__q_lo"), "head")
+            .when(F.col("lm_score") <= F.col("__q_hi"), "middle")
+            .otherwise("tail"))
+        .drop("__q_lo", "__q_hi")
+    )
+
+
+# ---------------------------------------------------------------------------
+# corpus report ("datasheet for datasets" summary)
+# ---------------------------------------------------------------------------
+
+def corpus_report(df: DataFrame, group_cols: Sequence[str] = ("source",),
+                  id_col: str = "doc_id",
+                  text_col: str = "text") -> DataFrame:
+    """Per-group corpus datasheet: the governance numbers a dataset card
+    reports, from ONE pass over the corpus plus one fingerprint
+    aggregate —
+
+    - ``n_docs``, ``n_tokens``, ``mean_doc_tokens``,
+    - ``gopher_keep_rate`` and the three highest-signal rule hit-rates
+      (word count, repetition, stopwords),
+    - ``mojibake_rate`` (scrub audit) AND ``n_quarantined`` — the
+      per-group COUNT of documents the curation pipeline's stage 0
+      drops (``mojibake_hits > 0``, the quarantine disposition), so the
+      datasheet states how many documents the scrub removes from each
+      source, not just the signal average,
+    - ``exact_dup_rate``: fraction of documents whose content
+      fingerprint appears more than once corpus-wide (dup membership is
+      computed globally, then attributed to each group — a duplicate
+      spanning two sources counts in both, which is what a source-level
+      datasheet should say).
+
+    Shape: the signal scan is map-only (gopher + scrub audits fused);
+    the dup half is one fingerprint aggregate joined back on the 8-byte
+    fingerprint; the final rollup is one shuffle on ``group_cols``.
+    """
+    from .text import fingerprint, gopher_quality_filter, scrub_text
+
+    g = list(group_cols)
+    signals = gopher_quality_filter(
+        scrub_text(df, text_col, out_col="__scrubbed").drop("__scrubbed"),
+        text_col)
+    signals = fingerprint(signals, text_col)
+    dup_counts = (signals.groupBy("fingerprint")
+                  .agg(F.count(F.lit(1)).alias("__fp_n")))
+    joined = signals.join(dup_counts, "fingerprint")
+    rate = lambda c: F.avg(F.col(c).cast("double"))  # noqa: E731
+    return (
+        joined.groupBy(*g)
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_words").cast("long").alias("n_tokens"),
+            F.avg(F.col("n_words").cast("double")).alias("mean_doc_tokens"),
+            rate("keep").alias("gopher_keep_rate"),
+            rate("rule_word_count").alias("rule_word_count_rate"),
+            rate("rule_top_bigram").alias("rule_top_bigram_rate"),
+            rate("rule_stopwords").alias("rule_stopwords_rate"),
+            F.avg((F.col("mojibake_hits") > 0).cast("double"))
+            .alias("mojibake_rate"),
+            F.count(F.when(F.col("mojibake_hits") > 0, 1))
+            .alias("n_quarantined"),
+            F.avg((F.col("__fp_n") > 1).cast("double"))
+            .alias("exact_dup_rate"),
+        )
+    )

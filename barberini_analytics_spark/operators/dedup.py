@@ -386,8 +386,32 @@ def cross_corpus_overlap(train: DataFrame, evalset: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# segment and span dedup, incremental dedup against an existing corpus
+# retention policy + incremental dedup against an existing corpus
 # ---------------------------------------------------------------------------
+
+def dedup_keep_best(df: DataFrame, id_col: str, score_col: str,
+                    text_col: str = "text", **near_dup_kw) -> DataFrame:
+    """Near-dup dedup that keeps the BEST document of each group instead
+    of the arbitrary smallest-id representative.
+
+    A training-data pipeline rarely wants "keep any one": it keeps the
+    highest-quality member (longest, best quality score, freshest).
+    Survivor = ``max_by(id, (score, -id))`` per group — the id tiebreak
+    pins determinism when scores tie.  Returns the surviving rows of
+    ``df`` with ``group_size`` attached; one shuffle on the group id
+    beyond the grouping itself.
+    """
+    groups = near_dup_groups(df, id_col, text_col, **near_dup_kw)
+    scored = df.join(groups.select(id_col, "group_id", "group_size"),
+                     id_col)
+    best = (
+        scored.groupBy("group_id")
+        .agg(F.expr(
+            f"max_by({id_col}, struct({score_col} AS s,"
+            f" -{id_col} AS tie))").alias(id_col))
+    )
+    return scored.join(best, [id_col, "group_id"]).drop("group_id")
+
 
 def segment_documents(df: DataFrame, id_col: str, text_col: str = "text",
                       sep: str | None = None,

@@ -307,6 +307,32 @@ def bloom_probe(df: DataFrame, bloom: DataFrame,
             .drop("words", *[f"__p{i}" for i in range(k)]))
 
 
+def bloom_flag(df: DataFrame, bloom: DataFrame, item_col: str,
+               out_col: str = "might_be_member") -> DataFrame:
+    """Non-filtering Bloom probe: attach a boolean instead of dropping
+    rows, so callers can branch on BOTH polarities — ``NOT out_col`` is
+    the definitely-new set (no false negatives), ``out_col`` the
+    maybe-duplicate set that still needs exact confirmation.  Same
+    broadcast O(1) codegen probe as :func:`bloom_probe`; usable on a
+    streaming frame (the filter row is static, the probe stateless).
+    """
+    from ..core.cache import scoped_persist
+
+    bloom = scoped_persist(bloom)
+    meta = bloom.select("m_bits", "k").first()
+    m_bits, k = int(meta.m_bits), int(meta.k)
+    checks = " AND ".join(
+        f"(shiftright(element_at(words,"
+        f" CAST(({lehmer_sql(mix_sql(item_col), CMS_A[i % 4], CMS_B[i % 4] + i)}"
+        f" % {m_bits}) / 64 AS INT) + 1),"
+        f" CAST(({lehmer_sql(mix_sql(item_col), CMS_A[i % 4], CMS_B[i % 4] + i)}"
+        f" % {m_bits}) % 64 AS INT)) & 1) = 1"
+        for i in range(k))
+    return (df.crossJoin(F.broadcast(bloom.select("words")))
+            .withColumn(out_col, F.expr(checks))
+            .drop("words"))
+
+
 def histogram_bins(df: DataFrame, group_cols: Sequence[str],
                    value_col: str, n_bins: int = 256) -> DataFrame:
     """Per-group equi-width histogram: ``group_cols + (bin, n)`` plus the

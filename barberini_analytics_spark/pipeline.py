@@ -283,3 +283,65 @@ def fill_db(spark: SparkSession, sf_dir: str,
     written = fill_db_hourly(spark, sf_dir, warehouse)
     written.update(fill_db_daily(spark, sf_dir, warehouse))
     return written
+
+
+def curate_to_shards(spark: SparkSession, sf_dir: str, out_dir: str,
+                     shard_tokens: int = 50_000,
+                     scrub: bool = True,
+                     gopher: bool = False,
+                     lm_quantile: float | None = 0.95,
+                     targets: dict[str, float] | None = None,
+                     near_dup_max_bucket: int | None = None,
+                     span_k: int | None = None,
+                     quality_model: dict | None = None,
+                     quality_threshold: float = 0.5,
+                     seed: int = 42) -> dict[str, int]:
+    """The LLM-corpus counterpart of :func:`fill_db`: one call takes the
+    raw ``documents`` parquet through the full curation recipe
+    (scrub/quarantine → quality+LM gates → exact → segment → near-dup
+    dedup → optional mixing → leak-free split → token-budgeted packing,
+    ``operators/curation.curate_corpus``) and materializes self-contained
+    JSONL training shards per split under ``out_dir``
+    (``core/sinks.write_training_shards``).
+
+    Returns per-split document-copy counts.  Idempotent: every stage is
+    deterministic in (seed, id) and the shard write is an overwrite —
+    re-running reproduces byte-identical shard assignments.
+    """
+    from .core.cache import release_scoped, scope_mark, scoped_persist
+    from .core.io import load_table
+    from .core.sinks import write_training_shards
+    from .operators.curation import curate_corpus
+
+    # standalone invocations never hit the registry's release-on-entry
+    # hook, so free what THIS call registers (the curated frame plus
+    # curate_corpus's internal staging) before returning — otherwise the
+    # full curated corpus stays pinned in executor memory for the rest
+    # of the session.  Scoped to a mark so a caller's own scoped
+    # persists/checkpoints survive when this runs inside another query.
+    mark = scope_mark()
+
+    docs = load_table(spark, sf_dir, "documents")
+    curated = curate_corpus(
+        docs, source_col="source", lm_quantile=lm_quantile,
+        targets=targets, shard_tokens=shard_tokens, seed=seed,
+        scrub=scrub, gopher=gopher,
+        near_dup_max_bucket=near_dup_max_bucket, span_k=span_k,
+        quality_model=quality_model, quality_threshold=quality_threshold)
+    curated = scoped_persist(curated)
+    from .core.sinks import shard_manifest
+
+    try:
+        counts: dict[str, int] = {}
+        for split_id, name in enumerate(("train", "valid", "test")):
+            part = curated.filter(F.col("split") == split_id)
+            counts[name] = part.count()
+            if counts[name]:
+                write_training_shards(
+                    part.drop("split"), os.path.join(out_dir, name), "shard")
+                # per-shard verification manifest next to the shards
+                shard_manifest(part).coalesce(1).write.mode("overwrite") \
+                    .json(os.path.join(out_dir, f"{name}_manifest"))
+        return counts
+    finally:
+        release_scoped(since=mark)

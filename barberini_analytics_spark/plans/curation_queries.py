@@ -244,7 +244,8 @@ def corpus_quality_governance(spark: SparkSession, sf_dir: str) -> DataFrame:
       stratified_sample, ``flag_only`` audit form) — deterministic
       56-bit hash order, ``ceil(frac×n)`` per (lang, source) stratum,
       with a per-stratum keep-all override; membership itself is
-      hash-checked;
+      hash-checked.  Scale path: ``stratified_sample_threshold``
+      (map-only, no window) in tests/test_training_ops.py;
     - **temperature mixture** (operators/text.temperature_mixture) —
       α=0.5 per-source sampling weights / token allocation / epochs
       under a 1M-token budget, denormalized onto each document through

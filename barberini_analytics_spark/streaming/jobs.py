@@ -457,6 +457,60 @@ def enrich_stream(events: DataFrame, dim: DataFrame,
     return events.join(F.broadcast(dim), list(on), "left")
 
 
+def curate_stream(docs: DataFrame, corpus_bloom: DataFrame,
+                  min_tokens: int = 5, min_alpha_ratio: float = 0.0,
+                  watermark: str = "2 hours",
+                  text_col: str = "text",
+                  quality_model: dict | None = None,
+                  quality_threshold: float = 0.5) -> DataFrame:
+    """Streaming ingestion guard for a training corpus — the
+    stream-shaped front half of ``operators/curation.curate_corpus``:
+
+    1. content fingerprint (map-side md5, same key as the batch layer);
+    2. watermark dedup on the fingerprint — replays and near-in-time
+       exact duplicates are dropped with state bounded by the horizon;
+    3. novelty filter against the HISTORICAL corpus via a broadcast
+       Bloom filter (:func:`...operators.sketch.bloom_flag`): a miss is
+       definitely new and passes; a hit is dropped here (the configured
+       false-positive fraction of genuinely-new docs goes with it —
+       conservative by design, the batch reconcile pass recovers them
+       with the exact anti-join);
+    4. map-side quality gates (token count, alphabetic ratio), plus the
+       trained webtext filter when ``quality_model`` is given — the
+       classifier apply path is a stateless per-token fold against the
+       broadcast weights (``ml/logreg.py``; a plan literal up to
+       ``WEIGHT_LITERAL_MAX`` buckets, a one-row stream-static
+       broadcast table above it — both stateless, so streaming-legal
+       at any model size, test-pinned).
+
+    Heavier scoring (LM cross-entropy, near-dup LSH) stays in the batch
+    layer — those need corpus-level aggregation, which is exactly what a
+    stream can't do with bounded state.  Everything here is stateless or
+    watermark-bounded, so the guard runs indefinitely at ingest rate.
+    """
+    from ..operators.sketch import bloom_flag
+    from ..operators.text import fingerprint, quality_features
+
+    d = fingerprint(docs, text_col)
+    d = d.withWatermark("ts", watermark) \
+        .dropDuplicatesWithinWatermark(["fingerprint"])
+    d = bloom_flag(d, corpus_bloom, "fingerprint")
+    d = d.filter(~F.col("might_be_member")).drop("might_be_member")
+    d = quality_features(d, text_col)
+    d = (d.filter((F.col("n_tokens") >= min_tokens)
+                  & (F.col("alpha_ratio") >= min_alpha_ratio))
+         .drop("tokens", "n_chars", "n_distinct_tokens", "n_stopwords",
+               "mean_token_len", "stopword_ratio", "alpha_ratio",
+               "distinct_ratio"))
+    if quality_model is not None:
+        from ..ml.logreg import quality_classifier_score
+
+        d = (quality_classifier_score(d, quality_model, text_col)
+             .filter(F.col("quality_prob") >= quality_threshold)
+             .drop("quality_prob"))
+    return d
+
+
 def upsert_stream(events: DataFrame, path: str, pk: Sequence[str],
                   query_name: str = "upsert_stream") -> None:
     """Stream → keyed merge sink: each micro-batch lands through the K1

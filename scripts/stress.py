@@ -132,8 +132,16 @@ def main() -> None:
     run("mix_sources", X.mix_sources(
         mix_docs, "source", {f"s{i}": 1 / 6 for i in range(6)}), n_docs)
 
-    # map-only Gopher rule gate: pins the "scan-speed" claim
+    # round-7 additions — all map-only or single-aggregate shapes, so
+    # the figures pin "scan-speed" claims with measurements
+    from barberini_analytics_spark.operators import curation as CU
+
     run("gopher_filter", X.gopher_quality_filter(docs), n_docs)
+    run("scrub_text", X.scrub_text(docs), n_docs)
+    run("stratified_threshold", CU.stratified_sample_threshold(
+        events, ["event_type"], 0.1, "event_id"), n_events)
+    run("epoch_shards", CU.epoch_shards(
+        events, "event_id", epoch=1, n_shards=256), n_events)
 
     # PageRank: 4 out-edges/node power-iteration, 5 rounds
     from barberini_analytics_spark.operators.graph import pagerank

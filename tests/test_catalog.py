@@ -181,6 +181,40 @@ def test_broadcast_right_gated_by_join_side_legality(spark, catalog):
     assert rows(got_l) == rows(left.join(right, "k", "left"))
 
 
+def test_quality_model_rename_failure_restores_previous(spark, tmp_path,
+                                                        monkeypatch):
+    """ADVICE r11: if the swap's second rename fails after the old
+    model was moved aside, the old model must be restored at ``path``
+    (not stranded under a random __old_<uuid> dir with nothing at the
+    path)."""
+    from barberini_analytics_spark.ml import logreg
+
+    path = str(tmp_path / "model")
+    m1 = {"weights": [0.1, 0.2], "bias": 0.5, "dim": 2}
+    logreg.save_quality_model(spark, m1, path)
+    loaded = logreg.load_quality_model(spark, path)
+    assert loaded["bias"] == pytest.approx(0.5)
+
+    real_rename = os.rename
+
+    def failing_second_rename(src, dst):
+        if dst == path and "__tmp_" in src:
+            raise OSError("simulated rename failure")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing_second_rename)
+    with pytest.raises(OSError, match="simulated"):
+        logreg.save_quality_model(
+            spark, {"weights": [9.0, 9.0], "bias": 9.0, "dim": 2}, path)
+    monkeypatch.undo()
+
+    # previous model restored at path, no stray __old_ dirs left behind
+    restored = logreg.load_quality_model(spark, path)
+    assert restored["bias"] == pytest.approx(0.5)
+    strays = [d for d in os.listdir(tmp_path) if "__old_" in d]
+    assert strays == []
+
+
 def test_partition_facts_cached_and_rederivable(spark, catalog):
     """ANALYZE-once for shuffle sizing too: the key-frequency facts are
     probed once per (frame version, key set); a second apply_advice

@@ -315,3 +315,244 @@ def test_dbscan_chain_on_externally_written_embedding_parquet(spark,
             # singleton label groups legitimately have no pairwise cosine
             if r.sem_dup_of >= 0:
                 assert r.sem_max_cosine is not None
+
+
+# ---------------------------------------------------------------------------
+# trained quality classifier (hashed-feature logistic regression)
+# ---------------------------------------------------------------------------
+
+def _lr_fixture(spark):
+    import random
+
+    rng = random.Random(11)
+    clean = ["the", "museum", "opens", "a", "new", "exhibition", "about",
+             "modern", "art", "with", "guided", "tours", "every", "day"]
+    junk = ["click", "here", "buy", "now", "$$$", "free", "winner",
+            "@@@", "spam", "qqq"]
+    rows = [(i, " ".join(rng.choices(clean, k=rng.randint(8, 25))), 1.0)
+            for i in range(120)]
+    rows += [(i + 120, " ".join(rng.choices(junk, k=rng.randint(8, 25))), 0.0)
+             for i in range(120)]
+    return spark.createDataFrame(rows, ["doc_id", "text", "label"])
+
+
+def test_quality_classifier_separates_and_generalizes(spark):
+    from pyspark.sql import functions as F
+
+    from barberini_analytics_spark.ml.logreg import (
+        quality_classifier_score, train_quality_classifier)
+
+    df = _lr_fixture(spark)
+    model = train_quality_classifier(df, "doc_id", "label",
+                                     dim=128, iters=15)
+    scored = quality_classifier_score(df, model)
+    acc = scored.select(
+        ((F.col("quality_prob") > 0.5).cast("int")
+         == F.col("label").cast("int")).cast("int").alias("ok")) \
+        .agg(F.avg("ok")).first()[0]
+    assert acc >= 0.95
+    # held-out docs from the same distributions score on the right side
+    test = spark.createDataFrame([
+        (1000, "the museum opens guided tours about modern art"),
+        (1001, "click here free winner buy now spam"),
+    ], ["doc_id", "text"])
+    probs = {r.doc_id: r.quality_prob
+             for r in quality_classifier_score(test, model).collect()}
+    assert probs[1000] > 0.7 > 0.3 > probs[1001]
+
+
+def test_quality_classifier_apply_matches_sparse_training_path(spark):
+    """The map-only per-token fold and the trainer's sparse
+    Σ w_b·tf_b formulation must be the SAME number (modulo float
+    associativity) — otherwise the corpus-scale apply path scores a
+    different model than the one trained."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from barberini_analytics_spark.ml.logreg import (
+        hashed_token_counts, quality_classifier_score,
+        train_quality_classifier)
+
+    df = _lr_fixture(spark)
+    model = train_quality_classifier(df, "doc_id", "label",
+                                     dim=64, iters=5)
+    fast = {r.doc_id: r.quality_prob
+            for r in quality_classifier_score(df, model).collect()}
+    wt = spark.createDataFrame(
+        [(i, w) for i, w in enumerate(model["weights"])],
+        ["bucket", "__w"])
+    sparse = {
+        r.doc_id: 1.0 / (1.0 + math.exp(-(r.m + model["bias"])))
+        for r in hashed_token_counts(df, "doc_id", dim=64)
+        .join(wt, "bucket")
+        .groupBy("doc_id")
+        .agg(F.sum(F.col("cnt") * F.col("__w")).alias("m")).collect()}
+    assert set(fast) == set(sparse)
+    assert all(abs(fast[d] - sparse[d]) < 1e-9 for d in fast)
+
+
+def test_quality_classifier_featurization_is_portable_md5(spark):
+    """Bucket assignment is the engine-portable hash56 (md5) — pinned
+    against an independent hashlib computation so the featurization can
+    be reproduced outside Spark (e.g. to apply the model in another
+    engine)."""
+    import hashlib
+
+    from barberini_analytics_spark.ml.logreg import hashed_token_counts
+
+    df = spark.createDataFrame([(1, "alpha beta beta gamma")],
+                               ["doc_id", "text"])
+    rows = {r.bucket: r.cnt
+            for r in hashed_token_counts(df, "doc_id", dim=32).collect()}
+
+    def bucket(tok):
+        return int(hashlib.md5(tok.encode()).hexdigest()[:14], 16) % 32
+
+    expected = {}
+    for tok, n in (("alpha", 1.0), ("beta", 2.0), ("gamma", 1.0)):
+        b = bucket(tok)
+        expected[b] = expected.get(b, 0.0) + n
+    assert rows == expected
+
+
+def test_quality_classifier_apply_is_map_only(spark):
+    """The corpus-scale path must not shuffle: no Exchange, no UDF —
+    the weight array rides the plan as a bounded O(dim) literal."""
+    from barberini_analytics_spark.ml.logreg import quality_classifier_score
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    model = {"weights": [0.01] * 64, "bias": -0.5, "dim": 64}
+    plan = quality_classifier_score(docs, model)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "Exchange" not in plan, plan[:2000]
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_quality_classifier_empty_doc_scores_bias(spark):
+    import math
+
+    from barberini_analytics_spark.ml.logreg import quality_classifier_score
+
+    df = spark.createDataFrame([(1, "   "), (2, "")], ["doc_id", "text"])
+    model = {"weights": [5.0] * 16, "bias": -1.25, "dim": 16}
+    probs = {r.doc_id: r.quality_prob
+             for r in quality_classifier_score(df, model).collect()}
+    want = 1.0 / (1.0 + math.exp(1.25))
+    assert all(abs(p - want) < 1e-12 for p in probs.values())
+
+
+def test_quality_classifier_model_roundtrip(spark, tmp_path):
+    """save → load → score is the identity: the persisted parquet is
+    the build-once/apply-many handoff, so scores after a round trip are
+    bit-identical to the in-memory model's."""
+    from barberini_analytics_spark.ml.logreg import (
+        load_quality_model, quality_classifier_score, save_quality_model,
+        train_quality_classifier)
+
+    df = _lr_fixture(spark)
+    model = train_quality_classifier(df, "doc_id", "label",
+                                     dim=32, iters=4)
+    path = str(tmp_path / "qmodel")
+    save_quality_model(spark, model, path)
+    back = load_quality_model(spark, path)
+    assert back["dim"] == model["dim"]
+    assert back["bias"] == model["bias"]
+    assert back["weights"] == model["weights"]
+    a = {r.doc_id: r.quality_prob
+         for r in quality_classifier_score(df, model).collect()}
+    b = {r.doc_id: r.quality_prob
+         for r in quality_classifier_score(df, back).collect()}
+    assert a == b
+
+
+def test_quality_classifier_table_path_matches_literal(spark):
+    """Above the literal bound the weights ride a one-row broadcast
+    table; the fold must be the same number as the literal path (r10
+    advice: the ADC-LUT treatment for the classifier weights)."""
+    import random
+
+    from barberini_analytics_spark.ml.logreg import quality_classifier_score
+
+    rng = random.Random(7)
+    dim = 512
+    model = {"weights": [rng.uniform(-1, 1) for _ in range(dim)],
+             "bias": 0.3, "dim": dim}
+    df = _lr_fixture(spark).drop("label")
+    lit = {r.doc_id: r.quality_prob
+           for r in quality_classifier_score(
+               df, model, weight_literal_max=dim).collect()}
+    tab = {r.doc_id: r.quality_prob
+           for r in quality_classifier_score(
+               df, model, weight_literal_max=dim - 1).collect()}
+    assert set(lit) == set(tab)
+    assert all(abs(lit[d] - tab[d]) < 1e-12 for d in lit)
+    # the helper column must not leak into the output schema
+    cols = quality_classifier_score(
+        df, model, weight_literal_max=dim - 1).columns
+    assert "__qc_weights" not in cols
+
+
+def test_quality_classifier_plan_bounded_at_large_dim(spark):
+    """A dim=2^16 model must NOT inflate the plan: the weights are a
+    broadcast row (data), so plan text stays small and the scan side
+    still has no shuffle Exchange."""
+    from barberini_analytics_spark.ml.logreg import quality_classifier_score
+
+    dim = 1 << 16
+    model = {"weights": [0.0001] * dim, "bias": -0.5, "dim": dim}
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    out = quality_classifier_score(docs, model)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert len(plan) < 50_000, f"plan grew with dim: {len(plan)} chars"
+    assert "Exchange hashpartitioning" not in plan, plan[:2000]
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert out.count() > 0
+
+
+def test_load_quality_model_validates_torn_file(spark, tmp_path):
+    """A model parquet missing the bias row or with gapped buckets (the
+    state a torn overwrite can leave) raises a ValueError naming the
+    path, not a bare KeyError (r10 advice)."""
+    import pytest
+
+    from barberini_analytics_spark.ml.logreg import load_quality_model
+
+    no_bias = str(tmp_path / "no_bias")
+    spark.createDataFrame([(0, 0.1), (1, 0.2)], ["bucket", "weight"]) \
+        .write.parquet(no_bias)
+    with pytest.raises(ValueError, match="bias row"):
+        load_quality_model(spark, no_bias)
+
+    gapped = str(tmp_path / "gapped")
+    spark.createDataFrame([(-1, 0.0), (0, 0.1), (2, 0.2)],
+                          ["bucket", "weight"]).write.parquet(gapped)
+    with pytest.raises(ValueError, match="contiguous"):
+        load_quality_model(spark, gapped)
+
+    duped = str(tmp_path / "duped")
+    spark.createDataFrame([(-1, 0.0), (0, 0.1), (0, 0.2)],
+                          ["bucket", "weight"]).write.parquet(duped)
+    with pytest.raises(ValueError, match="duplicate"):
+        load_quality_model(spark, duped)
+
+
+def test_save_quality_model_swaps_via_rename(spark, tmp_path):
+    """Re-training over an existing local model leaves no temp/old
+    residue and the re-loaded model is the new one (the rename-swap
+    replacement path)."""
+    import os
+
+    from barberini_analytics_spark.ml.logreg import (
+        load_quality_model, save_quality_model)
+
+    path = str(tmp_path / "model")
+    save_quality_model(spark, {"weights": [1.0, 2.0], "bias": 0.5,
+                               "dim": 2}, path)
+    save_quality_model(spark, {"weights": [3.0, 4.0], "bias": -0.5,
+                               "dim": 2}, path)
+    back = load_quality_model(spark, path)
+    assert back == {"weights": [3.0, 4.0], "bias": -0.5, "dim": 2}
+    residue = [d for d in os.listdir(tmp_path)
+               if "__tmp_" in d or "__old_" in d]
+    assert residue == []

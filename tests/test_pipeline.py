@@ -142,3 +142,77 @@ def test_fill_db_hourly_table_failure_propagates(spark, tmp_path,
     assert os.path.exists(os.path.join(wh, "fb_post_performance"))
     assert os.path.exists(os.path.join(wh, "tweet_performance"))
     assert not os.path.exists(os.path.join(wh, "ig_post_performance"))
+
+
+def test_curate_to_shards_end_to_end(spark, sf_dir, tmp_path):
+    """One call: raw documents parquet -> curated JSONL training shards
+    per split, idempotent across re-runs."""
+    import glob
+    import json as _json
+
+    from barberini_analytics_spark.pipeline import curate_to_shards
+
+    out = str(tmp_path / "corpus")
+    counts = curate_to_shards(spark, sf_dir, out, shard_tokens=2_000,
+                              lm_quantile=None)
+    assert counts["train"] > 0
+    assert sum(counts.values()) > 0
+    files = glob.glob(f"{out}/train/shard=*/part-*.json")
+    assert files
+    rec = _json.loads(open(files[0]).readline())
+    # `shard` lives in the partition directory (shard=N), not the record
+    assert {"doc_id", "text", "n_tokens", "copy_id"} <= set(rec)
+    # idempotence: identical counts and identical shard assignment
+    counts2 = curate_to_shards(spark, sf_dir, out, shard_tokens=2_000,
+                               lm_quantile=None)
+    assert counts2 == counts
+    back = spark.read.json(f"{out}/train")
+    pairs = {(r.doc_id, r.shard) for r in back.select("doc_id", "shard")
+             .collect()}
+    assert len(pairs) == counts["train"]
+
+
+def test_curate_stage_profile_matches_fused_pipeline(spark):
+    """The per-stage profiler runs the SAME stage list as curate_corpus
+    (one _curation_stages definition serves both), so its final rows_out
+    must equal the fused pipeline's count, stage names must cover the
+    full recipe in order, and gate/dedup stages can only shrink the
+    corpus (rows_out <= rows_in) until the copy-attach."""
+    from barberini_analytics_spark.core.io import load_table
+    from barberini_analytics_spark.operators.curation import (
+        curate_corpus, curate_stage_profile)
+
+    docs = load_table(spark, SF_DIR, "documents")
+    before = {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs()
+              .keySet().toArray()}
+    prof = curate_stage_profile(docs, source_col="source", scrub=True,
+                                shard_tokens=50_000)
+    # no-leak contract: boundary checkpoints are freed as the next one
+    # materializes, and stage-INTERNAL scoped checkpoints (per-round
+    # label propagation) are released via the scope mark on exit — a
+    # standalone profiler call must pin nothing for the session
+    after = {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs()
+             .keySet().toArray()}
+    assert after <= before, f"profiler leaked persisted RDDs: {after - before}"
+    assert [p["stage"] for p in prof] == [
+        "scrub", "gates", "exact_dedup", "segment_dedup", "near_dup",
+        "mix", "split", "pack"]
+    for p in prof:
+        assert p["sec"] >= 0 and p["loadavg1m"] is not None
+        # checkpointed boundaries bound every stage's plan tree to ONE
+        # stage — the r9 persist-only profiler compounded self-join
+        # subtrees past the JVM's 1 GiB plan-string limit (1.14e9 chars
+        # at this very SF); any lineage leak would show up here first
+        assert 0 < p["plan_chars"] < 2_000_000, (p["stage"],
+                                                 p["plan_chars"])
+        if p["stage"] in ("scrub", "gates", "exact_dedup",
+                          "segment_dedup", "near_dup"):
+            assert p["rows_out"] <= p["rows_in"], p
+        if p["stage"] in ("split", "pack"):  # grain-preserving stages
+            assert p["rows_out"] == p["rows_in"], p
+    # boundaries chain: each stage consumes the previous stage's output
+    for a, b in zip(prof, prof[1:]):
+        assert a["rows_out"] == b["rows_in"]
+    fused = curate_corpus(docs, source_col="source", scrub=True,
+                          shard_tokens=50_000).count()
+    assert prof[-1]["rows_out"] == fused

@@ -159,6 +159,30 @@ def test_upsert_schema_evolution_adds_column(spark, tmp_path):
     assert got == {1: ("a", None), 2: ("b2", "extra"), 3: ("c", "more")}
 
 
+def test_shard_manifest_checksums_membership(spark):
+    from barberini_analytics_spark.core.sinks import shard_manifest
+
+    df = spark.createDataFrame(
+        [(i, i % 3, 10 + i) for i in range(60)],
+        ["doc_id", "shard", "n_tokens"])
+    m = {r.shard: r for r in shard_manifest(df).collect()}
+    assert {r for r in m} == {0, 1, 2}
+    assert all(m[s].n_docs == 20 for s in m)
+    # order/partitioning independence
+    m2 = {r.shard: r.membership_checksum
+          for r in shard_manifest(df.repartition(7)).collect()}
+    assert m2 == {s: m[s].membership_checksum for s in m}
+    # membership sensitivity: swapping one doc between shards changes
+    # BOTH shard checksums
+    swapped = df.withColumn(
+        "shard", F.when(F.col("doc_id") == 0, 1).otherwise(F.col("shard")))
+    m3 = {r.shard: r.membership_checksum
+          for r in shard_manifest(swapped).collect()}
+    assert m3[0] != m[0].membership_checksum
+    assert m3[1] != m[1].membership_checksum
+    assert m3[2] == m[2].membership_checksum
+
+
 def test_analyze_table_one_pass_stats(spark, sf_dir):
     from barberini_analytics_spark.core.io import load_table
     from barberini_analytics_spark.core.stats import analyze_table
@@ -275,6 +299,34 @@ def test_join_advice_matches_spark_plan_choice(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+
+
+def test_shard_manifest_distinguishes_replicated_copies(spark):
+    """mix_sources replicates doc_ids (copy_id disambiguates); two copies
+    of the same id must NOT XOR-cancel, and shards differing only in
+    which copies they hold must get different checksums."""
+    from barberini_analytics_spark.core.sinks import shard_manifest
+
+    two_copies = spark.createDataFrame(
+        [("d", 0, 0, 5), ("d", 1, 0, 5), ("x", 0, 0, 5)],
+        ["doc_id", "copy_id", "shard", "n_tokens"])
+    lone = spark.createDataFrame(
+        [("x", 0, 0, 5)], ["doc_id", "copy_id", "shard", "n_tokens"])
+    [a] = shard_manifest(two_copies).collect()
+    [b] = shard_manifest(lone).collect()
+    assert a.membership_checksum != b.membership_checksum
+
+    swapped_copy = spark.createDataFrame(
+        [("d", 0, 0, 5), ("x", 0, 0, 5), ("d", 1, 1, 5)],
+        ["doc_id", "copy_id", "shard", "n_tokens"])
+    other_copy = spark.createDataFrame(
+        [("d", 1, 0, 5), ("x", 0, 0, 5), ("d", 0, 1, 5)],
+        ["doc_id", "copy_id", "shard", "n_tokens"])
+    ca = {r.shard: r.membership_checksum
+          for r in shard_manifest(swapped_copy).collect()}
+    cb = {r.shard: r.membership_checksum
+          for r in shard_manifest(other_copy).collect()}
+    assert ca[0] != cb[0] and ca[1] != cb[1]
 
 
 def test_partition_advice_sizing_and_skew(spark):

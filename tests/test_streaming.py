@@ -254,6 +254,137 @@ def test_attribution_stream_stream_join_matches_batch(spark, batch_events):
     assert len(expect) > 0  # the fixture must actually exercise the join
 
 
+def test_curate_stream_matches_batch_guard(spark, tmp_path):
+    """Streaming ingestion guard vs its batch equivalent: fingerprint
+    dedup + Bloom novelty + quality gates."""
+    import datetime
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from barberini_analytics_spark.operators.dedup import fingerprint_index
+
+    t0 = datetime.datetime(2024, 1, 1)
+    rows = []
+    # 8 new docs, one in-stream replay (doc 3 again), one historical dup,
+    # one too-short doc
+    for i in range(8):
+        rows.append((i, t0 + datetime.timedelta(minutes=i),
+                     f"fresh document number {i} with several words d{i}"))
+    rows.append((100, t0 + datetime.timedelta(minutes=20),
+                 "fresh document number 3 with several words d3"))  # replay
+    rows.append((101, t0 + datetime.timedelta(minutes=21),
+                 "historical content already in the corpus index"))
+    rows.append((102, t0 + datetime.timedelta(minutes=22), "too short"))
+    d = tmp_path / "docfeed"
+    d.mkdir()
+    pq.write_table(pa.Table.from_pandas(pd.DataFrame(
+        rows, columns=["doc_id", "ts", "text"])), str(d / "f1.parquet"),
+        coerce_timestamps="us")  # pandas default is NANOS — unreadable
+                                 # by Spark's vectorized reader
+
+    corpus = spark.createDataFrame(
+        [(1, "historical content already in the corpus index")],
+        ["doc_id", "text"])
+    _, bloom = fingerprint_index(corpus, "doc_id")
+
+    schema = spark.read.parquet(str(d)).schema
+    stream = (spark.readStream.schema(schema).parquet(str(d))
+              # pandas naive datetimes land as NTZ; watermark needs
+              # session-tz TIMESTAMP (identity under the UTC session tz)
+              .withColumn("ts", F.col("ts").cast("timestamp")))
+    got = SJ.run_available_now(
+        SJ.curate_stream(stream, bloom, min_tokens=4), "curated",
+        output_mode="append").toPandas()
+    ids = sorted(got["doc_id"].tolist())
+    # 8 fresh docs pass; replay of doc 3's content, the historical dup,
+    # and the short doc are dropped
+    assert ids == list(range(8))
+    assert "fingerprint" in got.columns and "n_tokens" in got.columns
+
+
+def test_curate_stream_trained_quality_gate(spark, tmp_path):
+    """The trained webtext filter runs inside the streaming guard: the
+    classifier apply path is a stateless map-only fold, so it composes
+    with watermark dedup + Bloom novelty without new state."""
+    import datetime
+    import random
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from barberini_analytics_spark.ml.logreg import (
+        train_quality_classifier)
+    from barberini_analytics_spark.operators.dedup import fingerprint_index
+
+    rng = random.Random(3)
+    clean_v = ["museum", "opens", "new", "exhibition", "modern", "art",
+               "guided", "tours", "visitors", "enjoy"]
+    junk_v = ["click", "here", "buy", "now", "free", "winner", "spam",
+              "offer", "cash", "prize"]
+    labeled = spark.createDataFrame(
+        [(i, " ".join(rng.choices(clean_v, k=12)), 1.0)
+         for i in range(60)]
+        + [(i + 60, " ".join(rng.choices(junk_v, k=12)), 0.0)
+           for i in range(60)],
+        ["doc_id", "text", "label"])
+    model = train_quality_classifier(labeled, "doc_id", "label",
+                                     dim=64, iters=10)
+
+    t0 = datetime.datetime(2024, 1, 1)
+    rows = [
+        (1, t0, " ".join(rng.choices(clean_v, k=15))),
+        (2, t0 + datetime.timedelta(minutes=1),
+         " ".join(rng.choices(junk_v, k=15))),
+        (3, t0 + datetime.timedelta(minutes=2),
+         " ".join(rng.choices(clean_v, k=15))),
+    ]
+    d = tmp_path / "feed"
+    d.mkdir()
+    pq.write_table(pa.Table.from_pandas(pd.DataFrame(
+        rows, columns=["doc_id", "ts", "text"])), str(d / "f1.parquet"),
+        coerce_timestamps="us")
+    corpus = spark.createDataFrame([(0, "unrelated historical doc")],
+                                   ["doc_id", "text"])
+    _, bloom = fingerprint_index(corpus, "doc_id")
+    schema = spark.read.parquet(str(d)).schema
+    stream = (spark.readStream.schema(schema).parquet(str(d))
+              .withColumn("ts", F.col("ts").cast("timestamp")))
+    got = SJ.run_available_now(
+        SJ.curate_stream(stream, bloom, min_tokens=4,
+                         quality_model=model), "curated_q",
+        output_mode="append").toPandas()
+    assert sorted(got["doc_id"].tolist()) == [1, 3]
+    assert "quality_prob" not in got.columns
+
+
+def test_quality_gate_table_path_is_streaming_legal(spark, tmp_path):
+    """Models above WEIGHT_LITERAL_MAX score through a one-row broadcast
+    table (stream-static broadcast join) — stateless, so the ingestion
+    guard stays streaming-legal at any model size, not just literal-size
+    ones."""
+    from barberini_analytics_spark.ml.logreg import quality_classifier_score
+
+    src = tmp_path / "src"
+    src.mkdir()
+    spark.createDataFrame([(1, "good text here"), (2, "click free spam")],
+                          ["doc_id", "text"]) \
+        .write.parquet(str(src / "batch1"))
+    stream = spark.readStream.schema("doc_id long, text string") \
+        .parquet(str(src / "*"))
+    model = {"weights": [0.01] * 8192, "bias": -0.5, "dim": 8192}
+    q = quality_classifier_score(stream, model).writeStream \
+        .format("memory").queryName("qgate_table") \
+        .trigger(availableNow=True).start()
+    q.awaitTermination(120)
+    rows = spark.sql(
+        "select doc_id, quality_prob from qgate_table").collect()
+    assert len(rows) == 2
+    assert all(0.0 < r.quality_prob < 1.0 for r in rows)
+
+
 def test_landing_slices_drain_constant_state(spark, tmp_path):
     """The streaming scale curve's machinery, pinned at smoke scale:
     ``time_extended_event_slices`` writes constant-row time-ordered
