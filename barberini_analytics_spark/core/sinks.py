@@ -33,6 +33,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import uuid
 from collections.abc import Sequence
 from functools import reduce
 
@@ -75,17 +76,27 @@ def overwrite(df: DataFrame, path: str,
               partition_cols: Sequence[str] | None = None) -> int:
     """K2 snapshot overwrite via staging swap (safe even if ``df`` reads
     from ``path``: the plan is fully materialized into staging first).
-    Returns the rows written."""
+    Returns the rows written.
+
+    The live table is moved aside under a name unique to this call, so a
+    backup stranded by an earlier killed run never blocks the swap; if
+    the staging rename then fails, the backup goes back to ``path``
+    before the error propagates."""
     staging = tempfile.mkdtemp(prefix="__staging_", dir=os.path.dirname(path) or ".")
     try:
         writer = df.write.mode("overwrite")
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         writer.parquet(staging)
-        backup = path + ".__old__"
+        backup = f"{path}.__old_{uuid.uuid4().hex}"
         if _exists(path):
             os.rename(path, backup)
-        os.rename(staging, path)
+        try:
+            os.rename(staging, path)
+        except OSError:
+            if _exists(backup):
+                os.rename(backup, path)
+            raise
         if _exists(backup):
             shutil.rmtree(backup)
     finally:
@@ -214,61 +225,3 @@ def shuffle_sample(df: DataFrame, n: int, seed: int = 42,
     order = F.md5(F.concat_ws("|", F.lit(str(seed)),
                               *[F.col(c).cast("string") for c in keys]))
     return df.orderBy(order, *keys).limit(n)
-
-
-def write_training_shards(df: DataFrame, path: str,
-                          shard_col: str = "shard",
-                          max_records_per_file: int | None = None) -> None:
-    """Export a packed corpus as shard-partitioned JSONL — the layout
-    training jobs stream (one directory per shard, newline-delimited
-    JSON inside).
-
-    Pairs with ``operators.text.assign_token_shards``: partitioning by
-    the shard id makes each shard a self-contained directory a data
-    loader can claim atomically; ``max_records_per_file`` caps file size
-    inside a shard (Spark splits files, loaders often don't).
-    """
-    writer = df.write.mode("overwrite").partitionBy(shard_col)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.json(path)
-
-
-def shard_manifest(df: DataFrame, shard_col: str = "shard",
-                   id_col: str = "doc_id",
-                   token_col: str = "n_tokens") -> DataFrame:
-    """Per-shard manifest for a packed corpus: document count, token
-    total, and an order-independent membership checksum (XOR of the
-    56-bit id hashes — associative, commutative, overflow-free, so the
-    aggregate needs no sort, map-side-combines, and any engine with
-    ``bit_xor`` re-derives it).
-
-    A training job that claims shard directories verifies each one
-    against this manifest (count + tokens + checksum) before use — the
-    reproducibility contract for multi-epoch runs.  One hash aggregate
-    on the shard id; write it next to the shards as a single small
-    parquet/JSON.
-
-    When the frame carries a ``copy_id`` (``mix_sources`` replicates
-    documents, so one shard can legitimately hold several copies of the
-    same id), the checksum hashes the FULL copy identity — identical
-    bare ids would XOR-cancel pairwise and two shards differing only in
-    which copies they hold would collide.
-    """
-    from pyspark.sql import functions as F
-
-    from ..operators.text import hash56
-
-    identity = F.col(id_col).cast("string")
-    if "copy_id" in df.columns:
-        identity = F.concat_ws("|", identity,
-                               F.col("copy_id").cast("string"))
-    member = hash56(identity)
-    return (
-        df.groupBy(shard_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(token_col).cast("long").alias("n_tokens"),
-            F.bit_xor(member).alias("membership_checksum"),
-        )
-    )

@@ -18,7 +18,7 @@ only where values must equal the reference's stored ids.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .text import hash112, hash56
+from .text import hash56
 
 
 # ---------------------------------------------------------------------------
@@ -296,52 +296,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str = "text",
 
 
 # ---------------------------------------------------------------------------
-# near-duplicate group resolution (pairs → transitive groups)
-# ---------------------------------------------------------------------------
-
-def near_dup_groups(df: DataFrame, id_col: str, text_col: str = "text",
-                    k: int = 3, num_perm: int = 8, bands: int = 4,
-                    threshold: float = 0.5,
-                    max_bucket: int | None = None) -> DataFrame:
-    """Resolve verified near-dup PAIRS into transitive GROUPS and pick one
-    representative per group — the step a 100 TB dedup actually keeps:
-    "A≈B and B≈C" must collapse to ONE surviving document even when A and
-    C never met in any LSH bucket.
-
-    Pipeline: MinHash-LSH verified pairs (:func:`minhash_near_duplicates`)
-    → connected components (``operators/graph.py``, min-label
-    propagation — no driver collect) → group id = smallest member id,
-    representative = that member, group size attached.  Documents with no
-    near-dup form singleton groups, so the output is a total map
-    ``id → group`` and ``filter(is_representative)`` IS the deduplicated
-    corpus.
-
-    Returns ``(id_col, group_id, group_size, is_representative)``.
-    """
-    from .graph import connected_components
-
-    pairs = minhash_near_duplicates(df, id_col, text_col, k=k,
-                                    num_perm=num_perm, bands=bands,
-                                    threshold=threshold,
-                                    max_bucket=max_bucket)
-    nodes = df.select(F.col(id_col).alias("id"))
-    comp = connected_components(
-        nodes, pairs.select(F.col("id_a").alias("id1"),
-                            F.col("id_b").alias("id2")),
-        id_col="id", symmetrize=True)
-    from pyspark.sql import Window as W
-
-    sized = comp.withColumn(
-        "group_size",
-        F.count(F.lit(1)).over(W.partitionBy("label")).cast("long"))
-    return sized.select(
-        F.col("id").alias(id_col),
-        F.col("label").alias("group_id"),
-        "group_size",
-        (F.col("id") == F.col("label")).alias("is_representative"))
-
-
-# ---------------------------------------------------------------------------
 # eval-contamination detection (cross-corpus n-gram overlap)
 # ---------------------------------------------------------------------------
 
@@ -386,32 +340,8 @@ def cross_corpus_overlap(train: DataFrame, evalset: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# retention policy + incremental dedup against an existing corpus
+# segment and span dedup, incremental dedup against an existing corpus
 # ---------------------------------------------------------------------------
-
-def dedup_keep_best(df: DataFrame, id_col: str, score_col: str,
-                    text_col: str = "text", **near_dup_kw) -> DataFrame:
-    """Near-dup dedup that keeps the BEST document of each group instead
-    of the arbitrary smallest-id representative.
-
-    A training-data pipeline rarely wants "keep any one": it keeps the
-    highest-quality member (longest, best quality score, freshest).
-    Survivor = ``max_by(id, (score, -id))`` per group — the id tiebreak
-    pins determinism when scores tie.  Returns the surviving rows of
-    ``df`` with ``group_size`` attached; one shuffle on the group id
-    beyond the grouping itself.
-    """
-    groups = near_dup_groups(df, id_col, text_col, **near_dup_kw)
-    scored = df.join(groups.select(id_col, "group_id", "group_size"),
-                     id_col)
-    best = (
-        scored.groupBy("group_id")
-        .agg(F.expr(
-            f"max_by({id_col}, struct({score_col} AS s,"
-            f" -{id_col} AS tie))").alias(id_col))
-    )
-    return scored.join(best, [id_col, "group_id"]).drop("group_id")
-
 
 def segment_documents(df: DataFrame, id_col: str, text_col: str = "text",
                       sep: str | None = None,

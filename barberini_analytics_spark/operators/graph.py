@@ -2,7 +2,8 @@
 
 The shared graph core under two pipeline operators: the LSH-DBSCAN
 cluster step (``ml/dbscan.py`` — components of the core-core ε-graph) and
-near-duplicate group resolution (``operators/dedup.py:near_dup_groups`` —
+near-duplicate group resolution in the registered
+``minhash_near_duplicates`` query (``plans/dedup_queries.py`` —
 transitive closure over verified similar pairs, the step that turns
 pairwise "A≈B, B≈C" into one dedup group {A, B, C} even when A and C
 never collided in any LSH bucket).

@@ -1134,58 +1134,3 @@ def temperature_mixture(df: DataFrame, source_col: str, token_col: str,
                     * token_budget / F.col("n_tokens"), 6).alias("epochs"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# unicode scrubbing (web-corpus text normalization, ftfy-lite)
-# ---------------------------------------------------------------------------
-
-#: common UTF-8-read-as-Latin-1 mojibake markers (the ftfy core cases):
-#: 'A~'+continuation (e/u/n...), 'a^EUR'+punct (smart quotes/dashes)
-_MOJIBAKE_RE = ("(\u00c3[\u0080-\u00bf]|\u00e2\u0080[\u0090-\u00be]"
-                "|\u00c2[\u00a0-\u00bf])")
-
-#: zero-width and directionality characters that poison tokenizers
-_ZERO_WIDTH_RE = ("[\u200b\u200c\u200d\u2060\ufeff"
-                  "\u202a-\u202e\u2066-\u2069]")
-
-#: C0/C1 control characters except tab/newline/carriage-return
-_CONTROL_RE = "[\u0000-\u0008\u000b\u000c\u000e-\u001f\u007f-\u009f]"
-
-#: exotic whitespace collapsed to ASCII space (NBSP, ogham, en/em/thin/
-#: ideographic spaces, narrow NBSP, line/paragraph separators)
-_WS_EXOTIC_RE = "[\u00a0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
-
-
-def scrub_text(df: DataFrame, text_col: str = "text",
-               out_col: str | None = None) -> DataFrame:
-    """Web-corpus text normalization as ONE codegen expression chain —
-    the deterministic subset of ftfy that a 100 TB pre-tokenization pass
-    actually needs, with an audit column:
-
-    - strip zero-width/bidi characters and C0/C1 controls,
-    - collapse exotic whitespace (NBSP, thin/ideographic spaces) to ' ',
-    - normalize curly quotes, en/em dashes, and the ellipsis character
-      to their ASCII forms (tokenizer-vocabulary friendly),
-    - ``mojibake_hits``: count of UTF-8-as-Latin-1 damage markers
-      (\u00c3/\u00e2\u0080/\u00c2 sequences).  Repair needs a real
-      encoding round-trip (bytes-level, not expressible in codegen), so
-      damaged documents are FLAGGED for a quarantine/re-decode path
-      rather than silently "fixed" wrong — the honest contract at scale.
-
-    Map-only, no UDF: every step is ``regexp_replace``/``translate``
-    inside whole-stage codegen at scan speed.
-    """
-    out = out_col or text_col
-    t = F.col(text_col)
-    hits = F.size(F.regexp_extract_all(t, F.lit(_MOJIBAKE_RE), 0))
-    cleaned = F.regexp_replace(t, _ZERO_WIDTH_RE, "")
-    cleaned = F.regexp_replace(cleaned, _CONTROL_RE, "")
-    cleaned = F.regexp_replace(cleaned, _WS_EXOTIC_RE, " ")
-    cleaned = F.translate(
-        cleaned,
-        "\u2018\u2019\u201a\u201c\u201d\u201e\u2013\u2014\u2212",
-        "\'\'\'\"\"\"---")
-    cleaned = F.regexp_replace(cleaned, "\u2026", "...")
-    return (df.withColumn("mojibake_hits", hits)
-            .withColumn(out, cleaned))

@@ -8,7 +8,7 @@ are integer decipoints so every aggregate is exact until one final division.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..core.io import load_table
 from ..core.localrel import values_df

@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..core.io import load_table
 from ..operators import curation as C
 from ..operators import dedup as D
-from ..operators import similarity as S
 from ..operators import text as X
 from .registry import query
 
@@ -244,8 +243,7 @@ def corpus_quality_governance(spark: SparkSession, sf_dir: str) -> DataFrame:
       stratified_sample, ``flag_only`` audit form) — deterministic
       56-bit hash order, ``ceil(frac×n)`` per (lang, source) stratum,
       with a per-stratum keep-all override; membership itself is
-      hash-checked.  Scale path: ``stratified_sample_threshold``
-      (map-only, no window) in tests/test_training_ops.py;
+      hash-checked;
     - **temperature mixture** (operators/text.temperature_mixture) —
       α=0.5 per-source sampling weights / token allocation / epochs
       under a 1M-token budget, denormalized onto each document through

@@ -422,8 +422,7 @@ def minhash_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``operators/graph.py`` min-label propagation).  The oracle re-derives
     the closure independently with a recursive CTE, so the group
     resolution — "A≈B and B≈C collapse to one group even though A and C
-    never met in a bucket" — is hash-checked, not just unit-tested (the
-    full total-map operator is :func:`operators.dedup.near_dup_groups`).
+    never met in a bucket" — is hash-checked, not just unit-tested.
 
     Candidate generation is the banded bucket join — never an all-pairs
     comparison; at 100 TB the bucket join is the only shuffle that grows

@@ -17,7 +17,7 @@ Determinism notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..core.io import load_table
 from ..domain import views as V

@@ -8,7 +8,7 @@ oracle can hash-check them.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..core.io import load_table
 from ..operators import relational as R

@@ -64,21 +64,26 @@ def proc_tree_cpu_seconds(root_pid: int | None = None) -> float:
     return total / _CLK_TCK
 
 
-def load_prior_bench(here: str) -> tuple[str | None, dict[str, float]]:
-    """Per-query timings from the newest driver-recorded BENCH_r*.json —
-    the round-over-round comparison base for the regressions section."""
+def load_prior_bench(here: str,
+                     cpus: str) -> tuple[str | None, dict[str, float]]:
+    """Per-query timings from the newest driver-recorded BENCH_r<N>.json or
+    BENCH_r<N>_c<k>.json whose wrapper ``cpus`` equals ``cpus`` — the
+    round-over-round comparison base for the regressions and sweep-creep
+    gates.  A record taken at another width measures the host, not the
+    code, so with no same-width record there is no base."""
     rounds = []
     for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
+        m = re.search(r"BENCH_r(\d+)(?:_c\d+)?\.json$", path)
         if m:
             rounds.append((int(m.group(1)), path))
     for _, path in sorted(rounds, reverse=True):
         try:
             with open(path) as fh:
                 rec = json.load(fh)
+            if str(rec.get("cpus")) != cpus:
+                continue
             # the driver wraps the parsed bench line under "parsed"
-            queries = (rec.get("queries")
-                       or (rec.get("parsed") or {}).get("queries") or {})
+            queries = (rec.get("parsed") or {}).get("queries") or {}
             if queries:
                 return os.path.basename(path), {
                     k: float(v) for k, v in queries.items()}
@@ -246,7 +251,8 @@ def main() -> None:
     # is emitted even when empty, so every round's artifact answers
     # "did anything regress?" explicitly.
     prior_file, prior = load_prior_bench(
-        os.path.dirname(os.path.abspath(__file__)))
+        os.path.dirname(os.path.abspath(__file__)),
+        os.environ.get("SPARK_GRAFT_CPUS", "32"))
     regress_deadline = repeat_deadline + 120
     flagged = [
         n for n in sorted(timings)
@@ -449,9 +455,8 @@ def main() -> None:
     # so round-over-round totals stay comparable): the distributed
     # fallbacks that production routes to past the driver gates —
     # sharded-GSDMM (applyInPandas, one model per hash shard), LSH-DBSCAN
-    # (SRP ε-graph + label propagation), Arrow PQ encode, the window-free
-    # stratified sampler, epoch sharding, and the full curate_to_shards
-    # corpus pipeline — run here against the real bench corpus with the
+    # (SRP ε-graph + label propagation), Arrow PQ encode and the IVF-PQ
+    # search grid — run here against the real bench corpus with the
     # gates forced down, so their wall time and shuffle behavior are
     # measured under bench conditions, not just asserted in unit tests.
     # NB: at sf0.1 several of these are job-latency bound (hundreds of
@@ -489,121 +494,7 @@ def main() -> None:
     from barberini_analytics_spark.ml.dbscan import dbscan_distributed
     from barberini_analytics_spark.ml.gsdmm import fit_topics_sharded
     from barberini_analytics_spark.core.io import load_table
-    from barberini_analytics_spark.operators import curation as CUR
     from barberini_analytics_spark.plans.ml_queries import _topic_tokens
-
-    # per-stage breakdown of the curation pipeline — runs FIRST among the
-    # scale paths (r10 verdict item 2: the deadline-downgrade logic kept
-    # silently demoting it to sf0.01 because it ran last; at this point
-    # elapsed() is just the sweeps, so the sf0.1 attribution the verdict
-    # asked for actually lands in the artifact).  Each boundary is an
-    # eager localCheckpoint (truncates lineage so self-join-heavy stages
-    # can't compound the plan string past the JVM limit), with rows
-    # in/out and plan_chars per stage — the dominant stage is measured
-    # per round, not assumed.  The sf0.01 downgrade remains only as a
-    # last-resort guard for a pathologically eaten window, and stamps
-    # which SF ran.
-    try:
-        profile_dir = sf_dir
-        profile_budget = float(
-            os.environ.get("BENCH_PROFILE_SF_BUDGET", "430"))
-        at_start = round(elapsed(), 1)
-        if at_start > profile_budget:
-            smaller = os.path.join(
-                os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
-            if os.path.isdir(smaller) and smaller != sf_dir:
-                profile_dir = smaller
-        t0 = time.perf_counter()
-        # span_k=25: the profile also times the substring-span dedup
-        # stage (r10) under bench conditions; 25 (vs the Lee et al.
-        # production 50) matches the bench corpus' shorter documents
-        stage_rows = CUR.curate_stage_profile(
-            load_table(spark, profile_dir, "documents"),
-            source_col="source", scrub=True, shard_tokens=50_000,
-            span_k=25)
-        scale_timings["scale_curate_stage_profile"] = {
-            "sec": round(time.perf_counter() - t0, 3),
-            "sf_dir": os.path.basename(profile_dir.rstrip("/")),
-            "elapsed_at_start": at_start,
-            "stages": stage_rows,
-        }
-    except Exception as exc:  # noqa: BLE001
-        scale_timings["scale_curate_stage_profile"] = {
-            "error": f"{type(exc).__name__}: {exc}",
-            "sf_dir": os.path.basename(profile_dir.rstrip("/")),
-            "elapsed_at_failure": round(elapsed(), 1)}
-    write_detail()
-
-    # ------------------------------------------------------------------
-    # Full-recipe training + stage attribution EARLY (r11 verdict item
-    # 5): this profile ran LAST in r11 and the deadline guard downgraded
-    # it to sf0.01 every round — budgeting it before the ANN grid is
-    # what actually lands the sf0.1 attribution in the artifact.  The
-    # trained model is reused by the full-recipe end-to-end run at the
-    # bottom of the file.
-    # ------------------------------------------------------------------
-    from pyspark.sql import functions as F
-    from barberini_analytics_spark.ml.logreg import train_quality_classifier
-
-    docs = load_table(spark, sf_dir, "documents")
-    qmodel = None
-    try:
-        t0 = time.perf_counter()
-        pos = docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(10)) == 0) \
-            .select("doc_id", "text", F.lit(1.0).alias("label")).limit(300)
-        junk_words = F.array(*[F.lit(w) for w in (
-            "click", "free", "winner", "buy", "now", "$$$", "@@@",
-            "spam", "qqq", "zzz")])
-        # negative ids stay in the documents table's BIGINT id space
-        # (negative range cannot collide with real doc_ids)
-        neg = spark.range(300).select(
-            (-(F.col("id") + 1)).alias("doc_id"),
-            F.concat_ws(" ", F.transform(
-                F.sequence(F.lit(1), F.lit(20)),
-                lambda i: F.element_at(
-                    junk_words,
-                    (F.pmod(F.col("id") * 13 + i * 7, 10) + 1)
-                    .cast("int")))).alias("text"),
-            F.lit(0.0).alias("label"))
-        qmodel = train_quality_classifier(
-            pos.unionByName(neg), "doc_id", "label", dim=1024, iters=8)
-        scale_timings["scale_quality_model_train"] = {
-            "sec": round(time.perf_counter() - t0, 3),
-            "loadavg1m": (loadavg() or [None])[0],
-        }
-    except Exception as exc:  # noqa: BLE001
-        scale_timings["scale_quality_model_train"] = {
-            "error": f"{type(exc).__name__}: {exc}"}
-    write_detail()
-
-    if qmodel is not None:
-        try:
-            profile_dir = sf_dir
-            full_budget = float(
-                os.environ.get("BENCH_PROFILE_SF_BUDGET", "430")) + 120
-            at_start = round(elapsed(), 1)
-            if at_start > full_budget:
-                smaller = os.path.join(
-                    os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
-                if os.path.isdir(smaller) and smaller != sf_dir:
-                    profile_dir = smaller
-            t0 = time.perf_counter()
-            stage_rows = CUR.curate_stage_profile(
-                load_table(spark, profile_dir, "documents"),
-                source_col="source", scrub=True, shard_tokens=50_000,
-                span_k=25, quality_model=qmodel,
-                near_dup_max_bucket=1000)
-            scale_timings["scale_curate_stage_profile_full"] = {
-                "sec": round(time.perf_counter() - t0, 3),
-                "sf_dir": os.path.basename(profile_dir.rstrip("/")),
-                "elapsed_at_start": at_start,
-                "stages": stage_rows,
-            }
-        except Exception as exc:  # noqa: BLE001
-            scale_timings["scale_curate_stage_profile_full"] = {
-                "error": f"{type(exc).__name__}: {exc}",
-                "elapsed_at_failure": round(elapsed(), 1)}
-        write_detail()
 
     # ------------------------------------------------------------------
     # 1M-doc span point, EARLY and attributed (r11 verdict item 6): the
@@ -618,6 +509,8 @@ def main() -> None:
     # storage across sizes — release_scoped frees checkpoint blocks by
     # recorded rdd id).
     # ------------------------------------------------------------------
+    from pyspark.sql import functions as F
+
     from barberini_analytics_spark.core.cache import (
         release_scoped, scoped_checkpoint)
     from barberini_analytics_spark.core.metrics import (
@@ -694,7 +587,6 @@ def main() -> None:
     # 100k-vector synthetic corpus with the Arrow encoder (the
     # production contract: bounded training sample, full-corpus
     # map-only encode)
-    from pyspark.sql import functions as F
     from barberini_analytics_spark.operators import similarity as SIM
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -956,67 +848,8 @@ def main() -> None:
             "elapsed_at_failure": round(elapsed(), 1)}
     write_detail()
 
-    # window-free stratified sampler + epoch sharding over the real
-    # documents table (the map-only scale forms of the exact-quota
-    # sampler / global epoch rank; `docs` loaded before the model train)
-    run_scale("scale_stratified_threshold", lambda: CUR
-              .stratified_sample_threshold(
-                  docs, ["source"], fraction=0.25, key_col="doc_id"))
-    run_scale("scale_epoch_shards", lambda: CUR.epoch_shards(
-        docs, "doc_id", epoch=3, n_shards=32))
-
-    # the single most representative 100 TB workload in the repo: the
-    # full curation pipeline (scrub → gates → 3-stage dedup → split →
-    # token packing → JSONL shards + manifests) end-to-end at bench SF
     import shutil
     import tempfile
-
-    from barberini_analytics_spark.pipeline import curate_to_shards
-
-    shard_dir = tempfile.mkdtemp(prefix="bench_shards_")
-    try:
-        t0 = time.perf_counter()
-        counts = curate_to_shards(spark, sf_dir, shard_dir)
-        scale_timings["scale_curate_to_shards"] = {
-            "sec": round(time.perf_counter() - t0, 3),
-            "loadavg1m": (loadavg() or [None])[0],
-            "split_counts": counts,
-        }
-    except Exception as exc:  # noqa: BLE001
-        scale_timings["scale_curate_to_shards"] = {
-            "error": f"{type(exc).__name__}: {exc}",
-            "sf_dir": os.path.basename(sf_dir.rstrip("/")),
-            "elapsed_at_failure": round(elapsed(), 1)}
-    finally:
-        shutil.rmtree(shard_dir, ignore_errors=True)
-    write_detail()
-
-    # full-recipe pipeline (r10 verdict item 6): the classic
-    # curate_to_shards row above deliberately stays knob-identical for
-    # round-over-round comparability; this one runs the whole recipe
-    # with the trained gate (fit EARLY, before the profiles) and
-    # span_k=25 (matches the stage profile; the production 50 exceeds
-    # the bench corpus' document lengths).  Stage attribution for the
-    # SAME config already ran early as scale_curate_stage_profile_full.
-    if qmodel is not None:
-        shard_dir = tempfile.mkdtemp(prefix="bench_shards_full_")
-        try:
-            t0 = time.perf_counter()
-            counts = curate_to_shards(
-                spark, sf_dir, shard_dir, span_k=25,
-                quality_model=qmodel, near_dup_max_bucket=1000)
-            scale_timings["scale_curate_to_shards_full"] = {
-                "sec": round(time.perf_counter() - t0, 3),
-                "loadavg1m": (loadavg() or [None])[0],
-                "split_counts": counts,
-            }
-        except Exception as exc:  # noqa: BLE001
-            scale_timings["scale_curate_to_shards_full"] = {
-                "error": f"{type(exc).__name__}: {exc}",
-                "elapsed_at_failure": round(elapsed(), 1)}
-        finally:
-            shutil.rmtree(shard_dir, ignore_errors=True)
-        write_detail()
 
     # ------------------------------------------------------------------
     # Relational/view-family scale curve (r12 verdict item 4): the

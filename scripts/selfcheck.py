@@ -10,7 +10,6 @@ Usage: python scripts/selfcheck.py [entry ...]   (no args = all entries)
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import sys
 import traceback

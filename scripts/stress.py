@@ -22,7 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import Window as W, functions as F  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
 from barberini_analytics_spark.core.session import get_spark  # noqa: E402
 from barberini_analytics_spark.operators import dedup as D  # noqa: E402
@@ -132,16 +132,8 @@ def main() -> None:
     run("mix_sources", X.mix_sources(
         mix_docs, "source", {f"s{i}": 1 / 6 for i in range(6)}), n_docs)
 
-    # round-7 additions — all map-only or single-aggregate shapes, so
-    # the figures pin "scan-speed" claims with measurements
-    from barberini_analytics_spark.operators import curation as CU
-
+    # map-only Gopher rule gate: pins the "scan-speed" claim
     run("gopher_filter", X.gopher_quality_filter(docs), n_docs)
-    run("scrub_text", X.scrub_text(docs), n_docs)
-    run("stratified_threshold", CU.stratified_sample_threshold(
-        events, ["event_type"], 0.1, "event_id"), n_events)
-    run("epoch_shards", CU.epoch_shards(
-        events, "event_id", epoch=1, n_shards=256), n_events)
 
     # PageRank: 4 out-edges/node power-iteration, 5 rounds
     from barberini_analytics_spark.operators.graph import pagerank

@@ -60,7 +60,7 @@ def test_frame_cache_bounds_and_unpersists_on_evict(spark):
 def test_scope_mark_release_is_nested(spark):
     """release_scoped(since=mark) frees only frames registered after the
     mark — an enclosing query's scoped persists and checkpoints survive
-    a nested curate_to_shards-style call (r8 ADVICE: the global release
+    a nested standalone call (r8 ADVICE: the global release
     would kill a caller's checkpoint, making later reuse raise)."""
     C.release_all()
     outer_p = C.scoped_persist(spark.range(100).selectExpr("id", "id*2 v"))
@@ -76,16 +76,3 @@ def test_scope_mark_release_is_nested(spark):
     assert outer_c.count() == 50
     C.release_all()
     assert not outer_p.storageLevel.useMemory
-
-
-def test_curate_to_shards_preserves_enclosing_scope(spark, tmp_path):
-    """curate_to_shards releases ONLY its own scoped tier."""
-    from barberini_analytics_spark.pipeline import curate_to_shards
-
-    C.release_all()
-    outer = C.scoped_checkpoint(spark.range(25).selectExpr("id"))
-    counts = curate_to_shards(spark, SF, str(tmp_path / "shards"))
-    assert counts["train"] > 0
-    # enclosing checkpoint survived the nested release
-    assert outer.count() == 25
-    C.release_all()

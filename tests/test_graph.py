@@ -1,10 +1,9 @@
-"""Connected-components + near-dup group resolution tests."""
+"""Connected-components tests."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from barberini_analytics_spark.operators.dedup import near_dup_groups
 from barberini_analytics_spark.operators.graph import connected_components
 
 
@@ -36,31 +35,6 @@ def test_cc_directed_edges_symmetrized(spark):
     got = _cc(spark, [5, 6, 7], [(7, 6), (6, 5)])
     assert got == {5: 5, 6: 5, 7: 5}
 
-
-def test_near_dup_groups_transitive(spark):
-    # A≈B (share most shingles), B≈C, but A vs C drift further apart —
-    # transitivity must still put all three in ONE group; D is unrelated
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    docs = [
-        (1, base),
-        (2, base + " extra"),
-        (3, base.replace("quick", "rapid") + " extra"),
-        (4, "completely different content about museums and art exhibits"),
-    ]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    out = {r.doc_id: r for r in
-           near_dup_groups(df, "doc_id", threshold=0.4).collect()}
-    assert len(out) == 4                       # total map over all docs
-    assert out[1].group_id == out[2].group_id == out[3].group_id == 1
-    assert out[4].group_id == 4 and out[4].group_size == 1
-    assert out[1].group_size == 3
-    reps = [i for i, r in out.items() if r.is_representative]
-    assert sorted(reps) == [1, 4]              # one survivor per group
-
-
-# ---------------------------------------------------------------------------
-# PageRank (link-centrality quality weighting)
-# ---------------------------------------------------------------------------
 
 def _pr(spark, node_ids, edge_pairs, **kw):
     from barberini_analytics_spark.operators.graph import pagerank

@@ -360,38 +360,6 @@ def test_customer_view_advised_join_flips_plan(spark):
     assert "SortMergeJoin [order_id" in plain, plain[:3000]
 
 
-def test_gates_stage_plan_chars_bounded(spark):
-    """r11 verdict ask 5: the full-recipe gate stack (scrub + Gopher +
-    trained classifier + features + LM score + LM quantile) reached
-    1.4M plan chars, unbounded by any pin — the quantile crossJoin
-    printed the LM scorer's join subtree twice.  The gates stage now
-    checkpoints the LM-scored frame before the quantile, so the final
-    gates plan is a filter over a leaf; pinned well under the ~500k
-    the verdict asked for."""
-    from barberini_analytics_spark.core.cache import release_scoped
-    from barberini_analytics_spark.operators.curation import \
-        _curation_stages
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    model = {"weights": [0.01] * 1024, "bias": 0.0, "dim": 1024}
-    # gopher=False: the published word-count floor drops ALL smoke-scale
-    # docs (too short), which would make the row-survival check vacuous;
-    # the plan-fattening parts are the classifier fold + LM join +
-    # quantile crossJoin, all present here
-    stages = dict(_curation_stages(
-        "doc_id", "text", "source", 5, 0.0, 0.95, 10, 0.5,
-        None, (0.9, 0.05, 0.05), 50_000, 42, True, False,
-        near_dup_max_bucket=1000, span_k=25, quality_model=model))
-    gated = stages["gates"](stages["scrub"](
-        docs.select("doc_id", "text", "source")))
-    chars = len(gated._jdf.queryExecution().toString())
-    assert chars < 200_000, f"gates plan grew to {chars} chars"
-    # the gate still gates: LM quantile keeps <= ~95% of scoreable docs
-    n_in, n_out = docs.count(), gated.count()
-    assert 0 < n_out <= n_in
-    release_scoped()
-
-
 def test_advised_registry_queries_warm_call_zero_jobs(spark):
     """Judge r12 item 3: the advisor's probe cost is paid once per
     table version, so CONSTRUCTING an advised registry query a second

@@ -312,31 +312,6 @@ def test_capacities_parsers_total_on_arbitrary_html(spark, pages, seed):
         assert hov == []
 
 
-@settings(max_examples=15, deadline=None)
-@given(st.lists(st.text(max_size=120), min_size=1, max_size=10))
-def test_scrub_text_total_idempotent_and_clean(spark, texts):
-    """scrub_text never throws on arbitrary unicode, is idempotent, and
-    its output contains no zero-width or C0/C1 control characters
-    (tab/newline/CR excepted)."""
-    from barberini_analytics_spark.operators.text import scrub_text
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"])
-    once = scrub_text(df).select("doc_id", "text", "mojibake_hits")
-    rows1 = {r.doc_id: r for r in once.collect()}
-    rows2 = {r.doc_id: r.text for r in scrub_text(
-        once.select("doc_id", "text")).collect()}
-    forbidden = set(chr(c) for c in list(range(0, 9)) + [11, 12]
-                    + list(range(14, 32)) + list(range(127, 160)))
-    forbidden |= {"​", "‌", "‍", "⁠", "﻿",
-                  " ", "‘", "’", "“", "”",
-                  "–", "—", "…"}
-    for i, r in rows1.items():
-        assert not (set(r.text) & forbidden), f"doc {i}: {r.text!r}"
-        assert rows2[i] == r.text, "scrub must be idempotent"
-        assert r.mojibake_hits >= 0
-
-
 @settings(max_examples=8, deadline=None)
 @given(st.integers(0, 2**31 - 1), st.integers(4, 12),
        st.sampled_from(["keep_first", "drop_all"]))

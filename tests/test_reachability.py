@@ -2,7 +2,9 @@
 code that ships — the package itself, ``__spark_entry__.py``,
 ``bench.py``, ``scripts/*.py`` or non-test ``perfbench/*.py``.  A module
 that only tests import is dead weight the registry, FillDb and the
-streaming entry never reach.
+streaming entry never reach.  The same shipping files carry no unused
+imports (``__init__.py`` re-exports aside); the repository has no lint
+step, so this test is that check.
 
 Static (AST only, no Spark): relative and absolute ``import`` /
 ``from … import`` statements are resolved to dotted module names.
@@ -11,6 +13,7 @@ Static (AST only, no Spark): relative and absolute ``import`` /
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -83,3 +86,35 @@ def test_every_package_module_is_imported_by_shipping_code():
                    if s not in short.values()
                    or f"{PACKAGE}.{s}" in reached)
     assert not stale, f"EXEMPT entries missing or now imported: {stale}"
+
+
+_NOQA_F401 = re.compile(r"#\s*noqa:[\w, ]*\bF401\b")
+
+
+def _unused_imports(path: Path) -> list[str]:
+    """Names ``path`` imports but never reads, as ``file:line name``.
+    A line whose ``# noqa:`` codes include F401 is a deliberate
+    side-effect or re-export import and is skipped."""
+    source = path.read_text()
+    lines = source.splitlines()
+    tree = ast.parse(source)
+    imported: dict[str, int] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            if _NOQA_F401.search(lines[node.lineno - 1]):
+                continue
+            for a in node.names:
+                bound = a.asname or a.name.split(".")[0]
+                imported[bound] = node.lineno
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    rel = path.relative_to(ROOT)
+    return [f"{rel}:{line} {name}" for name, line in sorted(imported.items())
+            if name not in used]
+
+
+def test_shipping_files_have_no_unused_imports():
+    unused = [u for p in _shipping_files() if p.name != "__init__.py"
+              for u in _unused_imports(p)]
+    assert not unused, f"unused imports: {unused}"

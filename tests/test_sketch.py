@@ -311,23 +311,6 @@ def test_weighted_sample_per_key_quota(spark):
     assert (out.groupby("src").size() == 50).all()
 
 
-def test_bloom_flag_polarities_match_probe(spark):
-    """bloom_flag(True) must equal bloom_probe's surviving set, and no
-    inserted key may ever be flagged False (no false negatives)."""
-    from barberini_analytics_spark.operators.sketch import (
-        bloom_build, bloom_flag, bloom_probe)
-
-    members = spark.range(500).selectExpr("id * 7 AS k")
-    bloom = bloom_build(members, "k")
-    probe_in = spark.range(2000).selectExpr("id AS k")
-    flagged = bloom_flag(probe_in, bloom, "k", "hit")
-    probed_ids = {r.k for r in bloom_probe(probe_in, bloom, "k").collect()}
-    flags = {r.k: r.hit for r in flagged.collect()}
-    assert {k for k, h in flags.items() if h} == probed_ids
-    member_ids = {r.k for r in members.collect()}
-    assert all(flags[k] for k in member_ids if k in flags)
-
-
 def test_hll_overlap_estimate_accuracy(spark):
     """Inclusion-exclusion intersection from sketches alone: 10k vs 10k
     keys with exactly 5k shared must estimate the overlap within the

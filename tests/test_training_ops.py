@@ -138,54 +138,6 @@ def test_token_shard_packing_budgets_and_determinism(spark):
         {(r.doc_id, r.shard) for r in out}
 
 
-def test_training_shard_export_roundtrip(spark, tmp_path):
-    """pack → export → read back: shard directories are self-contained
-    JSONL, the read-back corpus is exactly the input, and the per-file
-    record cap holds."""
-    import glob
-    import json as _json
-
-    from barberini_analytics_spark.core.sinks import write_training_shards
-    from barberini_analytics_spark.operators.text import assign_token_shards
-
-    docs = spark.createDataFrame(
-        [(i, 40 + (i * 7) % 50, f"text {i}") for i in range(200)],
-        ["doc_id", "n_tokens", "text"])
-    packed = assign_token_shards(docs, "n_tokens", "doc_id", 1_000,
-                                 out_col="shard")
-    out = str(tmp_path / "shards")
-    write_training_shards(packed, out, "shard", max_records_per_file=5)
-
-    shard_dirs = sorted(glob.glob(f"{out}/shard=*"))
-    assert len(shard_dirs) > 3
-    # JSONL inside, honoring the record cap
-    for f in glob.glob(f"{shard_dirs[0]}/part-*.json"):
-        lines = open(f).read().splitlines()
-        assert 0 < len(lines) <= 5
-        _json.loads(lines[0])
-    back = spark.read.json(out)
-    got = {(r.doc_id, r.n_tokens, r.text) for r in back.collect()}
-    assert got == {(i, 40 + (i * 7) % 50, f"text {i}") for i in range(200)}
-
-
-def test_dedup_keep_best_keeps_highest_score(spark):
-    from barberini_analytics_spark.operators import dedup as D
-
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    rows = [
-        (1, base, 0.2), (2, base + " extra", 0.9), (3, base + " extra", 0.5),
-        (10, "completely different text about museums and art", 0.1),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, score double")
-    out = D.dedup_keep_best(df, "doc_id", "score", k=3, num_perm=8,
-                            bands=4, threshold=0.3).toPandas()
-    kept = set(out.doc_id)
-    assert 2 in kept          # best of the near-dup group
-    assert 1 not in kept and 3 not in kept
-    assert 10 in kept         # singleton survives
-    assert out[out.doc_id == 2].group_size.iloc[0] >= 2
-
-
 def test_incremental_dedup_only_new_content_survives(spark):
     from barberini_analytics_spark.operators import dedup as D
 
@@ -348,110 +300,8 @@ def test_mix_sources_drops_untargeted_sources(spark):
 
 
 # ---------------------------------------------------------------------------
-# end-to-end curation pipeline
+# semantic dedup and temperature mixture
 # ---------------------------------------------------------------------------
-
-def test_curate_corpus_every_stage_fires(spark):
-    from barberini_analytics_spark.operators.curation import curate_corpus
-
-    block = " ".join(f"b{i}" for i in range(10))
-    a_text = " ".join(f"a{i}" for i in range(12))
-    docs = spark.createDataFrame([
-        (1, a_text, "s0"),                                   # survives
-        (2, a_text, "s0"),                                   # exact dup of 1
-        (3, block + " c0 c1 c2 c3 c4", "s0"),                # 1st block owner
-        (4, block + " d0 d1 d2 d3 d4 d5", "s1"),             # loses the block
-        (5, " ".join(f"n{i}" for i in range(14)), "s1"),     # near-dup, shorter
-        (6, "m0 " + " ".join(f"n{i}" for i in range(1, 16)), "s1"),  # longest
-        (7, "tiny doc", "s0"),                               # < min_tokens
-    ], ["doc_id", "text", "source"])
-
-    out = curate_corpus(docs, source_col="source", min_tokens=5,
-                        lm_quantile=None, shard_tokens=8).collect()
-    rows = {r.doc_id: r for r in out}
-    assert set(rows) == {1, 3, 4, 6}
-    # boilerplate block stripped from the later doc, kept in the earlier
-    assert rows[4].text == "d0 d1 d2 d3 d4 d5"
-    assert rows[3].text.startswith(block)
-    # n_tokens recomputed after segment removal
-    assert rows[4].n_tokens == 6
-    # near-dup group collapsed to its longest member
-    assert rows[6].group_size == 2
-    # split/shard assigned everywhere
-    assert all(r.split in (0, 1, 2) and r.shard is not None for r in out)
-    assert all(r.copy_id == 1 for r in out)
-    # near_dup_max_bucket plumbing reaches the LSH join: a cap larger
-    # than any bucket on this corpus is a no-op (identical output), and
-    # a cap of 0 excludes every bucket so near-dup grouping finds
-    # nothing — doc 5 (the shorter near-dup) then survives too
-    capped = curate_corpus(docs, source_col="source", min_tokens=5,
-                           lm_quantile=None, shard_tokens=8,
-                           near_dup_max_bucket=1_000).collect()
-    assert {(r.doc_id, r.text, r.split, r.shard) for r in capped} == \
-        {(r.doc_id, r.text, r.split, r.shard) for r in out}
-    no_lsh = curate_corpus(docs, source_col="source", min_tokens=5,
-                           lm_quantile=None, shard_tokens=8,
-                           near_dup_max_bucket=0).collect()
-    assert {r.doc_id for r in no_lsh} == {1, 3, 4, 5, 6}
-
-
-def test_curate_corpus_lm_gate_drops_gibberish(spark):
-    from barberini_analytics_spark.operators.curation import curate_corpus
-
-    normal = [(i, "the cat sat on the mat and saw the dog", "s0")
-              for i in range(20)]
-    docs = spark.createDataFrame(
-        normal + [(99, "zx qv jq kx wq vz xj qk zv jx", "s0")],
-        ["doc_id", "text", "source"])
-    out = curate_corpus(docs, source_col="source", min_tokens=3,
-                        lm_quantile=0.9, near_dup_threshold=1.01).collect()
-    ids = {r.doc_id for r in out}
-    assert 99 not in ids           # the LM gate rejects the outlier
-    assert 0 in ids                # exact dedup keeps one typical doc
-    # all 20 normal docs are identical -> exact dedup collapses to doc 0
-    assert ids == {0}
-
-
-def test_curate_corpus_mixing_replicates(spark):
-    from barberini_analytics_spark.operators.curation import curate_corpus
-
-    docs = spark.createDataFrame(
-        [(i, f"unique text number {i} with plenty of extra words "
-             + " ".join(f"u{i}x{j}" for j in range(8)),
-          "big" if i < 40 else "small") for i in range(50)],
-        ["doc_id", "text", "source"])
-    out = curate_corpus(docs, source_col="source", min_tokens=3,
-                        lm_quantile=None,
-                        targets={"big": 0.5, "small": 0.5}).collect()
-    by_src = {}
-    for r in out:
-        by_src.setdefault(r.source, []).append(r)
-    # small source (10 docs) upsamples toward 25 copies; big downsamples
-    assert len(by_src["small"]) > 10
-    assert len(by_src["big"]) < 40
-    # copies of one doc share their split (no train/eval leakage)
-    splits = {}
-    for r in out:
-        splits.setdefault(r.doc_id, set()).add(r.split)
-    assert all(len(s) == 1 for s in splits.values())
-
-
-def test_curate_corpus_lm_gate_passes_unscoreable_docs(spark):
-    """NULL lm_score means "too short to score", not "bad": with
-    min_tokens lowered so a 2-char doc reaches the LM gate, it must
-    survive (NULL <= q three-valued logic must not silently drop it)."""
-    from barberini_analytics_spark.operators.curation import curate_corpus
-
-    docs = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog", "a"),
-         (2, "a clean and fluent sentence about the museum hall", "a"),
-         (3, "ab", "a")],   # 1 token, 2 chars -> lm_score NULL
-        "doc_id long, text string, source string")
-    out = curate_corpus(docs, source_col="source", min_tokens=1,
-                        lm_quantile=0.99, targets=None).toPandas()
-    assert 3 in set(out["doc_id"])
-    assert out.loc[out["doc_id"] == 3, "lm_score"].isna().all()
-
 
 def test_semantic_dedup_domination_policy(spark):
     """Chain a~b~c (but a!~c): the keep-minimal policy keeps only a —
@@ -621,150 +471,6 @@ def test_stratified_sample_fraction_override(spark):
     assert got == {"a": 20, "b": 100}
 
 
-def test_stratified_sample_threshold_binomial_and_no_window(spark):
-    from barberini_analytics_spark.operators.curation import (
-        stratified_sample_threshold)
-
-    df = _strata_df(spark)
-    out = stratified_sample_threshold(df, ["grp"], 0.3, "id")
-    n = out.count()
-    # binomial bound: 90 ± 5·sqrt(90·0.7) ≈ ±45 (generous, deterministic
-    # hash either passes or fails forever — this pins gross correctness)
-    assert 45 <= n <= 135
-    assert "stratum_n" in out.columns
-    # scale path: the plan must not contain a window (the whole point)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-
-
-# ---------------------------------------------------------------------------
-# deterministic epoch ordering (operators/curation.epoch_order/epoch_shards)
-# ---------------------------------------------------------------------------
-
-def test_epoch_order_is_deterministic_and_varies_by_epoch(spark):
-    from barberini_analytics_spark.operators.curation import epoch_order
-
-    df = spark.range(200).withColumnRenamed("id", "doc_id")
-    o1 = [r.doc_id for r in epoch_order(df, "doc_id", epoch=1)
-          .orderBy("epoch_rank").collect()]
-    o1b = [r.doc_id for r in epoch_order(df.repartition(7), "doc_id", 1)
-           .orderBy("epoch_rank").collect()]
-    o2 = [r.doc_id for r in epoch_order(df, "doc_id", epoch=2)
-          .orderBy("epoch_rank").collect()]
-    assert o1 == o1b                      # partitioning-invariant
-    assert sorted(o1) == sorted(o2) == list(range(200))
-    assert o1 != o2                       # epochs reshuffle
-    # a real permutation, not a rotation of the id order
-    assert o1[:20] != list(range(20))
-
-
-def test_epoch_shards_cover_and_rank_within_shard(spark):
-    from barberini_analytics_spark.operators.curation import epoch_shards
-
-    df = spark.range(300).withColumnRenamed("id", "doc_id")
-    out = epoch_shards(df, "doc_id", epoch=3, n_shards=8).collect()
-    assert len(out) == 300
-    by_shard = {}
-    for r in out:
-        assert 0 <= r.shard < 8
-        by_shard.setdefault(r.shard, []).append(r.shard_pos)
-    # every shard's positions are 1..n contiguous
-    for positions in by_shard.values():
-        assert sorted(positions) == list(range(1, len(positions) + 1))
-    # roughly uniform (uniform hash: 300/8 = 37.5 +- wide margin)
-    assert all(15 <= len(v) <= 70 for v in by_shard.values())
-
-
-# ---------------------------------------------------------------------------
-# unicode scrubbing (operators/text.scrub_text)
-# ---------------------------------------------------------------------------
-
-def test_scrub_text_normalizes_and_flags_mojibake(spark):
-    from barberini_analytics_spark.operators.text import scrub_text
-
-    rows = [
-        (1, "caf\u00c3\u00a9 and \u00e2\u0080\u0093 dash"),
-        (2, "a\u00a0b c\u3000d"),
-        (3, "\u201cq\u201d \u2018x\u2019 \u2013\u2014 \u2026 end"),
-        (4, "zero\u200bwidth\u200c and ctrl\u0007char\ttab kept"),
-        (5, "plain ascii stays"),
-    ]
-    out = {r.doc_id: r for r in scrub_text(
-        spark.createDataFrame(rows, ["doc_id", "text"])).collect()}
-    # mojibake is FLAGGED (quarantine contract), not silently altered
-    assert out[1].mojibake_hits == 2
-    assert "\u00c3" in out[1].text
-    assert out[2].text == "a b c d" and out[2].mojibake_hits == 0
-    assert out[3].text == "\"q\" 'x' -- ... end"
-    assert out[4].text == "zerowidth and ctrlchar\ttab kept"
-    assert out[5].text == "plain ascii stays"
-
-
-def test_curate_corpus_scrub_and_gopher_stages(spark):
-    """Stage 0 (scrub + mojibake quarantine) and the optional Gopher gate
-    compose with the rest of the recipe: damaged docs are quarantined,
-    rule-violating docs are gated, clean long docs survive end-to-end
-    with normalized text feeding the dedup fingerprints."""
-    from barberini_analytics_spark.operators.curation import curate_corpus
-
-    good = ("the data and that point be to of have with great value "
-            + " ".join(f"word{i} item{i} note{i}" for i in range(20)))
-    rows = [
-        (1, good + ' he said "yes"'),
-        # same text with curly quotes: scrub normalizes them to ASCII,
-        # so the fingerprint collides with doc 1 (exact dedup drops it)
-        (2, good + " he said “yes”"),
-        (3, "cafÃ© " + good),          # mojibake -> quarantined
-        (4, "too short to pass gopher rules"),   # word-count gate
-        (5, good.replace("value", "treasure")),  # distinct survivor
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = curate_corpus(df, min_tokens=5, lm_quantile=None,
-                        near_dup_threshold=0.99,  # keep 1 vs 5 distinct
-                        scrub=True, gopher=True)
-    ids = sorted(r.doc_id for r in out.collect())
-    # 2 deduped against 1 (scrub made them byte-identical), 3 quarantined,
-    # 4 gated; near-dup threshold set high so 1 vs 5 both survive
-    assert ids == [1, 5]
-
-
-def test_ccnet_buckets_per_language_terciles(spark):
-    """Head/middle/tail are assigned within each language's own score
-    distribution; unscoreable docs land in tail."""
-    from barberini_analytics_spark.operators.curation import ccnet_buckets
-
-    # two languages with very different fluency mixes: per-language
-    # bucketing must still split each language ~in thirds
-    import random
-    rnd = random.Random(5)
-    rows = []
-    for i in range(60):
-        fluent = "the cat sat on the mat and then the cat sat again " * 2
-        noisy = "".join(rnd.choice("qxzjvkw ") for _ in range(90))
-        mixed = fluent[:50] + noisy[:40]
-        rows.append((i, "en", [fluent, mixed, noisy][i % 3]))
-    for i in range(60, 120):
-        rows.append((i, "de", "der hund und die katze und der hund " * 3
-                     if i % 2 else "zzzqqqxxx " * 9))
-    rows.append((999, "en", "ab"))          # < 3 chars -> NULL score
-    df = spark.createDataFrame(rows, ["doc_id", "lang", "text"])
-    out = ccnet_buckets(df)
-    got = {r.doc_id: r.ccnet_bucket for r in out.collect()}
-    assert got[999] == "tail"
-    from collections import Counter
-    en = Counter(got[i] for i in range(60))
-    de = Counter(got[i] for i in range(60, 120))
-    # every bucket is populated per language, head is the fluent third
-    assert set(en) == {"head", "middle", "tail"}
-    assert len(set(de.values())) >= 1 and set(de) <= {"head", "middle",
-                                                      "tail"}
-    # the repeated-fluent-text docs (i % 3 == 0) dominate the en head
-    head_en = [i for i in range(60) if got[i] == "head"]
-    assert head_en and all(i % 3 == 0 for i in head_en)
-    # rows preserved (bucketing filters nothing)
-    assert len(got) == 121
-
-
 def test_stratified_sample_rejects_partial_override_key(spark):
     from barberini_analytics_spark.operators.curation import stratified_sample
 
@@ -774,32 +480,9 @@ def test_stratified_sample_rejects_partial_override_key(spark):
                           fractions={("a",): 1.0})
 
 
-def test_corpus_report_datasheet_rates(spark):
-    from barberini_analytics_spark.operators.curation import corpus_report
-
-    good = ("the data and that point be to of have with great value "
-            + " ".join(f"word{i} item{i} note{i}" for i in range(20)))
-    rows = [
-        (1, "a", good),
-        (2, "a", good),                    # exact dup of 1
-        (3, "a", "short junk"),            # fails gopher word count
-        (4, "b", "cafÃ© " + good),    # mojibake, src b
-        (5, "b", good.replace("value", "gem")),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "source", "text"])
-    rep = {r.source: r for r in corpus_report(df).collect()}
-    a, b = rep["a"], rep["b"]
-    assert a.n_docs == 3 and b.n_docs == 2
-    assert a.exact_dup_rate == pytest.approx(2 / 3)
-    assert b.exact_dup_rate == 0.0
-    assert a.gopher_keep_rate == pytest.approx(2 / 3)
-    assert b.mojibake_rate == pytest.approx(1 / 2)
-    assert a.mojibake_rate == 0.0
-    # quarantine DISPOSITION, not just the signal average: the count of
-    # docs stage 0 of the curation pipeline would drop per group
-    assert a.n_quarantined == 0 and b.n_quarantined == 1
-    assert a.n_tokens == 72 + 72 + 2
-
+# ---------------------------------------------------------------------------
+# degenerate inputs: tiny documents, hot LSH/SRP buckets
+# ---------------------------------------------------------------------------
 
 def test_repetition_signals_total_on_tiny_docs(spark):
     """Regression: 1-2-token documents used to hit Spark's descending
@@ -981,103 +664,6 @@ def test_dedup_spans_partitioning_invariant(spark):
     r1 = {tuple(r) for r in dedup_spans(df1, "doc_id", k=5).collect()}
     r8 = {tuple(r) for r in dedup_spans(df8, "doc_id", k=5).collect()}
     assert r1 == r8
-
-
-def test_curate_corpus_span_dedup_stage(spark):
-    from barberini_analytics_spark.operators.curation import curate_corpus
-
-    # doc 1 is the original; doc 2 embeds a 12-token passage of doc 1
-    # between unique halves (NOT aligned to the 10-token segment grid, so
-    # the block stage alone cannot remove it); doc 3 is entirely a copy
-    # of doc 1's interior plus nothing else — fully covered, must drop
-    # out at the span stage; doc 4 is independent.
-    a = [f"a{i}" for i in range(30)]
-    copied = a[7:19]
-    d2 = [f"x{i}" for i in range(9)] + copied + [f"y{i}" for i in range(9)]
-    docs = spark.createDataFrame([
-        (1, " ".join(a), "s0"),
-        (2, " ".join(d2), "s0"),
-        (3, " ".join(a[5:25]), "s0"),
-        (4, " ".join(f"z{i}" for i in range(20)), "s1"),
-    ], ["doc_id", "text", "source"])
-
-    out = curate_corpus(docs, source_col="source", min_tokens=5,
-                        lm_quantile=None, span_k=10).collect()
-    rows = {r.doc_id: r for r in out}
-    # without span_k doc 2 keeps the copied passage — blocks are blind
-    # to the straddling copy (doc 3, a pure subset, still dies later at
-    # the near-dup stage; the span stage catches it EXACTLY, earlier)
-    base = {r.doc_id: r for r in curate_corpus(
-        docs, source_col="source", min_tokens=5,
-        lm_quantile=None).collect()}
-    assert " ".join(copied) in base[2].text
-    # with span_k: exact-extent cut, fully-covered doc gone
-    assert set(rows) == {1, 2, 4}
-    assert rows[2].text == " ".join(
-        [f"x{i}" for i in range(9)] + [f"y{i}" for i in range(9)])
-    assert rows[2].n_tokens == 18
-    assert rows[1].text == " ".join(a)   # keep-first: original intact
-
-
-def test_curate_stage_profile_includes_span_stage(spark):
-    from barberini_analytics_spark.operators.curation import (
-        curate_stage_profile)
-
-    a = [f"p{i}" for i in range(40)]
-    docs = spark.createDataFrame(
-        [(1, " ".join(a), "s0"),
-         (2, "q0 q1 " + " ".join(a[3:23]) + " q2 q3", "s0"),
-         (3, " ".join(f"r{i}" for i in range(25)), "s1")],
-        ["doc_id", "text", "source"])
-    prof = curate_stage_profile(docs, source_col="source",
-                                lm_quantile=None, span_k=10)
-    stages = [p["stage"] for p in prof]
-    assert "span_dedup" in stages
-    i = stages.index("span_dedup")
-    assert stages[i - 1] == "segment_dedup" and stages[i + 1] == "near_dup"
-    span_row = prof[i]
-    assert span_row["rows_in"] == 3 and span_row["rows_out"] == 3
-    assert span_row["plan_chars"] < 2_000_000
-
-
-def test_curate_corpus_trained_quality_gate(spark):
-    """The trained webtext filter composes into stage 1: junk documents
-    that sail past the heuristic gates (long enough, alphabetic, LM gate
-    off) are dropped by the classifier; clean docs and the rest of the
-    pipeline are untouched."""
-    import random
-
-    from barberini_analytics_spark.ml.logreg import (
-        train_quality_classifier)
-    from barberini_analytics_spark.operators.curation import curate_corpus
-
-    rng = random.Random(5)
-    clean_v = ["museum", "opens", "new", "exhibition", "modern", "art",
-               "guided", "tours", "visitors", "enjoy", "paintings"]
-    junk_v = ["click", "here", "buy", "now", "free", "winner", "spam",
-              "offer", "cash", "prize"]
-    labeled = spark.createDataFrame(
-        [(i, " ".join(rng.choices(clean_v, k=15)), 1.0)
-         for i in range(80)]
-        + [(i + 80, " ".join(rng.choices(junk_v, k=15)), 0.0)
-           for i in range(80)],
-        ["doc_id", "text", "label"])
-    model = train_quality_classifier(labeled, "doc_id", "label",
-                                     dim=64, iters=12)
-
-    target = spark.createDataFrame([
-        (1, " ".join(rng.choices(clean_v, k=20)), "s0"),
-        (2, " ".join(rng.choices(junk_v, k=20)), "s0"),
-        (3, " ".join(rng.choices(clean_v, k=20)), "s1"),
-    ], ["doc_id", "text", "source"])
-    base = {r.doc_id for r in curate_corpus(
-        target, source_col="source", min_tokens=5,
-        lm_quantile=None).collect()}
-    assert base == {1, 2, 3}          # heuristics alone keep the junk
-    gated = {r.doc_id for r in curate_corpus(
-        target, source_col="source", min_tokens=5, lm_quantile=None,
-        quality_model=model).collect()}
-    assert gated == {1, 3}
 
 
 def test_dedup_spans_drop_all_policy(spark):
