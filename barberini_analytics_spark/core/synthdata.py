@@ -3,79 +3,13 @@
 These generators synthesize large inputs directly from ``spark.range``
 (no disk, no dependence on driver-provided testdata), so throughput
 measurements 1-2 orders of magnitude beyond sf0.1 stay reproducible.
-Shared by ``scripts/stress.py`` and ``bench.py``'s scale paths — one
-definition, identical geometry in both artifacts.
+Shared by ``bench.py``'s scale paths and ``scripts/span_curve.py`` —
+one definition, identical corpora in both artifacts.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-def clustered_vectors(spark: SparkSession, n: int,
-                      dim: int = 64) -> DataFrame:
-    """HIERARCHICALLY clustered embedding corpus (ANN stress geometry).
-
-    64 top-level anchors → 1024 sub-anchors → per-id fine noise: real
-    embedding spaces are topic → subtopic → instance shaped, and uniform
-    noise would make recall meaningless because no geometry exists to
-    recover.  ``sub = id % 1024`` determines ``cluster = sub % 64``, so
-    ground-truth neighbors (same sub-anchor, ~n/1024 of the corpus) live
-    inside one IVF cell; an ADC shortlist has to separate sub-anchors
-    (0.35 magnitude) and the exact re-rank orders the fine noise (0.05).
-
-    Pure integer-hash arithmetic — bit-identical across runs/engines.
-    Returns a lazy plan; callers checkpoint/persist as needed.
-    """
-    return spark.range(n).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(dim)),
-            lambda i: (
-                ((F.pmod(F.pmod(F.col("id"), 64) * 9176 + i * 131, 401)
-                  - 200) / F.lit(200.0))
-                + ((F.pmod(F.pmod(F.col("id"), 1024) * 577 + i * 271, 257)
-                    - 128) / F.lit(128.0)) * 0.35
-                + ((F.pmod(F.col("id") * 40503 + i * 2654435761, 100003)
-                    - 50001) / F.lit(50001.0)) * 0.05
-            ).cast("float")).alias("embedding"))
-
-
-def honest_ivf_cells(vectors: DataFrame, n_cells: int = 64,
-                     two_level: bool | None = None) -> DataFrame:
-    """IVF centroids for a synthetic corpus, built honestly:
-    hash-scattered sampled-point seeding + one Lloyd assignment round —
-    never the generator's own cluster labels.
-
-    Seeds are the ``n_cells`` lowest ``xxhash64(vec_id)`` vectors, NOT
-    the first ``n_cells`` ids: with :func:`clustered_vectors` setting
-    ``cluster = id % 64``, ids ``0..63`` would be exactly one seed per
-    true top-level anchor — label-aligned seeding by construction, and
-    best-case recall.  Hash order scatters the sample across anchors
-    (some get several seeds, some none), so the Lloyd round has to earn
-    the geometry the way it would on real data.
-
-    ``two_level=None`` auto-routes the Lloyd assignment through
-    :func:`..operators.similarity.ivf_assign_two_level` once
-    ``n_cells > 256`` — the flat O(N·C) scan is the build wall at
-    ``auto_n_cells`` sizes (measured: C=2000 × N=1M timed out a
-    10-minute local window; two-level assigns in ~37 s).
-    """
-    from ..operators.similarity import (centroids_by_key, ivf_assign,
-                                        ivf_assign_two_level)
-
-    if two_level is None:
-        two_level = n_cells > 256
-    assign = ivf_assign_two_level if two_level else ivf_assign
-    seed_cents = (vectors
-                  .orderBy(F.xxhash64(F.col("vec_id")), F.col("vec_id"))
-                  .limit(n_cells)
-                  .select(F.col("vec_id").alias("label"),
-                          F.col("embedding").alias("centroid")))
-    labeled = vectors.join(
-        assign(vectors, seed_cents)
-        .select("vec_id", F.col("assigned_cell").alias("label")), "vec_id")
-    return centroids_by_key(labeled, "label")
 
 
 def planted_span_corpus(spark: SparkSession, n_docs: int,

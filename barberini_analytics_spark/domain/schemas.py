@@ -136,10 +136,6 @@ def schema(table: str) -> T.StructType:
     return REGISTRY[table][0]
 
 
-def primary_key(table: str) -> tuple[str, ...]:
-    return REGISTRY[table][1]
-
-
 def conform(df: DataFrame, table: str) -> DataFrame:
     """Project + cast a frame to the registered schema (order included).
 

@@ -340,7 +340,7 @@ def cross_corpus_overlap(train: DataFrame, evalset: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# segment and span dedup, incremental dedup against an existing corpus
+# segment and span dedup
 # ---------------------------------------------------------------------------
 
 def segment_documents(df: DataFrame, id_col: str, text_col: str = "text",
@@ -486,8 +486,9 @@ def kgram_occurrences(df: DataFrame, id_col: str, text_col: str = "text",
     feeding each hash is transient inside the codegen ``transform``; only
     ``(id, pos, fp)`` leaves the scan.
 
-    The fingerprint is the FULL-width 112-bit :func:`..text.hash112`
-    (struct of two 56-bit md5 halves), not the 56-bit hash the
+    The fingerprint is the FULL-width 112-bit md5 struct built below
+    (``struct<hi, lo>``: the digest's two 56-bit halves, each by the
+    :func:`..text.hash56` arithmetic), not the 56-bit hash the
     document/segment grains use: those grains key ~one hash per document
     or block, while this one keys ~one per corpus TOKEN — at the 100 TB
     target that is ~1e13 keys, where 56-bit birthday collisions
@@ -724,47 +725,3 @@ def dedup_spans(df: DataFrame, id_col: str, text_col: str = "text",
             F.concat_ws(" ", kept).alias("text_span_deduped"),
         )
     )
-
-
-def fingerprint_index(corpus: DataFrame, id_col: str,
-                      text_col: str = "text",
-                      m_bits: int = 1 << 20) -> tuple[DataFrame, DataFrame]:
-    """Build the incremental-dedup index of a corpus: its exact content
-    fingerprints plus a Bloom filter over them.
-
-    The index is what a 100 TB pipeline persists between crawls — the
-    corpus itself is never rescanned.  Returns ``(fps, bloom)``:
-    ``fps`` = (fingerprint) rows (one shuffle-free scan + dedup on the
-    56-bit key), ``bloom`` = one broadcastable row over the same keys.
-    """
-    from .text import fingerprint
-    from .sketch import bloom_build
-
-    fps = (fingerprint(corpus, text_col).select("fingerprint").distinct())
-    return fps, bloom_build(fps, "fingerprint", m_bits=m_bits)
-
-
-def incremental_dedup(new_docs: DataFrame, fps: DataFrame,
-                      bloom: DataFrame, id_col: str,
-                      text_col: str = "text") -> DataFrame:
-    """Keep the rows of ``new_docs`` whose content is NOT in the corpus
-    the index was built from (exact-duplicate semantics).
-
-    Bloom asymmetry does the heavy lifting: a Bloom MISS is definitely
-    new (no false negatives), so only the hitting fraction — true dups
-    plus the configured false-positive rate — ever reaches the exact
-    anti-join against the fingerprint table.  On a fresh crawl with a
-    few percent duplication the shuffle volume of the anti-join drops by
-    the same factor; the miss path is a broadcast-filter scan with no
-    shuffle at all.
-    """
-    from .text import fingerprint
-    from .sketch import bloom_probe
-
-    fp_new = fingerprint(new_docs, text_col)
-    hits = bloom_probe(fp_new, bloom, "fingerprint")
-    confirmed_dups = hits.join(fps, "fingerprint", "left_semi") \
-        .select(F.col(id_col).alias("__dup_id"))
-    return (fp_new.join(confirmed_dups,
-                        fp_new[id_col] == F.col("__dup_id"), "left_anti")
-            .drop("fingerprint"))

@@ -1,16 +1,19 @@
-"""Vector similarity search over embedding columns (``array<float>``).
+"""Vector similarity over embedding columns (``array<float>``).
 
-Two tiers, as a 100 TB pipeline needs:
+The operators the registered queries reach:
 
-- **brute-force cosine top-k** — the exact baseline.  The query side is
+- **brute-force cosine top-k** — the exact search.  The query side is
   broadcast (queries are few); the corpus side streams through one scan.
   Dot products run JVM-side via ``zip_with`` + ``aggregate`` in codegen —
   no Python in the loop.
-- **IVF (inverted-file) cosine top-k** — the scale path: assign every
-  vector to its nearest centroid (broadcast centroids), then search only
-  the probed cells.  Centroids here are computed per partition-key (the
-  synthetic ``label``) or by a provided centroid table; at real scale
-  they come from k-means (Spark MLlib) — the search plan is identical.
+- **IVF cell assignment** — per-key centroids (MLlib vector mean) and a
+  nearest-centroid argmax against the broadcast centroid table, one
+  corpus scan.
+- **product quantization** — codebook training, IVF residuals,
+  Arrow-batched encoding and ADC scoring (the ``ivf_assignments``
+  entry), plus the pure-expression encoder the Arrow one is tested
+  against; and the int8 tier at the same grain.
+- **SRP LSH candidate pairs** (LSH-DBSCAN) and **SemDeDup**.
 
 All float math is widened to double before accumulation so results are
 engine-portable (the DuckDB oracle folds the same element order).
@@ -114,8 +117,8 @@ def centroids_by_key(vectors: DataFrame, key_col: str = "label",
 
 def ivf_assign(vectors: DataFrame, centroids: DataFrame,
                id_col: str = "vec_id", vec_col: str = "embedding",
-               key_col: str = "label", centroid_col: str = "centroid",
-               keep_cols: tuple = ()) -> DataFrame:
+               key_col: str = "label",
+               centroid_col: str = "centroid") -> DataFrame:
     """Nearest-centroid assignment (the IVF build step).
 
     Broadcast the centroid table (bounded: n_cells × dim), score every
@@ -123,22 +126,15 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame,
     (rounded cosine, key) — a single corpus scan; the only exchange is
     the argmax grouping on the id.
 
-    ``keep_cols`` carries extra vector-side columns (typically the
-    vector itself) through to the output, so downstream per-row work
-    (residual subtraction, PQ encoding) composes WITHOUT a second
-    corpus-scale join back to the source — at 100 TB that join is a
-    full extra shuffle.
-
     The k=1 argmax is a ``min_by`` AGGREGATE, not a ``row_number()``
     window: the crossJoin fans each vector out n_cells times, and a
-    window would move every copy (vector bytes included, via
-    ``keep_cols``) across the exchange — n_cells× the shuffle volume.
-    ``min_by``/``first`` partially aggregate map-side, so exactly one
-    row per id reaches the wire.  Ordering mirrors the window form it
-    replaced: cosine desc with NULLs last (a NULL cosine can only come
-    from a zero-norm vector), ties broken by cell asc — within one id
-    each scored row is a distinct cell, so the ordering struct is
-    unique and the pick deterministic.
+    window would move every copy across the exchange — n_cells× the
+    shuffle volume.  ``min_by`` partially aggregates map-side, so
+    exactly one row per id reaches the wire.  Ordering mirrors the
+    window form it replaced: cosine desc with NULLs last (a NULL cosine
+    can only come from a zero-norm vector), ties broken by cell asc —
+    within one id each scored row is a distinct cell, so the ordering
+    struct is unique and the pick deterministic.
     """
     # norms are computed ONCE per side BEFORE the fan-out: the crossJoin
     # replicates each vector n_cells times, and a plain cosine() in the
@@ -155,7 +151,6 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame,
         v.crossJoin(F.broadcast(c))
         .select(
             id_col,
-            *keep_cols,
             "cell",
             F.round(_dot(F.col(vec_col), F.col(centroid_col))
                     / (F.col("__vnrm") * F.col("__cnrm")), 6)
@@ -168,122 +163,9 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame,
     )
     best = scored.groupBy(id_col).agg(
         F.min_by(F.struct(F.col("cell"), F.col("cosine")), order).alias("__best"),
-        # keep_cols are constant within an id (the crossJoin replicates
-        # the same source row), so first() is content-deterministic
-        *[F.first(F.col(kc)).alias(kc) for kc in keep_cols],
     )
     return best.select(
-        id_col, *keep_cols,
-        F.col("__best.cell").alias("assigned_cell"),
-        F.col("__best.cosine").alias("cell_cosine"),
-    )
-
-
-def ivf_assign_two_level(vectors: DataFrame, centroids: DataFrame,
-                         super_probe: int = 2,
-                         n_super: int | None = None,
-                         id_col: str = "vec_id", vec_col: str = "embedding",
-                         key_col: str = "label",
-                         centroid_col: str = "centroid",
-                         keep_cols: tuple = ()) -> DataFrame:
-    """Hierarchical (two-level / IMI-style) nearest-centroid assignment
-    — the build-side escape when ``n_cells`` outgrows the flat scan.
-
-    :func:`ivf_assign` scores every vector against every cell:
-    O(N·C) dim-length dots, which is exactly right at C ≤ ~100 but
-    becomes the build bottleneck once ``auto_n_cells`` sizes C ~ √N
-    (measured: C=2000 × N=1M timed out a 10-minute local window where
-    C=64 built in ~30 s).  The classic fix: cluster the CENTROIDS into
-    S ≈ √C super-cells (driver-cheap — the centroid table is tiny),
-    route each vector to its ``super_probe`` nearest super-cells
-    map-only (N·S dots against a LITERAL super table — no fan-out, no
-    shuffle), then score only those super-cells' member centroids
-    (N·super_probe·C/S dots through one broadcast join).  Total
-    ~N·(S + super_probe·C/S) ≈ 2·N·√C·√super_probe — at C=2000 that
-    is ~22× less arithmetic than flat.
-
-    APPROXIMATE by construction: a vector whose true nearest cell
-    lives in a super-cell outside its top-``super_probe`` routes is
-    assigned its best cell among the probed members instead (same
-    trade as FAISS's IMI coarse quantizer; raise ``super_probe`` to
-    tighten).  The stage-2 cosine uses :func:`ivf_assign`'s exact
-    formula and ordering, so wherever the probed set contains the true
-    argmax the output row is bit-identical to flat assignment —
-    ``tests/test_pq.py`` pins ≥ 95% agreement on clustered geometry.
-    Zero-norm vectors (NULL cosines) may route arbitrarily in stage 1;
-    flat assignment also gives them a NULL-cosine arbitrary-tie pick.
-
-    100 TB shape: stage 1 is map-only (literal supers live in the
-    plan, S·dim floats ≈ a few KB); stage 2's broadcast is the same
-    centroid table flat assignment broadcasts; the only exchange is
-    the final per-id ``min_by`` argmax — one row per id on the wire,
-    exactly like :func:`ivf_assign`.
-    """
-    import math
-
-    # ---- super-cells over the centroid table (all tiny-side work) ----
-    n_cells = centroids.count()
-    S = n_super or max(2, int(math.ceil(math.sqrt(n_cells))))
-    cent_as_vec = centroids.select(
-        F.col(key_col).alias("vec_id"),
-        F.col(centroid_col).alias("embedding"))
-    seeds = (centroids
-             .orderBy(F.xxhash64(F.col(key_col)), F.col(key_col))
-             .limit(S)
-             .select(F.col(key_col).alias("label"),
-                     F.col(centroid_col).alias("centroid")))
-    lab = ivf_assign(cent_as_vec, seeds).select(
-        "vec_id", F.col("assigned_cell").alias("label"))
-    supers = centroids_by_key(cent_as_vec.join(lab, "vec_id"), "label")
-    member = (ivf_assign(cent_as_vec, supers)
-              .select(F.col("vec_id").alias("__cell"),
-                      F.col("assigned_cell").alias("__super"))
-              .join(cent_as_vec.select(F.col("vec_id").alias("__cell"),
-                                       F.col("embedding").alias("__cvec")),
-                    "__cell")
-              .withColumn("__cnrm", _norm2(F.col("__cvec"))))
-
-    # ---- stage 1: map-only top-super_probe routing (literal supers) ----
-    sup_rows = supers.collect()  # S × dim — bounded like a PQ codebook
-    vnrm = F.col("__vnrm")
-
-    def _sup_entry(r):
-        cvec = [float(x) for x in r["centroid"]]
-        cnrm = math.sqrt(sum(x * x for x in cvec)) or float("nan")
-        cos = F.round(
-            _dot(F.col(vec_col), F.array(*[F.lit(x) for x in cvec]))
-            / (vnrm * F.lit(cnrm)), 6)
-        return F.struct(F.coalesce(cos, F.lit(float("-inf"))).alias("c"),
-                        F.lit(r["label"]).alias("s"))
-
-    routed = (
-        vectors.withColumn("__vnrm", _norm2(F.col(vec_col)))
-        .withColumn("__routes", F.slice(
-            F.sort_array(F.array(*[_sup_entry(r) for r in sup_rows]),
-                         asc=False), 1, super_probe))
-        .withColumn("__super", F.explode(F.col("__routes").getField("s")))
-        .drop("__routes")
-    )
-
-    # ---- stage 2: score only the routed super-cells' members ----
-    scored = (
-        routed.join(F.broadcast(member), "__super")
-        .select(
-            id_col, *keep_cols, F.col("__cell").alias("cell"),
-            F.round(_dot(F.col(vec_col), F.col("__cvec"))
-                    / (vnrm * F.col("__cnrm")), 6).alias("cosine"))
-    )
-    order = F.struct(
-        F.coalesce(-F.col("cosine"), F.lit(float("inf"))).alias("neg_cos"),
-        F.col("cell").alias("cell"),
-    )
-    best = scored.groupBy(id_col).agg(
-        F.min_by(F.struct(F.col("cell"), F.col("cosine")), order)
-        .alias("__best"),
-        *[F.first(F.col(kc)).alias(kc) for kc in keep_cols],
-    )
-    return best.select(
-        id_col, *keep_cols,
+        id_col,
         F.col("__best.cell").alias("assigned_cell"),
         F.col("__best.cosine").alias("cell_cosine"),
     )
@@ -370,50 +252,8 @@ def srp_candidate_pairs(vectors: DataFrame, id_col: str = "vec_id",
     )
 
 
-def ivf_search(corpus: DataFrame, centroids: DataFrame, queries: DataFrame,
-               k: int = 10, nprobe: int = 4, id_col: str = "vec_id",
-               vec_col: str = "embedding", key_col: str = "label",
-               query_id_col: str = "query_id") -> DataFrame:
-    """Approximate top-k via inverted-file probing (the ANN scale path).
-
-    Build side: every corpus vector is assigned to its nearest centroid
-    cell (``ivf_assign`` — broadcast centroids, one scan).  Query side:
-    each query scores the centroid table, keeps its ``nprobe`` closest
-    cells, and is joined to the corpus on the cell key — so each query
-    reads ~``nprobe / n_cells`` of the corpus instead of all of it.  The
-    exact cosine then ranks the probed candidates.
-
-    ``nprobe`` is the recall dial (nprobe = n_cells degrades to exact
-    search); tests pin recall@k against ``brute_force_topk``.
-    """
-    from .relational import top_k_per_group
-
-    # the assignment carries the vector (keep_cols) so the probe join
-    # below is the ONLY corpus-scale join — no id-keyed join back to
-    # the source, which would be a second full shuffle at 100 TB
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col, key_col,
-                          keep_cols=(vec_col,))
-    c = centroids.select(F.col(key_col).alias("cell"), "centroid")
-    q = queries.select(query_id_col, F.col(vec_col).alias("__qvec"))
-    probe_scores = q.crossJoin(F.broadcast(c)).select(
-        query_id_col, "__qvec", "cell",
-        F.round(cosine(F.col("__qvec"), F.col("centroid")), 6).alias("csim"))
-    probed = top_k_per_group(
-        probe_scores, [query_id_col],
-        [F.col("csim").desc(), F.col("cell").asc()], k=nprobe,
-    ).select(query_id_col, "__qvec", F.col("cell").alias("assigned_cell"))
-    cand = probed.join(assigned, "assigned_cell").select(
-        query_id_col, id_col,
-        F.round(cosine(F.col(vec_col), F.col("__qvec")), 6).alias("cosine"))
-    return top_k_per_group(
-        cand, [query_id_col],
-        [F.col("cosine").desc(), F.col(id_col).asc()],
-        k=k, rank_col="rank", keep_rank=True,
-    ).withColumn("rank", F.col("rank").cast("int"))
-
-
 # ---------------------------------------------------------------------------
-# Product quantization (the IVF-PQ memory tier)
+# Product quantization
 # ---------------------------------------------------------------------------
 #
 # At 100 TB the dominant ANN cost is not compute but *bytes*: a 64-dim
@@ -683,8 +523,7 @@ def pq_encode(vectors: DataFrame, codebook: list, m: int = 8, k: int = 16,
 def pq_encode_arrow(vectors: DataFrame, codebook: list, m: int = 8,
                     k: int = 16, dim: int = 64, id_col: str = "vec_id",
                     vec_col: str = "embedding",
-                    normalize: bool = True,
-                    passthrough: tuple = ()) -> DataFrame:
+                    normalize: bool = True) -> DataFrame:
     """Arrow-batched PQ encode — the 100 TB throughput path.
 
     ``pq_encode``'s pure-expression formulation is bit-exact and fully
@@ -726,20 +565,10 @@ def pq_encode_arrow(vectors: DataFrame, codebook: list, m: int = 8,
                 diff = sub[:, None, :] - cb[s][None, :, :]
                 d2 = np.cumsum(diff * diff, axis=2)[:, :, -1]  # (n, k)
                 codes += d2.argmin(axis=1) * k_pows[s]
-            out = {id_col: pdf[id_col], "pq_code": codes}
-            for c in passthrough:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
+            yield pd.DataFrame({id_col: pdf[id_col], "pq_code": codes})
 
-    # passthrough columns ride the Arrow batches so callers keep their
-    # join keys (e.g. the assigned IVF cell) without a second
-    # corpus-scale join back to the source frame
-    types = dict(vectors.dtypes)
-    schema = ", ".join(
-        [f"{id_col} bigint", "pq_code bigint"]
-        + [f"{c} {types[c]}" for c in passthrough])
-    return vectors.select(id_col, vec_col, *passthrough).mapInPandas(
-        encode_batches, schema)
+    return vectors.select(id_col, vec_col).mapInPandas(
+        encode_batches, f"{id_col} bigint, pq_code bigint")
 
 
 def pq_adc_scores(codes: DataFrame, codebook: list, query_vec: list,
@@ -778,8 +607,8 @@ def pq_adc_scores(codes: DataFrame, codebook: list, query_vec: list,
     # the score is a FLAT sum of m codegen-able terms — exact
     # integer-literal divisors, no higher-order functions: interpreted
     # HOF eval (aggregate/transform lambdas fall out of whole-stage
-    # codegen) measured ~35× slower per row on the 6.4M-candidate
-    # batch-search scan this shares its shape with
+    # codegen) measured ~35× slower per row on a 6.4M-candidate ADC
+    # scan
     score = _adc_flat_score(lut_lit, m, k)
     return codes.select(
         F.col(id_col), F.col("pq_code"), score.alias(out_col))
@@ -788,13 +617,13 @@ def pq_adc_scores(codes: DataFrame, codebook: list, query_vec: list,
 def _adc_flat_score(flat_lut, m: int, k: int):
     """ADC score as a flat sum of ``m`` whole-stage-codegen terms.
 
-    ``flat_lut`` is an s-major ``m*k`` double array (column or literal);
+    ``flat_lut`` is an s-major ``m*k`` double array literal;
     each term unpacks subspace ``s``'s code with an exact integer-LITERAL
     divisor (``k**s`` folded in Python, not ``pow()`` re-evaluated per
     row) and adds one ``element_at``.  Deliberately NOT an
     ``F.aggregate``/``F.transform`` fold: higher-order functions are
     interpreted row-at-a-time outside whole-stage codegen — measured
-    147 s → 4 s on the 6.4M-candidate 500-query batch scan.
+    147 s → 4 s on a 6.4M-candidate, 500-query ADC scan.
     """
     score = F.lit(0.0)
     for s in range(m):
@@ -802,277 +631,6 @@ def _adc_flat_score(flat_lut, m: int, k: int):
             f"CAST((CAST(pq_code AS BIGINT) div {k ** s}) % {k} AS INT)")
         score = score + F.element_at(flat_lut, idx + F.lit(s * k + 1))
     return score
-
-
-def ivf_pq_build(corpus: DataFrame, centroids: DataFrame, codebook: list,
-                 m: int = 8, n_codes: int = 16, dim: int = 64,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 key_col: str = "label",
-                 residual: bool = False,
-                 two_level: bool = False) -> DataFrame:
-    """The ANN index build: IVF assignment + PQ codes in one pass.
-
-    Returns ``(id_col, assigned_cell, pq_code)`` — the compressed corpus
-    ``ivf_pq_search`` probes.  Production builds ONCE (persist/write the
-    result) and searches many batches against it; the build is the only
-    corpus-scale work, and it is a single scan: the assignment CARRIES
-    the vector (``keep_cols``) so the encode is map-only over the
-    assignment output — no corpus⋈corpus join anywhere (each such join
-    is a full extra shuffle at 100 TB).
-
-    ``two_level=True`` swaps the flat assignment for
-    :func:`ivf_assign_two_level` — the O(N·√C) route for builds whose
-    ``n_cells`` came from :func:`auto_n_cells` (the flat N·C scan
-    measured 22× more arithmetic at C=2000 and timed out a 10-minute
-    local window the two-level build finishes in ~40 s).
-    """
-    assign = ivf_assign_two_level if two_level else ivf_assign
-    assigned_v = assign(corpus, centroids, id_col=id_col, vec_col=vec_col,
-                        key_col=key_col, keep_cols=(vec_col,))
-    if residual:
-        cn = centroids.select(
-            F.col(key_col).alias("assigned_cell"),
-            l2_normalize(F.col("centroid"), dim).alias("__c"))
-        resid = (
-            assigned_v.join(F.broadcast(cn), "assigned_cell")
-            .select(id_col, "assigned_cell",
-                    F.zip_with(l2_normalize(F.col(vec_col), dim), "__c",
-                               lambda a, b: a - b).alias("__resid")))
-        return pq_encode_arrow(resid, codebook, m=m, k=n_codes,
-                               dim=dim, id_col=id_col,
-                               vec_col="__resid", normalize=False,
-                               passthrough=("assigned_cell",))
-    return pq_encode_arrow(assigned_v, codebook, m=m, k=n_codes,
-                           dim=dim, id_col=id_col, vec_col=vec_col,
-                           passthrough=("assigned_cell",))
-
-
-def auto_n_cells(n_corpus: int, nprobe: int = 4,
-                 min_cells: int = 16, max_cells: int = 65_536) -> int:
-    """√N-scaled IVF cell count — the per-decade escape hatch the
-    re-rank cost envelope names (SCALE.md r13): per-query work is
-    ``n_cells`` centroid scores + ``nprobe × N / n_cells`` probed
-    rows, minimized at ``n_cells = √(nprobe × N)``, so the probed mass
-    grows ~√N instead of linearly while the broadcast centroid table
-    stays tiny (√(4×10⁹) ≈ 63k cells × 256 B = 16 MB at a 4-billion
-    row corpus — still one broadcast).  Clamped to
-    ``[min_cells, max_cells]``; the build-side cost (k-means over a
-    bounded sample, one assignment pass) grows with ``n_cells`` and is
-    paid once per index build.  The bench regime pins ``n_cells=64``
-    for round-over-round comparability — this default is for
-    production builds sized to their corpus.
-    """
-    import math
-
-    ideal = int(round(math.sqrt(max(nprobe, 1) * max(n_corpus, 1))))
-    return max(min_cells, min(max_cells, ideal))
-
-
-def auto_shortlist(n_corpus: int, n_cells: int, nprobe: int,
-                   k: int = 10, fraction: float = 0.08) -> int:
-    """Corpus-tracking default for the ADC shortlist: re-rank
-    ``fraction`` of the rows a search EXPECTS to probe
-    (``n_corpus × nprobe / n_cells``), floored at ``k × 20``.
-
-    A fixed shortlist does not survive corpus growth: r11 measured
-    recall@10 = 0.10 at shortlist 100 on a 100k-vector corpus (where
-    100 is 0.1% of the probed mass) vs 0.88 at 400 — and at 100 TB any
-    constant is vanishingly small.  The quantity that predicts recall
-    is the re-ranked FRACTION of probed candidates, because PQ
-    distortion scrambles the ADC ordering by a roughly corpus-size-
-    independent factor; 8% holds recall@10 ≈ 0.88 for the m=8 ×
-    16-code × dim-64 regime on the honest-seeded bench corpus
-    (``scale_ivf_pq_search_np4_sl_auto``).  Finer codebooks (larger
-    ``m × n_codes``) shrink the fraction needed; the re-rank cost is
-    linear in the shortlist and negligible next to the ADC scan it
-    follows.
-    """
-    probed_est = n_corpus * nprobe / max(n_cells, 1)
-    return max(k * 20, int(probed_est * fraction) + 1)
-
-
-def ivf_pq_search(corpus: DataFrame, centroids: DataFrame, codebook: list,
-                  queries: DataFrame, k: int = 10, nprobe: int = 4,
-                  shortlist: int | None = None, m: int = 8,
-                  n_codes: int = 16,
-                  dim: int = 64, id_col: str = "vec_id",
-                  vec_col: str = "embedding",
-                  query_id_col: str = "query_id",
-                  key_col: str = "label",
-                  residual: bool = False,
-                  compressed: DataFrame | None = None,
-                  lut_literal_max: int = 64) -> DataFrame:
-    """The full production ANN pipeline: IVF probe → ADC shortlist →
-    exact re-rank.
-
-    1. **Probe**: each query keeps its ``nprobe`` nearest IVF cells
-       (broadcast centroid table), so only ~``nprobe/n_cells`` of the
-       corpus is touched.
-    2. **ADC shortlist**: probed candidates are scored from their packed
-       PQ codes against per-query LUTs (built driver-side from the
-       collected query rows — the query side is small by contract, same
-       as ``brute_force_topk``'s broadcast). Top-``shortlist`` per query
-       survive.  At 100 TB this is the step that replaces a 256 B/row
-       float scan with a 4 B/row code scan.
-    3. **Re-rank**: only the shortlist joins back to the full vectors
-       for exact cosine; top-``k`` with the (rounded cosine DESC, id)
-       tie-break is returned — schema-compatible with
-       ``brute_force_topk``/``ivf_search``.
-
-    ``shortlist`` is the recall dial of the PQ tier the way ``nprobe``
-    is for the IVF tier.  ``None`` (the default) scales it with the
-    corpus via :func:`auto_shortlist` — a fixed value silently
-    collapses recall as the corpus grows (r11: 0.10 at shortlist 100
-    on 100k vectors), so the constant-shortlist mode is opt-in.
-
-    ``residual=True`` switches the PQ tier to IVF-residual encoding
-    (``codebook`` must then come from ``pq_train`` over
-    :func:`pq_residuals` output with ``normalize=False``): codes
-    represent ``v̂ − ĉ(cell)`` and the ADC score adds the probe's own
-    query↔centroid cosine back as the per-cell bias —
-    ``dot(q̂, v̂) = dot(q̂, ĉ) + dot(q̂, r)`` exactly.  Residual codes
-    resolve within-cell detail instead of re-describing the coarse
-    structure, which is what lifts recall at small shortlists.
-
-    ``compressed``: a pre-built index (:func:`ivf_pq_build` output,
-    persisted) — the production shape: build once, search many query
-    batches without re-encoding the corpus.  When ``None`` the build
-    runs inline (convenient for one-shot calls and the oracle entry).
-
-    **Batch-size bound**: each query contributes ``m × n_codes`` double
-    literals to the LUT map, so the literal plan grows linearly with the
-    batch.  Up to ``lut_literal_max`` queries the LUT is embedded as a
-    map literal (no join, lowest latency); above it the LUTs become a
-    tiny ``(query_id, __lut)`` DataFrame broadcast-joined to the probed
-    candidates — identical scores, plan size independent of batch size.
-    Both paths are exercised by ``tests/test_pq.py``.
-    """
-    from .relational import top_k_per_group
-
-    if compressed is None:
-        compressed = ivf_pq_build(corpus, centroids, codebook, m=m,
-                                  n_codes=n_codes, dim=dim, id_col=id_col,
-                                  vec_col=vec_col, key_col=key_col,
-                                  residual=residual)
-        if shortlist is None:
-            # the sizing counts below would otherwise recompute the
-            # whole inline build twice (once for the count, once for
-            # the probe join)
-            from ..core.cache import scoped_persist
-
-            compressed = scoped_persist(compressed)
-    if shortlist is None:
-        shortlist = auto_shortlist(compressed.count(), centroids.count(),
-                                   nprobe, k)
-
-    c = centroids.select(F.col(key_col).alias("cell"), "centroid")
-    q = queries.select(query_id_col, F.col(vec_col).alias("__qvec"))
-    probe_scores = q.crossJoin(F.broadcast(c)).select(
-        query_id_col, "cell",
-        F.round(cosine(F.col("__qvec"), F.col("centroid")), 6).alias("csim"))
-    probed = top_k_per_group(
-        probe_scores, [query_id_col],
-        [F.col("csim").desc(), F.col("cell").asc()], k=nprobe,
-    ).select(query_id_col, F.col("cell").alias("assigned_cell"),
-             F.col("csim").alias("__cell_sim"))
-
-    # per-query LUTs, keyed by a map literal (query side is bounded);
-    # score = Σ_s LUT[qid][s][code_s]: map qid -> flat m*k-double LUT,
-    # exact integer index arithmetic per term
-    lut_entries = queries.select(query_id_col, vec_col).collect()
-    scored_parts = probed.join(compressed, "assigned_cell")
-    def _flat_lut(vec: list) -> list:
-        d_sub = dim // m
-        nrm = 0.0
-        for x in vec:
-            nrm += float(x) * float(x)
-        nrm = nrm ** 0.5
-        qn = [float(x) / nrm for x in vec]
-        cents = {(r["sub"], r["code"]): list(r["centroid"])
-                 for r in codebook}
-        flat = []
-        for s in range(m):
-            for j in range(n_codes):
-                acc = 0.0
-                for i in range(d_sub):
-                    acc += qn[s * d_sub + i] * float(cents[(s, j)][i])
-                flat.append(acc)
-        return flat
-
-    if len(lut_entries) <= lut_literal_max:
-        lut_map = F.map_from_arrays(
-            F.array(*[F.lit(r[query_id_col]) for r in lut_entries]),
-            F.array(*[
-                F.array(*[F.lit(v) for v in _flat_lut(list(r[vec_col]))])
-                for r in lut_entries
-            ]),
-        )
-        scored_parts = scored_parts.withColumn(
-            "__lut", lut_map[F.col(query_id_col)])
-    else:
-        # LUT-as-table: above the literal bound the per-query LUTs ride
-        # a broadcast-joined side table instead of the plan tree, so the
-        # plan stays O(1) in batch size (a 500-query batch would
-        # otherwise embed 500 × m × n_codes double literals)
-        from pyspark.sql.types import ArrayType, DoubleType
-
-        lut_df = queries.sparkSession.createDataFrame(
-            [(r[query_id_col], _flat_lut(list(r[vec_col])))
-             for r in lut_entries],
-            queries.select(query_id_col).schema.add(
-                "__lut", ArrayType(DoubleType())),
-        )
-        scored_parts = scored_parts.join(F.broadcast(lut_df),
-                                         query_id_col)
-    adc = scored_parts.withColumn(
-        "adc_score",
-        # residual mode: the probe cosine IS dot(q̂, ĉ) — add it back as
-        # the exact per-cell bias of the residual decomposition.  The
-        # scan itself is the flat codegen sum (see _adc_flat_score) —
-        # this projection runs once per (query, probed-cell candidate),
-        # the hottest row count in the whole search.
-        (F.col("__cell_sim") if residual else F.lit(0.0))
-        + _adc_flat_score(F.col("__lut"), m, n_codes),
-    )
-    short = top_k_per_group(
-        adc, [query_id_col],
-        [F.col("adc_score").desc(), F.col(id_col).asc()], k=shortlist,
-    ).select(query_id_col, id_col)
-
-    # exact re-rank of the shortlist only
-    rerank = (
-        short.join(corpus.select(id_col, vec_col), id_col)
-        .join(F.broadcast(q), query_id_col)
-        .select(
-            query_id_col, id_col,
-            F.round(cosine(F.col(vec_col), F.col("__qvec")), 6).alias("cosine"),
-        )
-    )
-    return top_k_per_group(
-        rerank, [query_id_col],
-        [F.col("cosine").desc(), F.col(id_col).asc()],
-        k=k, rank_col="rank", keep_rank=True,
-    ).withColumn("rank", F.col("rank").cast("int"))
-
-
-def kmeans_refine(vectors: DataFrame, init_centroids: DataFrame,
-                  iters: int = 3, id_col: str = "vec_id",
-                  vec_col: str = "embedding",
-                  key_col: str = "label") -> DataFrame:
-    """Lloyd iterations to turn arbitrary seed cells into geometric IVF
-    cells: assign every vector to its nearest centroid (broadcast, one
-    scan), recompute per-cell means (map-side-combining vector aggregate),
-    repeat.  Each round is scan + one small shuffle; centroid tables stay
-    broadcast-sized throughout — the standard distributed k-means plan.
-    """
-    cents = init_centroids
-    for _ in range(iters):
-        assigned = ivf_assign(vectors, cents, id_col, vec_col, key_col) \
-            .join(vectors, id_col)
-        cents = centroids_by_key(assigned, "assigned_cell", vec_col) \
-            .withColumnRenamed("assigned_cell", key_col) \
-            .localCheckpoint(eager=True)
-    return cents
 
 
 def semantic_dedup(vectors: DataFrame, id_col: str = "vec_id",

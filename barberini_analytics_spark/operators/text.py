@@ -420,27 +420,6 @@ def hash56(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 14), 16, 10).cast("long")
 
 
-def hash112(col: Column) -> Column:
-    """Deterministic 112-bit hash of a string column as a
-    ``struct<hi:long, lo:long>`` — the two 56-bit halves of the full md5
-    digest, each via the same ``conv(substr(md5(x), …, 14), 16, 10)``
-    arithmetic as :func:`hash56`, so it stays engine-portable (the
-    DuckDB oracle builds the identical struct).
-
-    Use where the keyed population is large enough that 56-bit birthday
-    collisions stop being negligible: at the 100 TB target the k-gram
-    stream is ~1e13 keys, where 56 bits yields ~1e9 expected colliding
-    pairs (n²/2⁵⁷ — each one a silently deleted real span) while 112
-    bits yields ~1e-8.  The struct is a 16-byte shuffle key vs 8 — the
-    md5 is computed once (codegen subexpression elimination) and only
-    the two longs leave the scan.
-    """
-    h = F.md5(col)
-    return F.struct(
-        F.conv(F.substring(h, 1, 14), 16, 10).cast("long").alias("hi"),
-        F.conv(F.substring(h, 15, 14), 16, 10).cast("long").alias("lo"))
-
-
 def fingerprint(df: DataFrame, text_col: str = "text",
                 out_col: str = "fingerprint") -> DataFrame:
     """Whole-document content fingerprint over normalized tokens.

@@ -29,11 +29,11 @@ def _hash56_sql(expr: str) -> str:
 
 
 def _hash112_sql(expr: str) -> str:
-    """DuckDB equivalent of ``operators.text.hash112``: the full md5
-    digest as a struct of two 56-bit BIGINT halves (the span-dedup
-    k-gram fingerprint — full-width so fingerprint collisions cannot
-    delete real spans; struct equality joins/partitions fine in both
-    engines)."""
+    """DuckDB equivalent of the ``struct<hi, lo>`` k-gram fingerprint
+    ``operators.dedup.kgram_occurrences`` builds inline: the full md5
+    digest as a struct of two 56-bit BIGINT halves (full-width so
+    fingerprint collisions cannot delete real spans; struct equality
+    joins/partitions fine in both engines)."""
     return (f"{{hi: CAST(('0x' || substring(md5({expr}), 1, 14)) AS BIGINT),"
             f" lo: CAST(('0x' || substring(md5({expr}), 15, 14)) AS BIGINT)}}")
 

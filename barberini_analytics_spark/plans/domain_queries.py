@@ -341,18 +341,6 @@ def post_view_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     return V.post(_social_tables(spark, sf_dir), advise=True)
 
 
-# NOTE: the mid-layer ``social_media_post`` union view
-# (migration_023.sql:30-90) is exercised end-to-end INSIDE
-# ``post_view_stack`` (the ``smp`` CTE feeds ``post``), so it is not
-# registered as its own query — this keeps the registry inside the
-# correctness driver's ~50-query evaluation window.  The builder remains
-# in ``domain.views`` with unit tests.
-def social_media_post_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The mid-layer union view with latest-engagement enrichment
-    (migration_023.sql:30-90)."""
-    return V.social_media_post(_social_tables(spark, sf_dir))
-
-
 # ---------------------------------------------------------------------------
 # customer_characteristics over the TPC-H-ish tables
 # ---------------------------------------------------------------------------

@@ -372,12 +372,12 @@ def ivf_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle), packed PQ codes, and ADC scores against query vector 0.
 
     Centroid build is one (key, dim) shuffle; assignment broadcasts the
-    centroid table and scans the corpus once — the inverted-file layout
-    that bounds ANN search cost at scale.  Per-dim means are summed in
-    engine-specific order, so cosines may differ in the last ulp between
-    engines; the 6-decimal round absorbs that (ties then break by cell id).
+    centroid table and scans the corpus once.  Per-dim means are summed
+    in engine-specific order, so cosines may differ in the last ulp
+    between engines; the 6-decimal round absorbs that (ties then break
+    by cell id).
 
-    The PQ half is the IVF-PQ memory tier (Jégou et al. 2011): the
+    The PQ half is product quantization (Jégou et al. 2011): the
     codebook (m=8 subspaces × k=16 codes — 128 rows, broadcast-sized) is
     trained with distributed Lloyd iterations, round-tripped through
     parquet so the Spark-side literal embed and the DuckDB oracle read
@@ -387,10 +387,10 @@ def ivf_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The residual tier (FAISS IVFPQ: codes quantize ``v̂ − ĉ(cell)``,
     ADC adds the ``dot(q̂, ĉ)`` bias back — ``operators/similarity.
-    pq_residuals`` / ``ivf_pq_search(residual=True)``) is hash-checked
-    at the same grain: persisted centroids + residual codebook are read
-    by both engines, and ``pq_resid_code``/``adc_resid_q0`` are
-    re-derived by DuckDB with identical element-order folds, unrounded.
+    pq_residuals``) is hash-checked at the same grain: persisted
+    centroids + residual codebook are read by both engines, and
+    ``pq_resid_code``/``adc_resid_q0`` are re-derived by DuckDB with
+    identical element-order folds, unrounded.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     _resid_artifacts(spark, emb, sf_dir)

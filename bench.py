@@ -455,10 +455,11 @@ def main() -> None:
     # so round-over-round totals stay comparable): the distributed
     # fallbacks that production routes to past the driver gates —
     # sharded-GSDMM (applyInPandas, one model per hash shard), LSH-DBSCAN
-    # (SRP ε-graph + label propagation), Arrow PQ encode and the IVF-PQ
-    # search grid — run here against the real bench corpus with the
-    # gates forced down, so their wall time and shuffle behavior are
-    # measured under bench conditions, not just asserted in unit tests.
+    # (SRP ε-graph + label propagation) and Arrow PQ encode — run here
+    # against the real bench corpus with the gates forced down, so their
+    # wall time and shuffle behavior are measured under bench
+    # conditions, not just asserted in unit tests.  Each path's time
+    # includes its set-up (token table, codebook, synthetic vectors).
     # NB: at sf0.1 several of these are job-latency bound (hundreds of
     # rows through iterative multi-job plans), so they measure fixed
     # scheduling cost, not data throughput; the throughput story is the
@@ -500,7 +501,7 @@ def main() -> None:
     # 1M-doc span point, EARLY and attributed (r11 verdict item 6): the
     # manual SCALE.md curve's largest point ran last under self-driven
     # loadavg ~27 and dropped 546k -> 362k tokens/s with nothing in the
-    # record to name the cause.  Run it before the ANN grid and bracket
+    # record to name the cause.  Run it before the other paths and bracket
     # it with stage-metric deltas — shuffle bytes, memory/disk spill,
     # and JVM GC time — so a sublinear tail is attributable (spill, GC,
     # or plain load) instead of mysterious.  The corpus rides a SCOPED
@@ -575,10 +576,15 @@ def main() -> None:
                 "elapsed_at_failure": round(elapsed(), 1)}
     write_detail()
 
-    tokens = _topic_tokens(spark, sf_dir)
-    n_docs = tokens.select("doc_id").distinct().count()
-    run_scale("scale_gsdmm_sharded", lambda: fit_topics_sharded(
-        tokens, n_docs=n_docs, max_docs_per_shard=max(1, n_docs // 5)))
+    # each path's set-up runs inside the thunk run_scale times, so a
+    # set-up failure records an error entry instead of ending the bench
+    def gsdmm_sharded():
+        tokens = _topic_tokens(spark, sf_dir)
+        n_docs = tokens.select("doc_id").distinct().count()
+        return fit_topics_sharded(
+            tokens, n_docs=n_docs, max_docs_per_shard=max(1, n_docs // 5))
+
+    run_scale("scale_gsdmm_sharded", gsdmm_sharded)
     run_scale("scale_dbscan_lsh", lambda: dbscan_distributed(
         load_table(spark, sf_dir, "embeddings"), eps=0.37,
         min_samples=2))
@@ -589,264 +595,19 @@ def main() -> None:
     # map-only encode)
     from barberini_analytics_spark.operators import similarity as SIM
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    cb = SIM.pq_train(emb, m=8, k=16, iters=1).collect()
-    vecs = spark.range(100_000).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(64)),
-            lambda i: ((F.pmod(F.col("id") * 31 + i * 17, 1009) - 504)
-                       / F.lit(504.0)).cast("float"),
-        ).alias("embedding")).localCheckpoint(eager=True)
-    run_scale("scale_pq_encode_100k",
-              lambda: SIM.pq_encode_arrow(vecs, cb))
+    def pq_encode_100k():
+        emb = load_table(spark, sf_dir, "embeddings")
+        cb = SIM.pq_train(emb, m=8, k=16, iters=1).collect()
+        vecs = spark.range(100_000).select(
+            F.col("id").alias("vec_id"),
+            F.transform(
+                F.sequence(F.lit(1), F.lit(64)),
+                lambda i: ((F.pmod(F.col("id") * 31 + i * 17, 1009) - 504)
+                           / F.lit(504.0)).cast("float"),
+            ).alias("embedding")).localCheckpoint(eager=True)
+        return SIM.pq_encode_arrow(vecs, cb)
 
-    # the production ANN search path (r8 verdict item 2): residual
-    # IVF-PQ over the 100k hierarchically clustered stress corpus,
-    # nprobe × shortlist grid, recording QPS and recall@10 per regime.
-    # The index is built ONCE (the build cost is what
-    # scale_pq_encode_100k measures); each regime probes the same
-    # persisted codes, so per-regime time is pure search cost — the
-    # build-once/search-many shape production runs at 100 TB.
-    try:
-        from barberini_analytics_spark.core.synthdata import (
-            clustered_vectors, honest_ivf_cells)
-
-        cvecs = clustered_vectors(spark, 100_000) \
-            .localCheckpoint(eager=True)
-        cents = honest_ivf_cells(cvecs).localCheckpoint(eager=True)
-        sample = cvecs.filter(F.col("vec_id") % 10 == 0)
-        cb_resid = SIM.pq_train(
-            SIM.pq_residuals(sample, cents), m=8, k=16, iters=1,
-            vec_col="residual", normalize=False).collect()
-        codes = SIM.ivf_pq_build(cvecs, cents, cb_resid, residual=True) \
-            .localCheckpoint(eager=True)
-        ann_queries = cvecs.filter(F.col("vec_id") % 20_000 == 17).select(
-            F.col("vec_id").alias("query_id"), "embedding")
-        exact: dict[int, set] = {}
-        for r in SIM.brute_force_topk(cvecs, ann_queries, k=10).collect():
-            exact.setdefault(r["query_id"], set()).add(r["vec_id"])
-        # ONE fixed-shortlist regime kept as the regression sentinel
-        # (r12 verdict What's-wrong 4: the other three fixed rows were
-        # proven obsolete by the auto default and burned bench tail) —
-        # sl=400 at np=4 is the row whose recall the auto default must
-        # keep matching
-        t0 = time.perf_counter()
-        got: dict[int, set] = {}
-        rows = SIM.ivf_pq_search(
-            cvecs, cents, cb_resid, ann_queries, k=10,
-            nprobe=4, shortlist=400, residual=True,
-            compressed=codes).collect()
-        dt = time.perf_counter() - t0
-        for r in rows:
-            got.setdefault(r["query_id"], set()).add(r["vec_id"])
-        recall = sum(len(exact[q] & got.get(q, set())) / 10
-                     for q in exact) / len(exact)
-        scale_timings["scale_ivf_pq_search_np4_sl400"] = {
-            "sec": round(dt, 3),
-            "qps": round(len(exact) / dt, 2),
-            "recall_at_10": round(recall, 3),
-            "n_queries": len(exact),
-            "corpus_rows": 100_000,
-            "loadavg1m": (loadavg() or [None])[0],
-        }
-        # auto-shortlist regime (r11 verdict item 2): shortlist=None
-        # derives the shortlist from the probed row count
-        # (operators/similarity.auto_shortlist — 8% of expected probed
-        # rows, floored at k*20), the default that replaces the fixed
-        # constants whose recall collapses as the corpus grows (0.10 at
-        # sl=100 on this very corpus).  The row pins the recall the
-        # auto default actually delivers at the 100k bench regime.
-        sl_auto = SIM.auto_shortlist(100_000, cents.count(), 4, k=10)
-        t0 = time.perf_counter()
-        got_auto: dict[int, set] = {}
-        for r in SIM.ivf_pq_search(
-                cvecs, cents, cb_resid, ann_queries, k=10, nprobe=4,
-                shortlist=None, residual=True,
-                compressed=codes).collect():
-            got_auto.setdefault(r["query_id"], set()).add(r["vec_id"])
-        dt = time.perf_counter() - t0
-        recall_auto = sum(len(exact[q] & got_auto.get(q, set())) / 10
-                          for q in exact) / len(exact)
-        scale_timings["scale_ivf_pq_search_np4_sl_auto"] = {
-            "sec": round(dt, 3),
-            "qps": round(len(exact) / dt, 2),
-            "recall_at_10": round(recall_auto, 3),
-            "shortlist": sl_auto,
-            "n_queries": len(exact),
-            "corpus_rows": 100_000,
-            "loadavg1m": (loadavg() or [None])[0],
-        }
-        write_detail()
-        # auto-sized cells + two-level build (r13): the full
-        # sublinear-search configuration — n_cells from auto_n_cells
-        # (√(nprobe·N)), index built via ivf_assign_two_level (the
-        # O(N·√C) path; flat assignment is the wall at this C), recall
-        # measured against the same brute-force truth.  The row guards
-        # BOTH new operators every round.
-        try:
-            t_b = time.perf_counter()
-            nc_auto = SIM.auto_n_cells(100_000, 4)
-            seeds_a = cvecs.orderBy(F.xxhash64("vec_id"), "vec_id") \
-                .limit(nc_auto).select(
-                    F.col("vec_id").alias("label"),
-                    F.col("embedding").alias("centroid"))
-            lab_a = SIM.ivf_assign_two_level(
-                cvecs, seeds_a, super_probe=2).select(
-                "vec_id", F.col("assigned_cell").alias("label"))
-            cents_a = SIM.centroids_by_key(
-                cvecs.join(lab_a, "vec_id"), "label") \
-                .localCheckpoint(eager=True)
-            ncc_a = cents_a.count()
-            cb_a = SIM.pq_train(
-                SIM.pq_residuals(cvecs.filter(F.col("vec_id") % 10 == 0),
-                                 cents_a),
-                m=8, k=16, iters=1, vec_col="residual",
-                normalize=False).collect()
-            codes_a = SIM.ivf_pq_build(cvecs, cents_a, cb_a,
-                                       residual=True, two_level=True) \
-                .localCheckpoint(eager=True)
-            codes_a.count()
-            build_a = time.perf_counter() - t_b
-            sl_a = SIM.auto_shortlist(100_000, ncc_a, 4, k=10)
-            t0 = time.perf_counter()
-            got_a: dict[int, set] = {}
-            for r in SIM.ivf_pq_search(
-                    cvecs, cents_a, cb_a, ann_queries, k=10, nprobe=4,
-                    shortlist=None, residual=True,
-                    compressed=codes_a).collect():
-                got_a.setdefault(r["query_id"], set()).add(r["vec_id"])
-            dt = time.perf_counter() - t0
-            recall_a = sum(len(exact[q] & got_a.get(q, set())) / 10
-                           for q in exact) / len(exact)
-            scale_timings["scale_ivf_pq_search_100k_auto_cells"] = {
-                "sec": round(dt, 3),
-                "qps": round(len(exact) / dt, 2),
-                "recall_at_10": round(recall_a, 3),
-                "n_cells": ncc_a,
-                "shortlist": sl_a,
-                "probed_rows_est": int(4 * 100_000 / max(ncc_a, 1)),
-                "build_sec": round(build_a, 1),
-                "n_queries": len(exact),
-                "corpus_rows": 100_000,
-                "loadavg1m": (loadavg() or [None])[0],
-            }
-        except Exception as exc:  # noqa: BLE001
-            scale_timings["scale_ivf_pq_search_100k_auto_cells"] = {
-                "error": f"{type(exc).__name__}: {exc}"}
-        write_detail()
-        # ------------------------------------------------------------------
-        # Second corpus-size point for the auto-shortlist recall claim
-        # (r12 verdict item 2): the 8%-re-rank-fraction hypothesis had
-        # exactly one measured size (100k) behind it.  Same regime
-        # (n_cells from honest seeding, nprobe=4, residual PQ), 10× the
-        # corpus: index built once, recall@10 against brute-force truth,
-        # budget-guarded so a contaminated sweep cannot eat the window.
-        # ------------------------------------------------------------------
-        ann_1m_budget = float(os.environ.get("BENCH_ANN_1M_BUDGET", "1500"))
-        if elapsed() > ann_1m_budget:
-            scale_timings["scale_ivf_pq_search_1m_auto"] = {
-                "skipped": "budget",
-                "elapsed_at_start": round(elapsed(), 1)}
-        else:
-            from barberini_analytics_spark.core.cache import (
-                release_scoped as _rel, scoped_checkpoint as _chk)
-
-            t_gen = time.perf_counter()
-            cv1m = _chk(clustered_vectors(spark, 1_000_000))
-            cents_1m = _chk(honest_ivf_cells(cv1m))
-            n_cells_1m = cents_1m.count()
-            cb_1m = SIM.pq_train(
-                SIM.pq_residuals(cv1m.filter(F.col("vec_id") % 100 == 0),
-                                 cents_1m),
-                m=8, k=16, iters=1, vec_col="residual",
-                normalize=False).collect()
-            codes_1m = _chk(SIM.ivf_pq_build(cv1m, cents_1m, cb_1m,
-                                             residual=True))
-            codes_1m.count()
-            build_sec = time.perf_counter() - t_gen
-            q_1m = cv1m.filter(F.col("vec_id") % 200_000 == 17).select(
-                F.col("vec_id").alias("query_id"), "embedding")
-            t0 = time.perf_counter()
-            exact_1m: dict[int, set] = {}
-            for r in SIM.brute_force_topk(cv1m, q_1m, k=10).collect():
-                exact_1m.setdefault(r["query_id"], set()).add(r["vec_id"])
-            brute_sec = time.perf_counter() - t0
-            sl_1m = SIM.auto_shortlist(1_000_000, n_cells_1m, 4, k=10)
-            t0 = time.perf_counter()
-            got_1m: dict[int, set] = {}
-            for r in SIM.ivf_pq_search(
-                    cv1m, cents_1m, cb_1m, q_1m, k=10, nprobe=4,
-                    shortlist=None, residual=True,
-                    compressed=codes_1m).collect():
-                got_1m.setdefault(r["query_id"], set()).add(r["vec_id"])
-            dt = time.perf_counter() - t0
-            recall_1m = sum(len(exact_1m[q] & got_1m.get(q, set())) / 10
-                            for q in exact_1m) / len(exact_1m)
-            # the decayed fixed constant, measured at the same size: the
-            # row pair (auto vs fixed-400) is the whole argument for the
-            # corpus-tracking default in two numbers
-            got_fx: dict[int, set] = {}
-            for r in SIM.ivf_pq_search(
-                    cv1m, cents_1m, cb_1m, q_1m, k=10, nprobe=4,
-                    shortlist=400, residual=True,
-                    compressed=codes_1m).collect():
-                got_fx.setdefault(r["query_id"], set()).add(r["vec_id"])
-            recall_fx = sum(len(exact_1m[q] & got_fx.get(q, set())) / 10
-                            for q in exact_1m) / len(exact_1m)
-            scale_timings["scale_ivf_pq_search_1m_auto"] = {
-                "sec": round(dt, 3),
-                "qps": round(len(exact_1m) / dt, 2),
-                "recall_at_10": round(recall_1m, 3),
-                "shortlist": sl_1m,
-                "n_cells": n_cells_1m,
-                "n_queries": len(exact_1m),
-                "corpus_rows": 1_000_000,
-                "recall_at_10_fixed_sl400": round(recall_fx, 3),
-                "build_sec": round(build_sec, 1),
-                "brute_force_sec": round(brute_sec, 1),
-                "loadavg1m": (loadavg() or [None])[0],
-                # the pinned assertion the driver can see: the auto
-                # default must hold the bench-regime recall bar at the
-                # second corpus size, else the fraction hypothesis is
-                # falsified and the row says so
-                "recall_bar_0.8": bool(recall_1m >= 0.8),
-            }
-            _rel()  # frees the 1M corpus/centroid/code checkpoints
-        write_detail()
-        # batch-QPS regimes (r9 verdict item 5): the "QPS scales with
-        # batch size, not against it" claim, measured.  Same persisted
-        # index, same nprobe/shortlist; only the query-batch size
-        # varies (5 above, 50, 500).  Per-query ADC LUTs are literal up
-        # to lut_literal_max=64 and ride a broadcast side table above
-        # it, so the 500-query regime also exercises the LUT-as-table
-        # path whose plan size is O(1) in batch size.  Recall is a
-        # per-query property independent of batch size — measured once
-        # in the grid above, not recomputed per regime.
-        for mod in (2_000, 200):  # 50 and 500 queries of the 100k corpus
-            batch = cvecs.filter(F.col("vec_id") % mod == 17).select(
-                F.col("vec_id").alias("query_id"), "embedding")
-            n_q = batch.count()
-            t0 = time.perf_counter()
-            n_rows = SIM.ivf_pq_search(
-                cvecs, cents, cb_resid, batch, k=10, nprobe=8,
-                shortlist=400, residual=True, compressed=codes).count()
-            dt = time.perf_counter() - t0
-            scale_timings[f"scale_ivf_pq_search_batch{n_q}"] = {
-                "sec": round(dt, 3),
-                "qps": round(n_q / dt, 2),
-                "n_queries": n_q,
-                "result_rows": n_rows,
-                "lut_path": "literal" if n_q <= 64 else "table",
-                "corpus_rows": 100_000,
-                "loadavg1m": (loadavg() or [None])[0],
-            }
-            write_detail()
-    except Exception as exc:  # noqa: BLE001 - never kill the bench line
-        scale_timings["scale_ivf_pq_search"] = {
-            "error": f"{type(exc).__name__}: {exc}",
-            "elapsed_at_failure": round(elapsed(), 1)}
-    write_detail()
+    run_scale("scale_pq_encode_100k", pq_encode_100k)
 
     import shutil
     import tempfile

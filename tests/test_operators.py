@@ -136,39 +136,6 @@ def test_anti_processed_drops_known_keys(spark):
     assert got == [2]
 
 
-def test_ivf_search_recall_vs_bruteforce(spark):
-    from pyspark.sql import functions as F
-
-    from barberini_analytics_spark.core.io import load_table
-    from barberini_analytics_spark.operators.similarity import (
-        brute_force_topk, centroids_by_key, ivf_search, kmeans_refine)
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    queries = (emb.filter(F.col("vec_id") % 10 == 0)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    # the synthetic label cells are not geometric — refine with Lloyd
-    # iterations first, as a real IVF build does
-    cents0 = centroids_by_key(emb, "label")
-    n_cells = cents0.count()
-    cents = kmeans_refine(emb, cents0, iters=3)
-    k = 10
-
-    exact = brute_force_topk(emb, queries, k=k)
-    approx = ivf_search(emb, cents, queries, k=k, nprobe=n_cells // 2)
-
-    e = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
-    a = {(r["query_id"], r["vec_id"]) for r in approx.collect()}
-    recall = len(e & a) / len(e)
-    # near-uniform synthetic vectors: probing half the cells must still
-    # clearly beat the scanned fraction (0.5) — geometry is doing work
-    assert recall >= 0.6, f"recall@{k} too low: {recall:.2f}"
-
-    # probing every cell must reproduce the exact result set
-    full = ivf_search(emb, cents, queries, k=k, nprobe=n_cells)
-    f = {(r["query_id"], r["vec_id"]) for r in full.collect()}
-    assert f == e
-
-
 def test_asof_join_matches_pandas_merge_asof(spark):
     import pandas as pd
 

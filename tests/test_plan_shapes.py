@@ -231,10 +231,9 @@ def test_every_lazy_query_plan_is_clean(spark):
 def test_ivf_assign_is_aggregate_not_window(spark):
     """The IVF argmax must be a partially-aggregating min_by, never a
     row_number() window: the crossJoin fans each vector out n_cells
-    times, and a window would shuffle every copy (vector bytes included
-    when keep_cols carries the embedding) — n_cells× the exchange
-    volume.  With the aggregate, map-side combine collapses the fan-out
-    back to one row per id before the wire."""
+    times, and a window would shuffle every copy — n_cells× the
+    exchange volume.  With the aggregate, map-side combine collapses
+    the fan-out back to one row per id before the wire."""
     from pyspark.sql import functions as F
 
     from barberini_analytics_spark.operators import similarity as S
@@ -242,7 +241,7 @@ def test_ivf_assign_is_aggregate_not_window(spark):
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet") \
         .select("vec_id", "embedding", "label")
     cents = S.centroids_by_key(emb)
-    assigned = S.ivf_assign(emb, cents, keep_cols=("embedding",))
+    assigned = S.ivf_assign(emb, cents)
     plan = assigned._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan, plan[:3000]
     assert "min_by" in plan, plan[:3000]
@@ -252,9 +251,10 @@ def test_ivf_assign_is_aggregate_not_window(spark):
     assert "partial_min_by" in plan, plan[:3000]
     # the fan-out-aware norm precompute must stay BIT-identical to a
     # plain per-pair cosine() (same expressions, same fold order)
-    direct = (assigned.join(
-        cents.select(F.col("label").alias("assigned_cell"), "centroid"),
-        "assigned_cell")
+    direct = (
+        assigned.join(emb.select("vec_id", "embedding"), "vec_id")
+        .join(cents.select(F.col("label").alias("assigned_cell"),
+                           "centroid"), "assigned_cell")
         .withColumn("__direct",
                     F.round(S.cosine(F.col("embedding"), F.col("centroid")),
                             6)))

@@ -1,9 +1,10 @@
-"""Product-quantization (IVF-PQ memory tier) unit tests.
+"""Product-quantization unit tests.
 
 The oracle parity of the encode + ADC chain is hash-checked inside the
 ``ivf_assignments`` entry (``plans/similarity_queries.py``); these tests
 pin the operator-level properties: codebook shape, deterministic
-map-only encoding, Lloyd convergence, and ADC ranking quality.
+map-only encoding, Arrow/expression encoder equality, Lloyd
+convergence, ADC ranking quality, and the exact residual decomposition.
 """
 
 from __future__ import annotations
@@ -122,70 +123,6 @@ def test_arrow_encode_bit_equals_expression_encode(spark, emb, codebook):
     assert exact == fast
 
 
-def test_ivf_pq_search_recall_and_shape(spark, emb, codebook):
-    """The composite probe → ADC-shortlist → exact-re-rank pipeline.
-
-    With full probing (no cell loss) and a shortlist of 100/497 the
-    exact re-rank recovers most of the true top-10 (measured ~0.90 —
-    pinned ≥ 0.7); narrowing to nprobe=4/shortlist=50 trades recall for
-    scan fraction but must stay far above the 2% random baseline.
-    Output schema matches brute_force_topk (query_id, vec_id, cosine,
-    rank)."""
-    from barberini_analytics_spark.operators.similarity import (
-        brute_force_topk, centroids_by_key, ivf_pq_search)
-
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    corpus = emb.filter(F.col("vec_id") >= 3).select("vec_id", "embedding")
-    cents = centroids_by_key(emb, "label")
-
-    exact = {}
-    for r in brute_force_topk(corpus, queries, k=10).collect():
-        exact.setdefault(r["query_id"], set()).add(r["vec_id"])
-
-    full = ivf_pq_search(corpus, cents, codebook, queries,
-                         k=10, nprobe=10, shortlist=100)
-    assert set(full.columns) == {"query_id", "vec_id", "cosine", "rank"}
-    got = {}
-    for r in full.collect():
-        got.setdefault(r["query_id"], set()).add(r["vec_id"])
-    recalls = [len(exact[q] & got[q]) / 10 for q in exact]
-    assert sum(recalls) / len(recalls) >= 0.7, recalls
-
-    narrow = ivf_pq_search(corpus, cents, codebook, queries,
-                           k=10, nprobe=4, shortlist=50)
-    got_n = {}
-    for r in narrow.collect():
-        got_n.setdefault(r["query_id"], set()).add(r["vec_id"])
-    recalls_n = [len(exact[q] & got_n[q]) / 10 for q in exact]
-    assert sum(recalls_n) / len(recalls_n) >= 0.25, recalls_n
-    # each query returns exactly k ranked rows
-    for q, ids in got_n.items():
-        assert len(ids) == 10
-
-
-def test_ivf_pq_search_lut_table_matches_literal(spark, emb, codebook):
-    """The LUT-as-table fallback (batch > lut_literal_max: per-query
-    LUTs broadcast-joined instead of literal-embedded, keeping plan size
-    O(1) in batch size) must return EXACTLY the rows of the literal
-    path — same ids, same rounded cosines, same ranks."""
-    from barberini_analytics_spark.operators.similarity import (
-        centroids_by_key, ivf_pq_search)
-
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    corpus = emb.filter(F.col("vec_id") >= 5).select("vec_id", "embedding")
-    cents = centroids_by_key(emb, "label")
-
-    def rows(lut_literal_max):
-        return sorted(
-            tuple(r) for r in ivf_pq_search(
-                corpus, cents, codebook, queries, k=10, nprobe=10,
-                shortlist=100, lut_literal_max=lut_literal_max).collect())
-
-    assert rows(0) == rows(64)  # forced table path == literal path
-
-
 def test_adc_self_query_ranks_first(spark, emb, codebook):
     """A vector scored against its own (un-excluded) corpus must rank
     itself first: quantization noise is symmetric, so nothing should
@@ -249,171 +186,3 @@ def test_pq_residuals_decomposition_is_exact(spark, emb):
     # is, which is a data property, not an operator property)
     assert np.mean(nearest) < np.mean(elsewhere), \
         (np.mean(nearest), np.mean(elsewhere))
-
-
-def test_ivf_pq_search_residual_beats_plain_on_clustered(spark):
-    """FAISS-IVFPQ-style residual encoding: same pipeline, codebook
-    trained on pq_residuals with normalize=False, ADC biased by the
-    probe cosine.
-
-    Residual codes resolve within-cell detail instead of re-describing
-    coarse structure, so on a CLUSTERED corpus (the regime real
-    embeddings live in — topic/subtopic/instance) they must beat plain
-    codes at the same narrow shortlist.  On unclustered data residuals
-    are larger than the vectors themselves and plain codes win — that
-    regime is covered by the plain-path test above; scripts/stress.py
-    measures both at 100k vectors (plain 0.36 vs residual 0.80 recall
-    at shortlist 200).
-    """
-    from barberini_analytics_spark.operators.similarity import (
-        brute_force_topk, centroids_by_key, ivf_pq_search, pq_residuals)
-
-    n, n_cells = 4000, 64
-    vecs = spark.range(n).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(64)),
-            lambda i: (
-                ((F.pmod(F.pmod(F.col("id"), 64) * 9176 + i * 131, 401)
-                  - 200) / F.lit(200.0))
-                + ((F.pmod(F.pmod(F.col("id"), 256) * 577 + i * 271, 257)
-                    - 128) / F.lit(128.0)) * 0.35
-                + ((F.pmod(F.col("id") * 40503 + i * 2654435761, 100003)
-                    - 50001) / F.lit(50001.0)) * 0.05
-            ).cast("float")).alias("embedding")).localCheckpoint(eager=True)
-    labeled = vecs.withColumn("label", F.pmod("vec_id", F.lit(n_cells)))
-    cents = centroids_by_key(labeled, "label")
-
-    queries = vecs.filter(F.col("vec_id").isin(17, 418, 2999)).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    exact = {}
-    for r in brute_force_topk(vecs, queries, k=10).collect():
-        exact.setdefault(r["query_id"], set()).add(r["vec_id"])
-
-    cb_p = S.pq_train(vecs, m=M, k=K, iters=2).collect()
-    cb_r = S.pq_train(pq_residuals(vecs, cents), m=M, k=K, iters=2,
-                      vec_col="residual", normalize=False).collect()
-    release_scoped()
-
-    def recall(cb, residual):
-        got = {}
-        out = ivf_pq_search(vecs, cents, cb, queries, k=10, nprobe=8,
-                            shortlist=15, residual=residual)
-        assert set(out.columns) == {"query_id", "vec_id", "cosine", "rank"}
-        for r in out.collect():
-            got.setdefault(r["query_id"], set()).add(r["vec_id"])
-        for q, ids in got.items():
-            assert len(ids) == 10
-        return sum(len(exact[q] & got.get(q, set())) / 10
-                   for q in exact) / len(exact)
-
-    r_plain = recall(cb_p, False)
-    r_resid = recall(cb_r, True)
-    assert r_resid > r_plain, (r_resid, r_plain)
-    assert r_resid >= 0.6, (r_resid, r_plain)
-
-
-def test_auto_shortlist_scales_with_probed_mass(spark, emb, codebook):
-    """r11 verdict ask 2: a FIXED shortlist collapses recall as the
-    corpus grows (measured 0.10@100 on 100k vectors) — the default must
-    track the probed row count.  Pins the formula's floor and linear
-    growth, and that shortlist=None runs end-to-end with the recall the
-    equivalent explicit value delivers."""
-    from barberini_analytics_spark.operators.similarity import (
-        auto_shortlist, brute_force_topk, centroids_by_key, ivf_pq_search)
-
-    # floor: tiny corpora re-rank at least k*20
-    assert auto_shortlist(1_000, 64, 4, k=10) == 200
-    # growth: 8% of expected probed rows, linear in corpus size
-    s100k = auto_shortlist(100_000, 64, 4, k=10)
-    s1m = auto_shortlist(1_000_000, 64, 4, k=10)
-    assert s100k == int(100_000 * 4 / 64 * 0.08) + 1 == 501
-    assert 9.5 <= s1m / s100k <= 10.5
-    # more probes -> proportionally more candidates to re-rank
-    assert auto_shortlist(1_000_000, 64, 8, k=10) > s1m * 1.5
-
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    corpus = emb.filter(F.col("vec_id") >= 5).select("vec_id", "embedding")
-    cents = centroids_by_key(emb, "label")
-    exact = {}
-    for r in brute_force_topk(corpus, queries, k=10).collect():
-        exact.setdefault(r["query_id"], set()).add(r["vec_id"])
-    got = {}
-    out = ivf_pq_search(corpus, cents, codebook, queries, k=10, nprobe=10)
-    for r in out.collect():
-        got.setdefault(r["query_id"], set()).add(r["vec_id"])
-    recalls = [len(exact[q] & got[q]) / 10 for q in exact]
-    assert sum(recalls) / len(recalls) >= 0.7, recalls
-    release_scoped()
-
-
-def test_auto_n_cells_minimizes_probe_cost_and_clamps():
-    """auto_n_cells is the classic √(nprobe·N) IVF sizing: the returned
-    cell count must (a) sit at the minimum of the per-query cost model
-    cost(c) = c + nprobe·N/c over a 2× neighborhood, (b) grow ~√10 per
-    corpus decade, and (c) respect the clamps."""
-    from barberini_analytics_spark.operators.similarity import auto_n_cells
-
-    for n, nprobe in ((100_000, 4), (1_000_000, 4), (10_000_000, 8)):
-        c = auto_n_cells(n, nprobe)
-
-        def cost(cells):
-            return cells + nprobe * n / cells
-
-        assert cost(c) <= cost(c // 2) and cost(c) <= cost(c * 2), \
-            (n, nprobe, c)
-    # ~√10 ≈ 3.16 growth per decade
-    ratio = auto_n_cells(1_000_000) / auto_n_cells(100_000)
-    assert 2.5 <= ratio <= 4.0, ratio
-    assert auto_n_cells(10) == 16          # min clamp
-    assert auto_n_cells(10**12) == 65_536  # max clamp
-
-
-def test_two_level_assignment_agrees_with_flat(spark):
-    """ivf_assign_two_level is the O(N·√C) build path for auto-sized
-    cell counts: on clustered geometry it must (a) agree with the flat
-    assignment for ≥ 95% of vectors, and (b) NEVER report a better
-    cosine than flat for a disagreeing row (it picks the best cell of
-    a probed SUBSET — reporting better would mean a scoring bug)."""
-    from pyspark.sql import functions as F
-
-    from barberini_analytics_spark.core.synthdata import (
-        clustered_vectors, honest_ivf_cells)
-    from barberini_analytics_spark.operators.similarity import (
-        ivf_assign, ivf_assign_two_level)
-
-    cv = clustered_vectors(spark, 8_000).localCheckpoint(eager=True)
-    cents = honest_ivf_cells(cv, n_cells=64).localCheckpoint(eager=True)
-    flat = {r["vec_id"]: (r["assigned_cell"], r["cell_cosine"])
-            for r in ivf_assign(cv, cents).collect()}
-    two = {r["vec_id"]: (r["assigned_cell"], r["cell_cosine"])
-           for r in ivf_assign_two_level(cv, cents,
-                                         super_probe=2).collect()}
-    assert set(flat) == set(two)
-    agree = sum(1 for k in flat if flat[k] == two[k]) / len(flat)
-    assert agree >= 0.95, agree
-    better = [k for k in flat if flat[k] != two[k]
-              and (two[k][1] or -9.0) > (flat[k][1] or -9.0) + 1e-9]
-    assert better == [], better[:5]
-
-
-def test_two_level_assignment_carries_keep_cols(spark):
-    """keep_cols must survive the two-level path (ivf_pq_build relies
-    on carrying the vector through the assignment — a second
-    corpus-scale join back would be a full extra shuffle)."""
-    from pyspark.sql import functions as F
-
-    from barberini_analytics_spark.core.synthdata import (
-        clustered_vectors, honest_ivf_cells)
-    from barberini_analytics_spark.operators.similarity import (
-        ivf_assign_two_level)
-
-    cv = clustered_vectors(spark, 2_000).localCheckpoint(eager=True)
-    cents = honest_ivf_cells(cv, n_cells=16).localCheckpoint(eager=True)
-    out = ivf_assign_two_level(cv, cents, super_probe=2,
-                               keep_cols=("embedding",))
-    row = out.filter(F.col("vec_id") == 7).first()
-    src = cv.filter(F.col("vec_id") == 7).first()
-    assert row["embedding"] == src["embedding"]
-    assert out.count() == 2_000

@@ -1,13 +1,21 @@
-"""Module reachability guard: every module of the package is imported by
-code that ships — the package itself, ``__spark_entry__.py``,
-``bench.py``, ``scripts/*.py`` or non-test ``perfbench/*.py``.  A module
-that only tests import is dead weight the registry, FillDb and the
-streaming entry never reach.  The same shipping files carry no unused
-imports (``__init__.py`` re-exports aside); the repository has no lint
-step, so this test is that check.
+"""Reachability guards.
+
+- Modules: every module of the package is imported by code that ships —
+  the package itself, ``__spark_entry__.py``, ``bench.py``,
+  ``scripts/*.py`` or non-test ``perfbench/*.py``.  A module that only
+  tests import is dead weight the registry, FillDb and the streaming
+  entry never reach.
+- Functions: every top-level function or class of the package is named
+  somewhere outside its own definition (the package, the entry,
+  ``bench.py``, ``scripts/``, ``perfbench/`` or ``tests/``).
+  ``@query``-registered entries are reached through the registry.
+- Imports: the shipping files carry no unused imports (``__init__.py``
+  re-exports aside); the repository has no lint step, so this test is
+  that check.
 
 Static (AST only, no Spark): relative and absolute ``import`` /
-``from … import`` statements are resolved to dotted module names.
+``from … import`` statements are resolved to dotted module names, and
+names are identifiers, attribute names and imported names.
 """
 
 from __future__ import annotations
@@ -86,6 +94,74 @@ def test_every_package_module_is_imported_by_shipping_code():
                    if s not in short.values()
                    or f"{PACKAGE}.{s}" in reached)
     assert not stale, f"EXEMPT entries missing or now imported: {stale}"
+
+
+#: top-level functions nothing names, kept on purpose, each with the
+#: reference behaviour it reproduces
+UNNAMED_EXEMPT = {
+    "domain.views.register_domain_views":
+        "reference view catalog (SURVEY §3.3): registers every domain "
+        "view as a temp view, the analogue of the Postgres views",
+    "operators.relational.attach_latest":
+        "reference migration_015.sql:53-60: NATURAL RIGHT JOIN of the "
+        "latest performance snapshot onto the post table",
+    "operators.relational.linear_deltas":
+        "reference src/_utils/data_preparation.py:292-328,363-365: the "
+        "delta_* columns of ig_post_performance (migration_051.sql)",
+    "sources.jsonc.load_jsonc":
+        "reference src/_utils/json_converters.py:25-32: JsoncToJson, "
+        "the config loader every ABSA task reads",
+}
+
+
+def _names(node: ast.AST) -> set[str]:
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rpartition(".")[2])
+    return out
+
+
+def _is_query(node: ast.AST) -> bool:
+    for d in getattr(node, "decorator_list", []):
+        f = d.func if isinstance(d, ast.Call) else d
+        if getattr(f, "id", getattr(f, "attr", None)) == "query":
+            return True
+    return False
+
+
+def test_every_package_function_is_named_outside_its_definition():
+    files = sorted((ROOT / PACKAGE).rglob("*.py"))
+    files += [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
+    for d in ("scripts", "perfbench", "tests"):
+        files += sorted((ROOT / d).rglob("*.py"))
+    defined: dict[str, str] = {}
+    named: set[str] = set()
+    for path in files:
+        tree = ast.parse(path.read_text())
+        in_package = path.is_relative_to(ROOT / PACKAGE)
+        module = _module_name(path).removeprefix(PACKAGE + ".")
+        for top in tree.body:
+            names = _names(top)
+            if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                ast.ClassDef)):
+                names.discard(top.name)  # recursion is not a use
+                if in_package and not _is_query(top):
+                    defined[f"{module}.{top.name}"] = top.name
+            named |= names
+    unnamed = sorted(k for k, n in defined.items()
+                     if n not in named and k not in UNNAMED_EXEMPT)
+    assert not unnamed, (
+        f"top-level definitions nothing names: {unnamed} — delete them, "
+        f"or add an UNNAMED_EXEMPT entry naming the reference they "
+        f"reproduce")
+    stale = sorted(k for k in UNNAMED_EXEMPT
+                   if k not in defined or defined[k] in named)
+    assert not stale, f"UNNAMED_EXEMPT entries missing or now named: {stale}"
 
 
 _NOQA_F401 = re.compile(r"#\s*noqa:[\w, ]*\bF401\b")

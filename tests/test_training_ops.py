@@ -138,36 +138,6 @@ def test_token_shard_packing_budgets_and_determinism(spark):
         {(r.doc_id, r.shard) for r in out}
 
 
-def test_incremental_dedup_only_new_content_survives(spark):
-    from barberini_analytics_spark.operators import dedup as D
-
-    corpus = spark.range(500).selectExpr(
-        "id AS doc_id", "'corpus doc number ' || CAST(id AS STRING) AS text")
-    fps, bloom = D.fingerprint_index(corpus, "doc_id", m_bits=1 << 14)
-    new = spark.range(1000).selectExpr(
-        "id + 10000 AS doc_id",
-        # first 200 replicate corpus content (different ids), rest new
-        "CASE WHEN id < 200 THEN 'corpus doc number ' || CAST(id AS STRING)"
-        " ELSE 'fresh crawl doc ' || CAST(id AS STRING) END AS text")
-    kept = D.incremental_dedup(new, fps, bloom, "doc_id")
-    got = sorted(r.doc_id for r in kept.collect())
-    assert got == list(range(10200, 11000))
-    assert kept.columns == ["doc_id", "text"]
-
-
-def test_incremental_dedup_normalizes_whitespace(spark):
-    from barberini_analytics_spark.operators import dedup as D
-
-    corpus = spark.createDataFrame(
-        [(1, "Hello   World")], "doc_id long, text string")
-    fps, bloom = D.fingerprint_index(corpus, "doc_id")
-    new = spark.createDataFrame(
-        [(2, "hello world"), (3, "goodbye world")],
-        "doc_id long, text string")
-    kept = D.incremental_dedup(new, fps, bloom, "doc_id").collect()
-    assert [r.doc_id for r in kept] == [3]  # 2 is a normalized dup
-
-
 def test_assign_token_shards_no_nulls_at_scale(spark):
     """Regression (sf0.1 oracle sweep): the totals job and the window job
     must see the SAME partition ids — AQE re-coalescing the range
