@@ -110,7 +110,12 @@ def release_scoped(since: tuple[int, int] | None = None) -> None:
 
 
 class FrameCache:
-    """Keyed LRU of persisted DataFrames with unpersist-on-evict."""
+    """Keyed LRU of persisted DataFrames with unpersist-on-evict.
+
+    A frame that optimizes to a ``LocalRelation`` (driver-built rows)
+    is kept unpersisted: its rows already live in the plan, and a
+    persist would only add a cache-build job to its first use and an
+    in-memory scan job to every broadcast of it."""
 
     def __init__(self, max_entries: int = 2):
         self.max_entries = max_entries
@@ -122,7 +127,10 @@ class FrameCache:
         if key in self._entries:
             self._entries.move_to_end(key)
             return self._entries[key]
-        df = build().persist()
+        df = build()
+        if (df._jdf.queryExecution().optimizedPlan().getClass()
+                .getSimpleName() != "LocalRelation"):
+            df.persist()
         self._entries[key] = df
         while len(self._entries) > self.max_entries:
             _, old = self._entries.popitem(last=False)

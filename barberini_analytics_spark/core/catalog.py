@@ -51,6 +51,8 @@ import threading
 
 from pyspark.sql import DataFrame
 
+from .io import read_spark_parquet
+
 _P_BITS = 10  # register precision for stored join-key sketches
 
 # ---------------------------------------------------------------------------
@@ -117,6 +119,19 @@ def _local_path(uri: str) -> str:
     return uri
 
 
+_LOCAL_RELATION = "org.apache.spark.sql.catalyst.plans.logical.LocalRelation"
+
+
+def _local_rows_digest(leaf) -> str:
+    """sha256 of a LocalRelation leaf's rows, rendered by the JVM as a
+    ``VALUES`` clause: quoted, typed literals keep ``('a,b', 'c')`` apart
+    from ``('a', 'b,c')``, which the bare row ``toString`` prints alike
+    as ``[a,b,c]``."""
+    if leaf.data().isEmpty():  # toSQL needs a row
+        return "empty"
+    return hashlib.sha256(leaf.toSQL("t").encode()).hexdigest()
+
+
 def plan_fingerprint(df: DataFrame) -> str:
     """Content key for a frame: sha256 of the full canonicalized plan
     STRING plus the identity+mtime+size of every input file, so
@@ -137,11 +152,20 @@ def plan_fingerprint(df: DataFrame) -> str:
     byte-identical canonical plans, which is equality, not chance.
     When the string cannot be rendered, fall back to semanticHash +
     files (weaker: within-session validity, still content-safe for
-    stable leaves)."""
+    stable leaves).
+
+    A ``LocalRelation`` prints as its column list only, whatever its
+    rows, so the sha256 of each one's rows is folded in too
+    (:func:`_local_rows_digest`)."""
     try:
-        plan_str = (df._jdf.queryExecution().analyzed().canonicalized()
-                    .toString())
-        h = hashlib.sha256(b"plan-string:" + plan_str.encode())
+        plan = df._jdf.queryExecution().analyzed()
+        h = hashlib.sha256(
+            b"plan-string:" + plan.canonicalized().toString().encode())
+        leaves = plan.collectLeaves().iterator()
+        while leaves.hasNext():
+            leaf = leaves.next()
+            if leaf.getClass().getName() == _LOCAL_RELATION:
+                h.update(b"|rows:" + _local_rows_digest(leaf).encode())
     except Exception:
         h = hashlib.sha256(
             b"semantic-only:" + str(df.semanticHash()).encode())
@@ -160,8 +184,9 @@ def plan_fingerprint(df: DataFrame) -> str:
 #: ``LogicalRDD [cols]`` for ANY data (measured: two different
 #: checkpointed corpora render byte-identical canonical plans), so a
 #: fingerprint over such a plan could serve another frame's statistics
-#: across sessions.  Range and LocalRelation are safe — their content
-#: is part of the canonicalized plan itself.
+#: across sessions.  Range and LocalRelation are safe — a Range's bounds
+#: are in the canonicalized plan, a LocalRelation's rows are digested
+#: into the fingerprint.
 _UNSTABLE_LEAVES = ("LogicalRDD", "ExistingRDD")
 
 
@@ -604,7 +629,6 @@ class StatsCatalog:
         fingerprints, so they are already unreachable.  Never raises —
         statistics maintenance must not fail a write."""
         try:
-            df = spark.read.parquet(path)
-            return self.side_summary(df)
+            return self.side_summary(read_spark_parquet(spark, path))
         except Exception:
             return None

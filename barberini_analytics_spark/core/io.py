@@ -73,6 +73,58 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(table_path(sf_dir, name))
 
 
+#: footer key under which Spark's parquet writer stores the row schema
+_SPARK_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _first_data_file(path: str) -> str | None:
+    """The first data file of a table directory in sorted order, skipping
+    ``_``/``.``-prefixed names (``_SUCCESS``, ``.crc``, ``_temporary``) as
+    Spark's file index does, and descending into partition directories."""
+    if os.path.isfile(path):
+        return path
+    try:
+        names = sorted(n for n in os.listdir(path)
+                       if not n.startswith(("_", ".")))
+    except OSError:
+        return None
+    for n in names:
+        found = _first_data_file(os.path.join(path, n))
+        if found is not None:
+            return found
+    return None
+
+
+def written_schema(path: str):
+    """The ``StructType`` a Spark writer stored in the first data file's
+    footer, or ``None`` (no data file, or a file another writer made)."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    first = _first_data_file(path)
+    if first is None:
+        return None
+    try:
+        meta = pq.read_metadata(first).metadata or {}
+    except (OSError, ValueError):
+        return None
+    raw = meta.get(_SPARK_ROW_SCHEMA_KEY)
+    return None if raw is None else StructType.fromJson(json.loads(raw))
+
+
+def read_spark_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` for a table Spark wrote, without the
+    schema-inference job: the schema comes from the footer key Spark's
+    writer stores (:func:`written_schema`).  Partition columns are still
+    discovered from the directory names, so the read schema equals the
+    inferred one; files without the key keep normal inference."""
+    schema = written_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 

@@ -22,6 +22,13 @@ EXPLICIT types — inline-table literals would otherwise infer
 ``1 → INT`` and ``1.5 → DECIMAL``, while ``createDataFrame`` inferred
 ``LongType``/``DoubleType``; the DDL cast list keeps schemas identical
 to the frames these tables replace (the oracle hash covers schema).
+
+Driver-COMPUTED rows (a folded model, a driver-side fit's labels) go
+through :func:`arrow_df` / :func:`rows_df` instead: an Arrow table handed
+to ``createDataFrame`` also lands as a ``LocalRelation`` (measured: no
+python worker starts, where ``createDataFrame(parallelize(rows, 1))``
+spawned the worker daemon), and it takes numpy columns and empty inputs
+without rendering every value as SQL text.
 """
 
 from __future__ import annotations
@@ -79,6 +86,33 @@ def values_df(spark: SparkSession, rows, schema_ddl: str) -> DataFrame:
     if not rendered:
         raise ValueError("values_df needs at least one row")
     return spark.sql(f"SELECT {sel} FROM VALUES {', '.join(rendered)}")
+
+
+def arrow_df(spark: SparkSession, columns, schema_ddl: str) -> DataFrame:
+    """A LocalRelation from driver-side COLUMNS (one sequence or numpy
+    array per DDL column, in order) with the EXACT DDL schema.
+
+    The columns are typed by the schema's Arrow mapping up front, so the
+    frame's schema never depends on Arrow's inference from the values;
+    zero-length columns give an empty LocalRelation.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(schema_ddl)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
+
+
+def rows_df(spark: SparkSession, rows, schema_ddl: str) -> DataFrame:
+    """:func:`arrow_df` over driver-side ROW tuples (empty allowed)."""
+    n_cols = len(_split_top(schema_ddl))
+    columns = list(zip(*rows)) or [()] * n_cols
+    return arrow_df(spark, columns, schema_ddl)
 
 
 def _split_top(ddl: str) -> list[str]:

@@ -39,6 +39,8 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from .io import read_spark_parquet
+
 
 def _exists(path: str) -> bool:
     return os.path.exists(path)
@@ -69,7 +71,7 @@ def _refresh_stats(spark: SparkSession, path: str) -> int:
             return int(summary["rows"])
     except Exception:
         pass
-    return spark.read.parquet(path).count()
+    return read_spark_parquet(spark, path).count()
 
 
 def overwrite(df: DataFrame, path: str,
@@ -120,7 +122,7 @@ def _stored_pruned(spark: SparkSession, path: str, batch: DataFrame,
     filtered after the read.  Pinned by tests/test_plan_shapes.py.
     """
     part_rows = batch.select(*partition_cols).distinct().collect()
-    stored = spark.read.parquet(path)
+    stored = read_spark_parquet(spark, path)
     if not part_rows:
         return stored.limit(0)
     conds = [
@@ -169,7 +171,7 @@ def upsert_by_pk(spark: SparkSession, batch: DataFrame, path: str,
     if partition_cols:
         stored = _stored_pruned(spark, path, batch, partition_cols)
     else:
-        stored = spark.read.parquet(path)
+        stored = read_spark_parquet(spark, path)
     merged = (
         batch.withColumn("__is_new", F.lit(1))
         .unionByName(stored.withColumn("__is_new", F.lit(0)),
@@ -197,7 +199,7 @@ def materialize(df: DataFrame, path: str,
     reader over the materialized result so downstream stages scan parquet
     instead of recomputing the plan (the reference's ABSA caches)."""
     overwrite(df, path, partition_cols)
-    return df.sparkSession.read.parquet(path)
+    return read_spark_parquet(df.sparkSession, path)
 
 
 def concat_frames(dfs: Sequence[DataFrame]) -> DataFrame:

@@ -15,7 +15,6 @@ lakes.
 
 from __future__ import annotations
 
-import hashlib
 from collections import deque
 
 from pyspark.sql import DataFrame, functions as F
@@ -342,8 +341,7 @@ HINT_DECISIONS: deque = deque(maxlen=64)
 
 
 def measured_hint(df: DataFrame, *, broadcast_bytes: int | None = None,
-                  catalog=None, use_catalog: bool = True,
-                  assume_content_stable: str | None = None
+                  catalog=None, use_catalog: bool = True
                   ) -> tuple[DataFrame, dict]:
     """Materialize-then-decide join hint for a derived (non-scan) side:
     persist ``df`` (query-scoped), run it, read its ACTUAL cached bytes
@@ -390,30 +388,7 @@ def measured_hint(df: DataFrame, *, broadcast_bytes: int | None = None,
     None`` reads the session's ``spark.sql.autoBroadcastJoinThreshold``
     (falling back to 10 MB when auto-broadcast is disabled — the
     explicit hint is legal and cheap regardless of the auto setting).
-
-    ``assume_content_stable=<version>`` is the caller-asserted override
-    of ``fingerprint_is_content_stable`` for plans whose only RDD-backed
-    leaves are DETERMINISTIC functions of the plan's file inputs (e.g.
-    a driver-folded model built from a collect over the same parquet
-    scan the plan reads — the fingerprint already covers those files'
-    mtime+size, so it fully determines the leaf's content even though
-    the generic check cannot prove it).  The argument is the version of
-    the code that derives those leaves (e.g.
-    ``operators.text.NGRAM_LM_VERSION``), hashed into the catalog key:
-    an RDD-backed leaf renders identically whatever the derivation
-    computes, so a derivation change that leaves the plan string and
-    the input files alone is only seen through the bumped version.
-    ``True`` is rejected — every assertion names what it assumes.  The
-    assertion is sizing-only: the catalog stores byte/row FACTS and the
-    broadcast-vs-merge decision is re-derived per call, so a wrong
-    assertion can mis-size a hint but never change results.
     """
-    if assume_content_stable is not None and (
-            not isinstance(assume_content_stable, str)
-            or not assume_content_stable):
-        raise TypeError("assume_content_stable takes the version string "
-                        "of the code deriving the plan's RDD-backed "
-                        f"leaves, got {assume_content_stable!r}")
     from .cache import scoped_persist
 
     spark = df.sparkSession
@@ -443,13 +418,9 @@ def measured_hint(df: DataFrame, *, broadcast_bytes: int | None = None,
             from .catalog import (StatsCatalog, fingerprint_is_content_stable,
                                   plan_fingerprint)
 
-            if assume_content_stable or fingerprint_is_content_stable(df):
+            if fingerprint_is_content_stable(df):
                 cat = catalog or StatsCatalog.default()
                 key = plan_fingerprint(df)
-                if assume_content_stable:
-                    key = hashlib.sha256(
-                        f"{key}|{assume_content_stable}".encode()
-                    ).hexdigest()[:32]
                 hit = cat.hint_bytes(key)
                 if hit is not None:
                     # stored FACTS, fresh decision: the threshold is the

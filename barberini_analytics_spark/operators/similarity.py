@@ -117,9 +117,9 @@ def centroids_by_key(vectors: DataFrame, key_col: str = "label",
 
 def ivf_assign(vectors: DataFrame, centroids: DataFrame,
                id_col: str = "vec_id", vec_col: str = "embedding",
-               key_col: str = "label",
-               centroid_col: str = "centroid") -> DataFrame:
-    """Nearest-centroid assignment (the IVF build step).
+               key_col: str = "label") -> DataFrame:
+    """Nearest-centroid assignment (the IVF build step).  ``centroids``
+    holds ``key_col`` and a ``centroid`` array (``centroids_by_key``).
 
     Broadcast the centroid table (bounded: n_cells × dim), score every
     vector against every cell in one projection, keep the argmax by
@@ -143,8 +143,8 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame,
     # same fold order, so the rounded cosines are bit-identical to
     # cosine() (equality pinned by tests/test_plan_shapes.py).
     c = centroids.select(
-        F.col(key_col).alias("cell"), F.col(centroid_col),
-        _norm2(F.col(centroid_col)).alias("__cnrm"),
+        F.col(key_col).alias("cell"), "centroid",
+        _norm2(F.col("centroid")).alias("__cnrm"),
     )
     v = vectors.withColumn("__vnrm", _norm2(F.col(vec_col)))
     scored = (
@@ -152,7 +152,7 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame,
         .select(
             id_col,
             "cell",
-            F.round(_dot(F.col(vec_col), F.col(centroid_col))
+            F.round(_dot(F.col(vec_col), F.col("centroid"))
                     / (F.col("__vnrm") * F.col("__cnrm")), 6)
             .alias("cosine"),
         )

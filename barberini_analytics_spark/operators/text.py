@@ -17,7 +17,12 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
+
+from ..core.cache import FrameCache, scoped_persist
+from ..core.catalog import fingerprint_is_content_stable, plan_fingerprint
+from ..core.localrel import arrow_df
 
 #: default stopword list for the synthetic corpus (the reference ships a
 #: 176-word German list, data/stopwords.csv — swap in per deployment)
@@ -196,11 +201,14 @@ def language_id(df: DataFrame, text_col: str = "text",
 
 
 #: version of :func:`ngram_lm_score`'s driver-folded model (the trigram
-#: coding, smoothing and fold).  The model is an RDD-backed leaf whose
-#: plan string does not show its content, so callers that size it from
-#: the stats catalog salt the key with this; bump it on any change to
-#: how the model is derived.
-NGRAM_LM_VERSION = "ngram-lm-1"
+#: coding, smoothing and fold), part of the model memo's key: bump it on
+#: any change to how the model is derived.
+NGRAM_LM_VERSION = "ngram-lm-2"
+
+#: per-input model memo (a re-run over unchanged input collects nothing)
+_LM_MODELS = FrameCache(max_entries=2)
+
+_LOW21 = (1 << 21) - 1
 
 
 def ngram_lm_score(df: DataFrame, id_col: str = "doc_id",
@@ -222,102 +230,85 @@ def ngram_lm_score(df: DataFrame, id_col: str = "doc_id",
 
     100 TB shape: the model is one hash aggregate whose result is
     bounded by the alphabet cubed — broadcast to the scoring join, so
-    scoring is a map-side join + one per-document aggregate.  No UDFs,
-    no per-row Python.  The trigram frame feeds both the model counts
-    and the scoring pass, so it is query-scope persisted (and re-spread
-    first: without it Catalyst re-runs the explode per consumer,
-    serially on an unsplittable single-row-group input).  The model
-    itself is folded from the collected ``C₃`` rows on the driver —
-    bounded by the same alphabet³ argument that makes the model
-    broadcastable in the first place.
-    """
-    from ..core.cache import scoped_persist
+    scoring is a map-side join + one per-document aggregate.  No UDFs
+    and no Python worker: every step is a JVM expression.  The trigram
+    frame feeds both the model counts and the scoring pass, so it is
+    query-scope persisted (and re-spread first: without it Catalyst
+    re-runs the explode per consumer, serially on an unsplittable
+    single-row-group input).
 
+    Each trigram travels as a BIJECTIVE int64 code: three code points
+    ≤ U+10FFFF < 2²¹, packed ``cp₀<<42 | cp₁<<21 | cp₂`` (always
+    positive).  ``split(s, '')`` splits on code points and ``ascii``
+    returns a one-character string's code point (astral ones too); the
+    document becomes one code-point array, and three shifted ``slice``s
+    of it zipped and exploded once give every trigram in document order
+    (2.6× faster than zipping the one-character strings: 100k docs,
+    4 vCPUs), so the ``avg`` accumulates in the same order as any
+    per-document loop would.  Documents shorter than 3 code points (and
+    NULL text) emit no rows — the ``when`` guard also keeps ``slice``
+    away from its negative-length error.  The code↔trigram map
+    is bijective, so every count (C₃, C₂ via the top-42-bit prefix, V
+    via the low-21-bit third char) equals its string-grain twin
+    integer-for-integer — pinned against a string-sliced reference
+    model in tests/test_operators.py.
+
+    The model is folded on the driver from the collected ``C₃`` rows —
+    bounded by the same alphabet³ argument that makes it broadcastable —
+    and handed back as an Arrow-built ``LocalRelation``: zero jobs to
+    broadcast, no Python worker, and a content fingerprint.  When the
+    input's fingerprint determines its content (file and plan-embedded
+    leaves), the model is memoized per (input, columns, ``add_k``,
+    :data:`NGRAM_LM_VERSION`), so a re-run over unchanged input skips
+    the collect.
+    """
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions",
                                           "32"))
-
-    # Char-trigram explode as ONE Arrow pass (guide §4.2): the
-    # `transform(sequence(...), i -> substr(i, 3))` lambda is evaluated
-    # interpreted per row outside codegen, and UTF8String.substr is
-    # O(i) per call — O(len²) per document.  r13 second pass: each
-    # trigram travels as a BIJECTIVE int64 code (three code points ≤
-    # U+10FFFF < 2²¹, packed ``cp₀<<42 | cp₁<<21 | cp₂`` — always
-    # positive in a signed 64-bit int), built numpy-vectorized from the
-    # UTF-32 encoding of the JVM-lowered text.  vs the string explode
-    # this removes the per-document Python slicing loop (1.48M PyString
-    # builds at sf0.1) and shrinks the cached/shuffled key to 8 fixed
-    # bytes.  EXACTNESS: the code↔trigram map is bijective, so every
-    # count (C₃, C₂ via the top-42-bit prefix, V via the low-21-bit
-    # third char) equals its string-grain twin integer-for-integer, the
-    # model doubles are identical, and per-doc emission order is
-    # unchanged so the score ``avg`` accumulates in the same order —
-    # pinned against a string-sliced reference model in
-    # tests/test_operators.py.  Documents shorter than 3 code points
-    # emit no rows, matching explode(NULL).
-    def _tri_batches(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            lts = batch.column(1).to_pylist()
-            id_parts, code_parts = [], []
-            for i, lt in zip(ids, lts):
-                if lt is None or len(lt) < 3:
-                    continue
-                cp = np.frombuffer(lt.encode("utf-32-le"),
-                                   dtype=np.uint32).astype(np.int64)
-                code_parts.append(
-                    (cp[:-2] << 42) | (cp[1:-1] << 21) | cp[2:])
-                id_parts.append((i, len(cp) - 2))
-            if code_parts:
-                codes = np.concatenate(code_parts)
-                out_ids = [i for i, n in id_parts for _ in range(n)]
-            else:
-                codes = np.empty(0, dtype=np.int64)
-                out_ids = []
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, type=batch.schema.field(0).type),
-                 pa.array(codes, type=pa.int64())],
-                names=[id_col, "__tri"])
-
-    id_field = df.schema[id_col]
+    chars = F.split(F.lower(F.trim(F.col(text_col))), "")
+    cps = F.col("__cp")
+    n = F.size(cps)
+    tri = F.explode(F.when(n >= 3, F.arrays_zip(
+        F.slice(cps, 1, n - 2), F.slice(cps, 2, n - 2),
+        F.slice(cps, 3, n - 2)))).alias("__z")
     doc_tris = scoped_persist(
         df.repartition(n_part)
-        .select(id_col, F.lower(F.trim(F.col(text_col))).alias("__lt"))
-        .mapInArrow(_tri_batches,
-                    f"{id_col} {id_field.dataType.simpleString()}, "
-                    "__tri long"))
-    # model fold on the driver (guide §1.2 job-count economics): C₃ is
-    # alphabet³-bounded — broadcast-sized BY DESIGN (``F.broadcast(model)``
-    # below already collects the same rows into the driver inside the
-    # broadcast build), so deriving C₂ and V from the collected counts is
-    # the same memory class but removes the c3 persist + the c2/v/model
-    # broadcast-build job cascade from the per-run chain (measured 18 →
-    # 12 driver jobs at sf0.1 — pure scheduler latency on tiny frames).
-    # Every fold is INTEGER-exact; ``log`` stays a Spark expression over
-    # the exact ints, so the model doubles are bit-identical to the
-    # aggregate-built twin (pinned by the hand-computed test).
-    c3_rows = doc_tris.groupBy("__tri").agg(
-        F.count(F.lit(1)).alias("__c3")).collect()
-    c2: dict = {}
-    vset: set = set()
-    for r in c3_rows:
-        code = r["__tri"]
-        c2[code >> 21] = c2.get(code >> 21, 0) + r["__c3"]
-        vset.add(code & ((1 << 21) - 1))
-    spark = df.sparkSession
-    model = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(r["__tri"], r["__c3"], c2[r["__tri"] >> 21])
-             for r in c3_rows], 1),
-        "__tri long, __c3 long, __c2 long",
-    ).select(
-        "__tri",
-        F.log((F.col("__c3") + F.lit(add_k))
-              / (F.col("__c2") + F.lit(add_k) * F.lit(len(vset))))
-        .alias("__logp"),
-    )
+        .select(id_col, F.transform(chars, lambda c: F.ascii(c).cast("long"))
+                .alias("__cp"))
+        .select(id_col, tri)
+        .select(id_col, F.shiftleft("__z.0", 42)
+                .bitwiseOR(F.shiftleft("__z.1", 21))
+                .bitwiseOR(F.col("__z.2")).alias("__tri")))
+
+    def build() -> DataFrame:
+        # Every fold is INTEGER-exact; ``log`` stays a Spark expression
+        # over the exact ints, so the model doubles are bit-identical to
+        # an aggregate-built twin (pinned by the hand-computed test).
+        c3 = (doc_tris.groupBy("__tri").agg(F.count(F.lit(1)).alias("__c3"))
+              .toArrow())
+        # code order makes the LocalRelation's rows — and so its
+        # fingerprint — independent of the aggregate's output order
+        codes = c3.column("__tri").to_numpy()
+        order = np.argsort(codes)
+        codes, counts = codes[order], c3.column("__c3").to_numpy()[order]
+        prefixes, inv = np.unique(codes >> 21, return_inverse=True)
+        c2 = np.zeros(len(prefixes), dtype=np.int64)
+        np.add.at(c2, inv, counts)
+        v = len(np.unique(codes & _LOW21))
+        return arrow_df(
+            df.sparkSession, [codes, counts, c2[inv]],
+            "__tri bigint, __c3 bigint, __c2 bigint",
+        ).select(
+            "__tri",
+            F.log((F.col("__c3") + F.lit(add_k))
+                  / (F.col("__c2") + F.lit(add_k) * F.lit(v)))
+            .alias("__logp"))
+
+    if fingerprint_is_content_stable(df):
+        model = _LM_MODELS.get_or_build(
+            (plan_fingerprint(df), id_col, text_col, add_k,
+             NGRAM_LM_VERSION), build)
+    else:
+        model = build()
     scores = (
         doc_tris.join(F.broadcast(model), "__tri")
         .groupBy(id_col)
@@ -347,8 +338,6 @@ def tfidf_top_terms(tokens: DataFrame, k: int = 3, id_col: str = "doc_id",
     Scale shape: two hash aggregates + one broadcast-keyed join on
     ``word`` + one per-doc window; nothing is driver-side.
     """
-    from ..core.cache import scoped_persist
-
     # persist tf: it feeds THREE consumers (dfreq, the N-docs aggregate,
     # and the score join).  The broadcast-vs-merge decision on the word
     # join is owned by the measured hint on dfreq below — the document-

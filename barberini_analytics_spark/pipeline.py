@@ -63,6 +63,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.util import inheritable_thread_target
 
 from .core import sinks
+from .core.io import read_spark_parquet
 from .core.localrel import values_df
 from .domain import views as V
 from .operators.fuzzy import match_occurrences
@@ -127,7 +128,8 @@ def _upsert_tables(spark: SparkSession, warehouse: str,
 
 def _read_tables(spark: SparkSession, warehouse: str,
                  names) -> dict[str, DataFrame]:
-    return {n: spark.read.parquet(_table_path(warehouse, n)) for n in names}
+    return {n: read_spark_parquet(spark, _table_path(warehouse, n))
+            for n in names}
 
 
 # ---------------------------------------------------------------------------
@@ -171,7 +173,7 @@ def absa_to_db(spark: SparkSession, warehouse: str) -> dict[str, int]:
     ``post_aspect`` and ``post_sentiment`` (src/absa/* chain)."""
     from .plans.absa_queries import ASPECT_WORDS, POLARITY_DECIPOINTS
 
-    post = spark.read.parquet(_table_path(warehouse, "post"))
+    post = read_spark_parquet(spark, _table_path(warehouse, "post"))
     tokens = tokenize(post, ["source", "post_id"])
     aspects = values_df(spark, [(w,) for w in ASPECT_WORDS],
                         "matched string")
@@ -204,7 +206,7 @@ def topics_to_db(spark: SparkSession, warehouse: str) -> dict[str, int]:
     one topic per post (src/topic_modeling.py)."""
     from .plans.ml_queries import _fit_topics
 
-    post = spark.read.parquet(_table_path(warehouse, "post"))
+    post = read_spark_parquet(spark, _table_path(warehouse, "post"))
     # surrogate numeric doc id for the fit: deterministic hash of the PK
     keyed = post.withColumn(
         "__doc_id", F.abs(F.xxhash64("source", "post_id")))

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..core.io import load_table
+from ..core.localrel import rows_df
 from ..operators import dedup as D
 from ..operators import text as X
 from .registry import query
@@ -468,13 +469,10 @@ def minhash_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
         sym = edge_rows + [(b, a) for a, b in edge_rows]
         labels = connected_components_local(sym)
         ranks = pagerank_local(sym, damping=_PR_DAMP, n_iter=_PR_ITERS)
-        sc = spark.sparkContext
-        comp_df = spark.createDataFrame(
-            sc.parallelize(sorted(labels.items()), 1),
-            "id_a bigint, group_id bigint")
-        pr_df = spark.createDataFrame(
-            sc.parallelize(sorted(ranks.items()), 1),
-            "id_a bigint, rank double")
+        comp_df = rows_df(spark, sorted(labels.items()),
+                          "id_a bigint, group_id bigint")
+        pr_df = rows_df(spark, sorted(ranks.items()),
+                        "id_a bigint, rank double")
         return (
             pairs.join(F.broadcast(comp_df), "id_a")
             .join(F.broadcast(pr_df.select(

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..core.cache import FrameCache
 from ..core.io import load_table
+from ..core.localrel import rows_df
 from ..core.scratch import scratch_path
 from ..ml.dbscan import cosine_dbscan
 from ..ml.gsdmm import GSDMM, fit_topics_sharded
@@ -321,16 +322,10 @@ def _fit_topics(tokens: DataFrame, cache_key: object,
         labels = GSDMM(n_clusters=10, alpha=0.1, beta=0.1, n_iters=30,
                        seed=42).fit_predict([r.words for r in grouped])
         rows = [(int(d), int(z)) for d, z in zip(doc_ids, labels)]
-        # single-slice parallelize (the dbscan/forecast pattern): the
-        # default createDataFrame splits a tiny driver list into ~32
-        # python-runner slices, and r13's blanket rebalance-before-write
-        # coalesced them back at the cost of one AQE exchange per run
-        # (driver-measured 0.8 → 1.2 s).  One slice = one write task =
-        # one file, no exchange.  The raw rows ride along so the writer
-        # can skip Spark entirely on this bounded driver-side branch.
-        out = spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1),
-            "doc_id long, topic long")
+        # a LocalRelation: no python-runner slices and no jobs to
+        # broadcast.  The raw rows ride along so the writer can skip
+        # Spark entirely on this bounded driver-side branch.
+        out = rows_df(spark, rows, "doc_id long, topic long")
         out._ba_local_rows = rows
         return out
 
@@ -537,19 +532,11 @@ def visitor_prediction_forecast(spark: SparkSession,
         history.append(pred)
         scaled_preds.append((step, pred))
         out.append((day, int(scaler.inverse(np.array([pred]))[0])))
-    # persist the model core's raw outputs for the oracle's rail re-check.
-    # numSlices=1: a coalesce(1) over the default 32 parallelize slices
-    # would chain 32 sequential Python-runner round-trips into one task
-    # (~4 s of pure scheduling for 7 rows)
-    preds_rows = spark.sparkContext.parallelize(scaled_preds, 1)
-    spark.createDataFrame(preds_rows, "step int, scaled double") \
+    # persist the model core's raw outputs for the oracle's rail re-check
+    # as one file (a LocalRelation scans in up to one slice per row)
+    rows_df(spark, scaled_preds, "step int, scaled double").coalesce(1) \
         .write.mode("overwrite").parquet(_FORECAST_PREDS_PATH)
-    # single slice (see preds above): the default createDataFrame split
-    # the 7-row result into ~32 python-runner slices, so every
-    # materialization of the returned frame paid a 32-task scheduling
-    # job for 7 rows
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(out, 1), "date date, entries bigint")
+    return rows_df(spark, out, "date date, entries bigint")
 
 
 # ---------------------------------------------------------------------------

@@ -15,7 +15,9 @@ DataFrame MAY run Spark jobs before any action — the statistics layer's
 ``measured_hint`` measures a join side once per corpus version (zero jobs
 on a catalog hit), and driver-folded models (``ngram_lm_score``'s C₃
 collect, the gated ML fits) collect bounded frames at plan-construction
-time.  Callers that only want to INSPECT a plan (explain, tests) should
+time.  ``ngram_lm_score`` memoizes its model per input version in the
+process, so a re-construction over unchanged files collects nothing.
+Callers that only want to INSPECT a plan (explain, tests) should
 expect those jobs; the bench/driver time construction + execution
 together, so the contract costs nothing it wouldn't pay anyway.
 """

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..core.io import load_table
+from ..core.localrel import rows_df
 from ..core.scratch import scratch_path
 from ..operators import similarity as S
 from .registry import query
@@ -164,8 +165,9 @@ def _pq_codebook(spark: SparkSession, emb: DataFrame, sf_dir: str) -> list:
     elif _PQ_LAST_WRITTEN and _PQ_LAST_WRITTEN[-1] != sf_dir:
         # the shared scratch file holds another sf's codebook — restore
         # this sf's rows so the oracle reads what the Spark side embeds
-        # (doubles survive the createDataFrame round-trip exactly)
-        spark.createDataFrame(
+        # (doubles survive the Arrow round-trip exactly)
+        rows_df(
+            spark,
             [(r["sub"], r["code"], list(r["centroid"]))
              for r in _PQ_CB_CACHE[sf_dir]],
             "sub int, code int, centroid array<double>",
@@ -208,11 +210,12 @@ def _resid_artifacts(spark: SparkSession, emb: DataFrame,
             spark.read.parquet(_RESID_CB_PATH).collect())
     elif _RESID_LAST and _RESID_LAST[-1] != sf_dir:
         cents_rows, cb_rows = _RESID_CACHE[sf_dir]
-        spark.createDataFrame(
-            [(r["label"], list(r["centroid"])) for r in cents_rows],
+        rows_df(
+            spark, [(r["label"], list(r["centroid"])) for r in cents_rows],
             "label int, centroid array<double>",
         ).write.mode("overwrite").parquet(_IVF_CENTS_PATH)
-        spark.createDataFrame(
+        rows_df(
+            spark,
             [(r["sub"], r["code"], list(r["centroid"])) for r in cb_rows],
             "sub int, code int, centroid array<double>",
         ).write.mode("overwrite").parquet(_RESID_CB_PATH)

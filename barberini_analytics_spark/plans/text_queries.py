@@ -172,15 +172,15 @@ def document_token_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inside the action; a miss measures once per corpus version.  At
     # bench scale the stored bytes broadcast the ~5k-row dim, at corpus
     # scale they exceed the threshold and the join degrades to the
-    # partitioned plan.  `assume_content_stable` is required — and
-    # honest — because the lm side embeds the driver-folded trigram
-    # model (an RDD-backed leaf) whose content is a pure function of
-    # the same documents parquet the fingerprint covers and of the
-    # model code, whose version salts the catalog key.
+    # partitioned plan.  The lm side's driver-folded trigram model is a
+    # LocalRelation whose rows are digested into the fingerprint, so the
+    # dim is content-stable and its key is reproducible across sessions.
+    # Runtime selection (AQE) alone is not enough here: with the hint
+    # dropped, the sf0.1 final plan broadcasts the gram stream (ROADMAP
+    # item 4).
     from ..core.stats import measured_hint
 
-    dims, _ = measured_hint(top3.join(lm, "doc_id", "left"),
-                            assume_content_stable=X.NGRAM_LM_VERSION)
+    dims, _ = measured_hint(top3.join(lm, "doc_id", "left"))
     return out.join(dims, "doc_id")
 
 

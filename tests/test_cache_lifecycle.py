@@ -76,3 +76,17 @@ def test_scope_mark_release_is_nested(spark):
     assert outer_c.count() == 50
     C.release_all()
     assert not outer_p.storageLevel.useMemory
+
+
+def test_frame_cache_keeps_local_relations_unpersisted(spark):
+    """A driver-built LocalRelation's rows live in the plan: caching it
+    would only add a cache-build job, so FrameCache memoizes the frame
+    without persisting it."""
+    from barberini_analytics_spark.core.localrel import rows_df
+
+    fc = C.FrameCache(max_entries=2)
+    df = fc.get_or_build("m", lambda: rows_df(spark, [(1, 2.0)],
+                                              "k bigint, v double"))
+    assert not df.storageLevel.useMemory
+    assert fc.get_or_build("m", lambda: spark.range(1)) is df
+    fc.clear()

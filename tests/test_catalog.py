@@ -397,34 +397,6 @@ def test_default_catalog_is_built_and_swept_once_under_threads(
     assert len(sweeps) == 1 and sweeps[0] is got[0]
 
 
-def test_measured_hint_content_stable_assertion_is_versioned(spark,
-                                                             catalog):
-    """``assume_content_stable`` names the version of the code behind an
-    RDD-backed leaf: the same version hits the catalog, a bumped version
-    misses and re-measures, and a bare ``True`` is rejected."""
-    from barberini_analytics_spark.core.cache import release_scoped
-    from barberini_analytics_spark.core.stats import measured_hint
-
-    small = spark.range(100).selectExpr("id % 5 AS g") \
-        .localCheckpoint(eager=True)
-
-    def side():
-        return small.groupBy("g").count()
-
-    _, ev1 = measured_hint(side(), catalog=catalog,
-                           assume_content_stable="model-1")
-    _, ev2 = measured_hint(side(), catalog=catalog,
-                           assume_content_stable="model-1")
-    _, ev3 = measured_hint(side(), catalog=catalog,
-                           assume_content_stable="model-2")
-    assert ev1["source"] == "measured"
-    assert ev2["source"] == "catalog"
-    assert ev3["source"] == "measured"
-    with pytest.raises(TypeError, match="version string"):
-        measured_hint(side(), catalog=catalog, assume_content_stable=True)
-    release_scoped()
-
-
 def test_catalog_sweep_drops_deleted_tables_and_respects_cap(spark,
                                                              tmp_path):
     """Judge r12 item 7: entries whose input files vanished are garbage
@@ -519,3 +491,65 @@ def test_plan_fingerprint_stable_across_sessions(spark):
     line = [ln for ln in out.stdout.splitlines() if ln.startswith("FP=")]
     assert line, out.stderr[-2000:]
     assert line[0][3:] == plan_fingerprint(here)
+
+
+def test_plan_fingerprint_covers_local_relation_rows(spark):
+    """A LocalRelation prints as its column list only, so the rows are
+    digested into the key: different rows give different keys (also
+    where the bare row rendering of ``('a,b', 'c')`` and ``('a',
+    'b,c')`` is the same string), the same rows the same key."""
+    import numpy as np
+
+    from barberini_analytics_spark.core.catalog import (
+        fingerprint_is_content_stable, plan_fingerprint)
+    from barberini_analytics_spark.core.localrel import arrow_df, values_df
+
+    ddl = "p string, q string"
+    a = values_df(spark, [("a,b", "c")], ddl)
+    b = values_df(spark, [("a", "b,c")], ddl)
+    assert fingerprint_is_content_stable(a)
+    assert plan_fingerprint(a) != plan_fingerprint(b)
+    assert plan_fingerprint(a) == plan_fingerprint(
+        values_df(spark, [("a,b", "c")], ddl))
+
+    def model(codes):
+        return arrow_df(spark, [np.array(codes, dtype=np.int64)], "k bigint")
+
+    assert fingerprint_is_content_stable(model([1, 2]))
+    assert plan_fingerprint(model([1, 2])) != plan_fingerprint(model([1, 3]))
+    assert plan_fingerprint(model([1, 2])) == plan_fingerprint(model([1, 2]))
+    assert plan_fingerprint(model([])) != plan_fingerprint(model([1]))
+
+
+def test_local_relation_fingerprint_stable_across_sessions(spark):
+    """The row digest is a pure function of the rows: a fresh Spark
+    session computes the same keys for the same VALUES and Arrow
+    frames."""
+    import subprocess
+    import sys
+
+    from barberini_analytics_spark.core.catalog import plan_fingerprint
+    from barberini_analytics_spark.core.localrel import arrow_df, values_df
+
+    v = values_df(spark, [("a,b", 1.5), ("c", None)], "w string, x double")
+    m = arrow_df(spark, [[3, 1 << 40], [2.0, -0.5]], "k bigint, l double")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        f"import sys; sys.path.insert(0, {repo!r})\n"
+        "from barberini_analytics_spark.core.session import get_spark\n"
+        "from barberini_analytics_spark.core.catalog import plan_fingerprint\n"
+        "from barberini_analytics_spark.core.localrel import "
+        "arrow_df, values_df\n"
+        "spark = get_spark('fp-sub', 2)\n"
+        "spark.sparkContext.setLogLevel('ERROR')\n"
+        "v = values_df(spark, [('a,b', 1.5), ('c', None)], "
+        "'w string, x double')\n"
+        "m = arrow_df(spark, [[3, 1 << 40], [2.0, -0.5]], "
+        "'k bigint, l double')\n"
+        "print('FP=' + plan_fingerprint(v) + plan_fingerprint(m))\n"
+    )
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                         text=True, timeout=300)
+    line = [ln for ln in out.stdout.splitlines() if ln.startswith("FP=")]
+    assert line, out.stderr[-2000:]
+    assert line[0][3:] == plan_fingerprint(v) + plan_fingerprint(m)

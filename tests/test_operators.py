@@ -396,6 +396,34 @@ def test_ngram_lm_score_model_join_is_broadcast(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def test_ngram_lm_score_model_memo_skips_the_collect(spark, tmp_path):
+    """Over a file-backed input the folded model is memoized per input
+    version: re-constructing the scores runs no Spark job, and a
+    rewritten input misses the memo."""
+    from barberini_analytics_spark.core.cache import release_scoped
+    from barberini_analytics_spark.operators.text import ngram_lm_score
+
+    path = str(tmp_path / "docs.parquet")
+
+    def scores(texts):
+        spark.createDataFrame(list(enumerate(texts)),
+                              "doc_id long, text string") \
+            .write.mode("overwrite").parquet(path)
+        return {r.doc_id: r.lm_score for r in ngram_lm_score(
+            spark.read.parquet(path)).select("doc_id", "lm_score").collect()}
+
+    tracker = spark.sparkContext.statusTracker()
+    first = scores(["hello world", "hallo welt"])
+    docs = spark.read.parquet(path)
+    before = len(tracker.getJobIdsForGroup(None) or [])
+    again = ngram_lm_score(docs)
+    assert len(tracker.getJobIdsForGroup(None) or []) == before
+    assert {r.doc_id: r.lm_score for r in
+            again.select("doc_id", "lm_score").collect()} == first
+    assert scores(["hello world", "zzzzzzzz"]) != first
+    release_scoped()
+
+
 def test_ngram_lm_score_int64_codes_match_string_grain(spark):
     """The packed-int64 trigram codes (cp₀<<42 | cp₁<<21 | cp₂) must
     reproduce the string-grain model EXACTLY — multi-script text incl.

@@ -511,3 +511,34 @@ def test_span_hit_join_skew_ownership(spark):
     finally:
         _restore_confs(spark, prev)
         release_scoped()
+
+
+def test_ngram_lm_score_runs_no_python(spark):
+    """The trigram codes are JVM expressions and the model is an
+    Arrow-built LocalRelation: no Python evaluation node and no
+    RDD-backed leaf anywhere in the executed plan."""
+    from barberini_analytics_spark.core.io import load_table
+    from barberini_analytics_spark.operators.text import ngram_lm_score
+
+    out = ngram_lm_score(load_table(spark, SF_SMOKE, "documents"))
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    for node in ("MapInArrow", "ArrowEvalPython", "BatchEvalPython",
+                 "LogicalRDD", "ExistingRDD"):
+        assert node not in plan, node
+
+
+def test_document_token_ngrams_builds_on_the_dims(spark):
+    """The doc_id join of the gram stream with the tfidf+lm dims must
+    build on the dims (the right side) or shuffle both sides — never
+    broadcast the gram stream, which runtime join selection alone picks
+    once the measured hint is dropped."""
+    out = QUERIES["document_token_ngrams"](spark, SF_SMOKE)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Final Plan ==", 1)[1]
+    top = next(ln for ln in final.splitlines() if "Join" in ln)
+    assert "[doc_id#" in top and "Inner" in top, top
+    assert "BuildLeft" not in top, top

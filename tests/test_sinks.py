@@ -450,3 +450,61 @@ def test_apply_advice_left_join_preserves_semantics(spark):
                              set_partitions=False, broadcast_bytes=1)
     assert ev2["join"]["advice"] != "broadcast_right"
     assert rows(got2) == expect
+
+
+@pytest.mark.parametrize("partition_cols", [None, ["p"]])
+def test_read_spark_parquet_takes_the_footer_schema(spark, tbl,
+                                                    partition_cols):
+    """A table Spark wrote is read with the schema its writer stored in
+    the footer: the same schema inference gives, partition columns
+    included, and no ``parquet at`` schema-inference job."""
+    from barberini_analytics_spark.core.io import (read_spark_parquet,
+                                                   written_schema)
+
+    df = spark.createDataFrame(
+        [(1, "a", [0.5], "x"), (2, None, None, "y")],
+        "id bigint, name string, w array<double>, p string")
+    writer = df.write.mode("overwrite")
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.parquet(tbl)
+    assert written_schema(tbl) is not None
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def parquet_jobs(group, read):
+        sc.setJobGroup(group, group)
+        try:
+            out = read()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        stages = [s for j in tracker.getJobIdsForGroup(group)
+                  for s in tracker.getJobInfo(j).stageIds]
+        names = [tracker.getStageInfo(s).name for s in stages]
+        return out, [n for n in names if n.startswith("parquet at")]
+
+    tag = f"footer-schema-{bool(partition_cols)}"
+    inferred, inferred_jobs = parquet_jobs(
+        f"{tag}-inferred", lambda: spark.read.parquet(tbl))
+    assert inferred_jobs  # the detector sees the inference job
+    got, jobs = parquet_jobs(
+        f"{tag}-footer", lambda: read_spark_parquet(spark, tbl))
+    assert jobs == []
+    assert got.schema == inferred.schema
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, inferred.collect()))
+
+
+def test_read_spark_parquet_infers_without_the_footer_key(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from barberini_analytics_spark.core.io import (read_spark_parquet,
+                                                   written_schema)
+
+    path = str(tmp_path / "plain.parquet")
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int32())}), path)
+    assert written_schema(path) is None
+    assert read_spark_parquet(spark, path).schema == \
+        spark.read.parquet(path).schema
